@@ -19,16 +19,11 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from cyrela_etl_spark.operators.wallet import wallet_features
+from cyrela_etl_spark.operators.wallet import normalize_dates, wallet_features
 from cyrela_etl_spark.pipeline import Pipeline
 from cyrela_etl_spark.sources.csv import read_wallet_csv, write_csv
 from cyrela_etl_spark.sources.jdbc import write_jdbc
 from cyrela_etl_spark.sources.zones import ZoneStore
-
-try:  # wallet normalize_dates lives with the operator chain
-    from cyrela_etl_spark.operators.wallet import normalize_dates
-except ImportError:  # pragma: no cover
-    normalize_dates = None
 
 
 def wallet_flow(
@@ -59,7 +54,12 @@ def wallet_flow(
 
     @pipe.stage("promote_processing", retries=retries, retry_delay_s=retry_delay_s)
     def promote_processing(ctx: dict[str, Any]):
-        raw = read_wallet_csv(spark, store.path("landing", key))
+        # The reference's pandas header=1 quirk drops the raw file's first
+        # data row. Drop it here, while the input is still that one file:
+        # the processing write may split it into several part files.
+        raw = read_wallet_csv(
+            spark, store.path("landing", key), skip_first_data_row=skip_first_data_row
+        )
         return store.promote(raw, "processing", key, fmt="csv")
 
     @pipe.stage("delete_landing", retries=retries, retry_delay_s=retry_delay_s)
@@ -68,12 +68,11 @@ def wallet_flow(
 
     @pipe.stage("parse_curated", retries=retries, retry_delay_s=retry_delay_s)
     def parse_curated(ctx: dict[str, Any]):
-        # The reference's pandas leg: re-header (header=1 row drop) + date
-        # reformat dd/MM/yyyy → ISO, landing CSV → curated. Curated is
-        # parquet here (columnar zone interior; CSV only at lake edges).
-        raw = read_wallet_csv(
-            spark, store.path("processing", key), skip_first_data_row=skip_first_data_row
-        )
+        # The reference's pandas leg: date reformat dd/MM/yyyy → ISO,
+        # processing CSV → curated (the header=1 row drop already happened
+        # at promote_processing). Curated is parquet here (columnar zone
+        # interior; CSV only at lake edges).
+        raw = read_wallet_csv(spark, store.path("processing", key))
         curated = normalize_dates(raw)
         return store.promote(curated, "curated", "cyrela/wallet", fmt="parquet")
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from cyrela_etl_spark.functions.hashing import MERSENNE_PRIME, fast_hash60, hex_prefix_long
 from cyrela_etl_spark.operators.text import tokens
+from cyrela_etl_spark.session import scoped_conf
 
 
 def _base_hash(hash_fn: str):
@@ -507,7 +508,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 20,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Duplicate-cluster resolution: connected components over an
     undirected pair-edge relation → (id, component), component = min id in
@@ -527,46 +527,16 @@ def connected_components(
     large-star; min-propagation is the simple variant that suffices at
     dup-cluster diameters).
 
-    ``shuffle_partitions`` sizes the per-round exchanges to the LABEL
-    table's cardinality instead of the session default: an iterative loop
-    pays task-scheduling overhead per partition per round, so 32 near-
-    empty partitions × N rounds is mostly latency (measured 4.9 → 3.5 s
-    at sf0.1 with 8). Size to edges/labels, not the session's fact-table
-    width; None inherits.
-
-    CONCURRENCY CAVEAT: the knob is implemented by set-and-restore of the
-    session-global ``spark.sql.shuffle.partitions`` (every round is
-    eagerly materialized inside the loop, so the restore is reached
-    before this function returns). Any OTHER query planned on the same
-    SparkSession while the loop runs — a streaming micro-batch, another
-    driver thread — silently inherits the reduced count. Pass ``None``
-    (inherit) from multi-threaded drivers or sessions with active
-    streams; single-threaded batch drivers (this repo's harness, a
-    typical ETL job) are unaffected.
+    The loop runs under ``session.scoped_conf`` (see its concurrency
+    caveat): 8 shuffle partitions for the whole loop, sized to the label
+    table rather than the session's fact-table width — an iterative loop
+    pays task-scheduling overhead per partition per round (sf0.1: 4.9 s at
+    32 partitions, 3.5 s at 8) — and AQE off for the rounds only. Every
+    round is materialized inside the loop, so the caller's conf is back
+    before this function returns.
     """
-    spark = pairs.sparkSession
-    _conf_key = "spark.sql.shuffle.partitions"
-    _old_parts = spark.conf.get(_conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(_conf_key, str(shuffle_partitions))
-    try:
+    with scoped_conf(pairs.sparkSession, {"spark.sql.shuffle.partitions": "8"}):
         return _connected_components_loop(pairs, id_a, id_b, max_iters)
-    finally:
-        spark.conf.set(_conf_key, _old_parts)
-
-
-# r18 loop-round AQE switch: every CC round materializes 3 small joins +
-# an agg over the persisted edge table on explicitly-sized (8-partition)
-# exchanges — there is nothing for AQE to re-plan, but its per-stage
-# re-optimization turns each round's one action into ~6 stage-
-# materialization jobs, and the loop's cost at test SF is driver latency
-# (profiled: 32 jobs, 1.5 s of inter-job gaps on a 3 s wall). Interleaved
-# A/B at sf0.1 (tools/ab_conf.py, identical checksums): AQE off won all 5
-# paired reps on dedup_components, medians 2.525 vs 2.704 s. The EDGE
-# BUILD (self-joins over the corpus) stays under the caller's AQE — only
-# the rounds over the already-persisted edges run static. Flag, not
-# hardcode, so the A/B stays re-runnable.
-_LOOP_ROUNDS_DISABLE_AQE = True
 
 
 def _connected_components_loop(
@@ -590,15 +560,16 @@ def _connected_components_loop(
     labels = (
         edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
     ).localCheckpoint(eager=True)
-    spark = pairs.sparkSession
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _aqe_old = spark.conf.get(_aqe_key)
-    if _LOOP_ROUNDS_DISABLE_AQE:
-        spark.conf.set(_aqe_key, "false")
-    try:
+    # AQE off for the rounds (r18): each round materializes 3 small joins
+    # + an agg over the checkpointed edges on explicitly-sized exchanges —
+    # nothing for AQE to re-plan, but its per-stage re-optimization turns
+    # each round's one action into ~6 stage-materialization jobs, and the
+    # loop's cost at test SF is driver latency (profiled: 32 jobs, 1.5 s
+    # of inter-job gaps on a 3 s wall). Interleaved A/B at sf0.1
+    # (identical checksums): AQE off won all 5 paired reps on
+    # dedup_components, medians 2.525 vs 2.704 s.
+    with scoped_conf(pairs.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         return _cc_rounds(edges, labels, max_iters)
-    finally:
-        spark.conf.set(_aqe_key, _aqe_old)
 
 
 def _cc_rounds(edges: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:

@@ -1969,7 +1969,7 @@ def graph_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators import dedup as D
 
     edges = _dup_edges(spark, sf_dir)
-    comp = D.connected_components(edges, shuffle_partitions=8)
+    comp = D.connected_components(edges)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
     return (
         sizes.groupBy("sz")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
+from cyrela_etl_spark.session import scoped_conf
 from cyrela_etl_spark.streaming import (
     dedup_within_watermark,
     read_file_stream,
@@ -38,40 +39,23 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drain(spark: SparkSession, mk, *args, **kwargs) -> DataFrame:
-    """Run a stream-drain helper under a bounded shuffle-partition count.
+    """Run a stream-drain helper at 4 shuffle partitions.
 
     Stateful streaming stages inherit ``spark.sql.shuffle.partitions`` with
-    no AQE coalescing (AQE is disabled for stateful workloads), so a
-    default-conf session pays one state store + task per partition — 200
-    near-empty state partitions turn a 1 s drain into ~10 s at test SF.
-    The drain is eager (AvailableNow inside), so set-and-restore is safe:
-    batch queries planned after this function keep the caller's conf. On a
-    real cluster the equivalent knob is sizing shuffle partitions to the
-    stream's key cardinality, not the session default.
-    """
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    # Width default 4 (r17 optimization round): every state store is
-    # per-partition overhead (provider init, maintenance, commit files)
-    # and the drained state at test SF is a few MB — paired A/B at sf0.1,
-    # identical result checksums: interval join 6.1 s @16 → 5.2 @8 →
-    # 3.6 @4; tumbling 2.0 → 1.6 → 1.2. Parameterised, not tuned-to-
-    # local: production sizes this to state volume (~64-128 MB per state
-    # partition) via SPARK_GRAFT_STREAM_DRAIN_PARTITIONS — the knob the
-    # docstring's "size to the stream's key cardinality" rule lands on.
-    # r18: stream_dedup_expiry — the one r17 inheritor shipped without
-    # its own A/B (VERDICT r17 item 3) — measured at widths 4/8/16/32
-    # (tools/ab_drain_width.py, interleaved, identical checksums):
-    # 2.41 / 2.65 / 3.69 / 4.48 s medians. Width 4 wins for it too; the
-    # driver's 6.04 s r17 row was host weather (same HEAD re-read 1.97 s
-    # in a stable-probe run). No per-query override needed.
-    import os as _os
+    no AQE coalescing (AQE is disabled for stateful workloads), and every
+    state partition is a state store plus a task per micro-batch (provider
+    init, maintenance, commit files) — 200 near-empty state partitions
+    turn a 1 s drain into ~10 s at test SF. The drain is eager
+    (AvailableNow inside), so the override ends before this returns
+    (``session.scoped_conf``). On a real cluster the width is sized to
+    state volume (~64-128 MB per state partition).
 
-    spark.conf.set(key, _os.environ.get("SPARK_GRAFT_STREAM_DRAIN_PARTITIONS", "4"))
-    try:
+    Width 4 by paired A/B at sf0.1, identical result checksums: interval
+    join 6.1 s @16 → 5.2 @8 → 3.6 @4; tumbling 2.0 → 1.6 → 1.2;
+    stream_dedup_expiry 2.41 / 2.65 / 3.69 / 4.48 s medians @4/8/16/32.
+    """
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         return mk(*args, **kwargs)
-    finally:
-        spark.conf.set(key, old)
 
 
 # ---------------------------------------------------------------------------
@@ -752,7 +736,6 @@ def stream_bus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.sources.parquet import normalize_event_ts
     from cyrela_etl_spark.streaming import replay_bus_stream, write_bus_envelopes
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     events = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
         "event_id", "user_id", "event_type", "ts", "value"
     )

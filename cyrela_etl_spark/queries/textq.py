@@ -500,9 +500,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     edges = _pairs("k_exact").unionByName(_pairs("k_prefix"))
-    # label table is tiny at any SF (only vertices that appear in an edge)
-    # — size the iterative loop's exchanges to it, not the session default
-    return D.connected_components(edges, shuffle_partitions=8)
+    return D.connected_components(edges)
 
 
 _COMPONENTS_EDGES_SQL = f"""
@@ -1766,7 +1764,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
 
     edges = _pairs("k_exact").unionByName(_pairs("k_prefix"))
-    comp = D.connected_components(edges, shuffle_partitions=8)
+    comp = D.connected_components(edges)
     labeled = (
         c.select(F.col("doc_id").alias("id"), F.length("text").cast("long").alias("len"))
         .join(comp, "id", "left")

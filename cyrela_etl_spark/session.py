@@ -5,11 +5,17 @@ optimizer tuning (reference spark/jobs/pr-wallet-data-tf.py:7-29, 1 core /
 1 GiB). Here the session is built once with AQE, broadcast-join thresholds
 and Arrow enabled — the settings that matter both on ``local[*]`` test runs
 and on a large cluster.
+
+This module is the only engine code that sets SQL conf: a setting is
+either a session default below or a span-bounded override through
+``scoped_conf``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -36,6 +42,10 @@ _DEFAULT_CONF: dict[str, str] = {
     # Parquet vectorized reader + pushdown are on by default; pinned here
     # as an explicit contract the tests assert on.
     "spark.sql.parquet.filterPushdown": "true",
+    # Legacy INT64 TIMESTAMP(NANOS) parquet loads as a raw long instead of
+    # failing the read; sources/parquet.normalize_event_ts converts it.
+    # Only NANOS-encoded fields are affected, so other files read as before.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Keep shuffle sizes sane in local mode; AQE coalesces below this.
     "spark.sql.shuffle.partitions": "32",
     # Quieter local runs.
@@ -74,3 +84,33 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set SQL conf for the span of a ``with`` block, then restore it.
+
+    On exit (normal or exception) every key gets its previous value back;
+    a key that was unset before is unset again, so the session's
+    ``conf.getAll`` is exactly what it was. Callers must materialize the
+    work that needs the override inside the block — a DataFrame returned
+    lazily is planned later under the restored conf.
+
+    CONCURRENCY CAVEAT: SQL conf is session-global. Any other query planned
+    on the same SparkSession while the block runs — a streaming
+    micro-batch, another driver thread — sees the override. Single-
+    threaded batch drivers (a typical ETL job, this repo's harnesses) are
+    unaffected; a multi-threaded driver should give each thread its own
+    ``spark.newSession()``.
+    """
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -146,21 +146,22 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     adapts to the physical encoding of ``ts`` instead of assuming one:
 
     - INT64 TIMESTAMP(NANOS): Spark's reader rejects this outright unless
-      ``spark.sql.legacy.parquet.nanosAsLong`` is set, which surfaces raw
-      nanos as a long; ``ts div 1000`` (integer division — a double division
-      would lose precision above 2^53 ns) truncates to whole microseconds,
-      exactly how DuckDB's TIMESTAMP reads the same file.
+      ``spark.sql.legacy.parquet.nanosAsLong`` is set — a session default
+      (session.py) — which surfaces raw nanos as a long; ``ts div 1000``
+      (integer division — a double division would lose precision above
+      2^53 ns) truncates to whole microseconds, exactly how DuckDB's
+      TIMESTAMP reads the same file.
     - TIMESTAMP(MICROS) without tz (Spark: TIMESTAMP_NTZ): cast to the
       session timestamp type. The session tz is pinned to UTC
       (session.py), so the cast is wall-clock identity and matches how
       DuckDB reads the same file as naive TIMESTAMP.
     - TIMESTAMP(MICROS/MILLIS) with tz (Spark: TIMESTAMP): pass through.
 
-    Setting nanosAsLong is harmless for non-nanos files (it only affects
-    NANOS-encoded fields), so it stays on for the read and the branch is
-    decided by the dtype Spark actually loaded.
+    nanosAsLong is harmless for non-nanos files (it only affects
+    NANOS-encoded fields), so the branch is decided by the dtype Spark
+    actually loaded. A session not built by ``get_spark`` must set it
+    itself to read nanos-encoded files.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     return normalize_event_ts(df)
 
@@ -168,10 +169,10 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_long_ts_schema(spark: SparkSession, sf_dir: str):
     """The as-loaded schema of the events parquet — what a streaming file
     source over the events zone must declare. ``ts`` arrives as long for
-    legacy INT64-nanos files (read under nanosAsLong) and as a timestamp
-    type for TIMESTAMP(MICROS) files; ``normalize_event_ts`` handles both.
+    legacy INT64-nanos files (read under nanosAsLong, a session default in
+    session.py) and as a timestamp type for TIMESTAMP(MICROS) files;
+    ``normalize_event_ts`` handles both.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 

@@ -22,9 +22,27 @@ where an engineer will look for it:
 """
 
 from __future__ import annotations
-import pytest
 
+import pytest
 from pyspark.sql import functions as F
+
+from cyrela_etl_spark.session import scoped_conf
+
+
+def test_scoped_conf_restores_on_exception_and_unsets_new_keys(spark):
+    """The one engine conf-override mechanism: a set key gets its old
+    value back and a key unset before is unset again — also when the
+    block raises."""
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes"
+    assert spark.conf.get(unset_key, None) is None
+    before = dict(spark.conf.getAll)
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_conf(spark, {set_key: "3", unset_key: "1024"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "1024"
+            raise RuntimeError("boom")
+    assert spark.conf.get(unset_key, None) is None
+    assert dict(spark.conf.getAll) == before
 
 
 @pytest.mark.slow  # r18 slow tier: heavy model-check/e2e; default run skips (driver verify budget), full suite = -m ""
@@ -41,10 +59,7 @@ def test_aqe_splits_planted_skew_join(spark):
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16KB",
         "spark.sql.shuffle.partitions": "8",
     }
-    old = {k: spark.conf.get(k, None) for k in conf_keys}
-    for k, v in conf_keys.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, conf_keys):
         # fact: 400k rows, ~95% on key 0, padding to give the hot
         # partition real bytes; dim: 64 keys, non-broadcastable by conf
         fact = (
@@ -84,9 +99,3 @@ def test_aqe_splits_planted_skew_join(spark):
         assert "skew=true" in final_plan, (
             "AQE did not mark the planted hot-key join as skewed:\n" + final_plan
         )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -78,10 +78,7 @@ def test_connected_components_matches_union_find(spark, edges):
     from cyrela_etl_spark.operators.dedup import connected_components
 
     df = spark.createDataFrame(list(edges), "id_a long, id_b long")
-    got = {
-        (r["id"], r["component"])
-        for r in connected_components(df, shuffle_partitions=4).collect()
-    }
+    got = {(r["id"], r["component"]) for r in connected_components(df).collect()}
     parent: dict[int, int] = {}
 
     def find(x):

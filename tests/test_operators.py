@@ -20,6 +20,7 @@ from cyrela_etl_spark.operators.similarity import (
     rhp_lsh_topk,
 )
 from cyrela_etl_spark.operators.temporal import asof_join
+from cyrela_etl_spark.session import scoped_conf
 
 
 # -- safety guards ----------------------------------------------------------
@@ -104,10 +105,8 @@ def test_empty_and_whitespace_docs_excluded_from_pairing(spark):
         (4, "   \t\n  "),
         (5, "solitary"),
     ]
-    old = spark.conf.get("spark.sql.ansi.enabled")
-    try:
-        for ansi in ("true", "false"):
-            spark.conf.set("spark.sql.ansi.enabled", ansi)
+    for ansi in ("true", "false"):
+        with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
             df = spark.createDataFrame(rows, ["doc_id", "text"])
             lsh = D.minhash_lsh_pairs(df, num_hashes=16, bands=4, threshold=0.5).collect()
             assert [(p["id_a"], p["id_b"]) for p in lsh] == [(1, 2)], f"ansi={ansi}"
@@ -119,8 +118,6 @@ def test_empty_and_whitespace_docs_excluded_from_pairing(spark):
             from cyrela_etl_spark.functions.hashing import MERSENNE_PRIME
 
             assert sigs[3] == [MERSENNE_PRIME] * 16
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_repetition_features_gopher_signals(spark):

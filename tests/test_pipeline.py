@@ -112,6 +112,31 @@ def test_wallet_flow_end_to_end(spark, store, tmp_path):
     assert [int(by_emp[e]["p_dias_atraso_category"]) for e in (20, 30, 40)] == [1, 2, 0]
 
 
+def test_wallet_flow_default_with_multi_file_processing_zone(spark, store, tmp_path):
+    """The header=1 drop (default skip_first_data_row=True) must survive a
+    processing zone written as several part files: tiny read splits make
+    promote_processing write one part file per split."""
+    from cyrela_etl_spark.session import scoped_conf
+
+    processing_files: list[str] = []
+    delete = store.delete
+
+    def spy_delete(zone, key):
+        if zone == "processing":
+            processing_files.extend(
+                k for k in store.list_keys("processing", "cyrela/") if k.endswith(".csv")
+            )
+        return delete(zone, key)
+
+    store.delete = spy_delete
+    with scoped_conf(spark, {"spark.sql.files.maxPartitionBytes": "256"}):
+        wallet_flow(spark, store).run()
+
+    assert len(processing_files) > 1
+    curated = spark.read.parquet(str(tmp_path / "curated" / "cyrela" / "wallet")).toPandas()
+    assert sorted(curated["cliente"]) == ["CLIENTE X2", "CLIENTE X3", "CLIENTE X4"]
+
+
 def test_zone_table_overwrite_append_lifecycle(spark, sf_dir, tmp_path):
     """Catalog-table layer: overwrite rebinds (even across a NEW root),
     append extends and is visible without re-registration."""

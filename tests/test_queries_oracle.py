@@ -31,7 +31,10 @@ def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     from verify_local import compare
 
     fn, oracle = REGISTRY[name]
+    conf_before = dict(spark.conf.getAll)
     spark_pdf = fn(spark, sf_dir).toPandas()
+    # an engine call leaves the session conf as it found it
+    assert dict(spark.conf.getAll) == conf_before, f"{name} changed the session conf"
     if oracle is None:
         assert len(spark_pdf) >= 0  # rows-only check (no oracle declared)
         return

@@ -11,6 +11,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from cyrela_etl_spark.session import scoped_conf
+
 
 # -- TPC-H pseudo-partsupp ---------------------------------------------------
 def test_pseudo_partsupp_cost_and_availqty(spark, sf_dir):
@@ -356,13 +358,12 @@ def test_shuffle_width_invariance_representatives(spark, sf_dir):
     names = ["vector_ivf_pq_topk", "events_power_pareto", "text_zipf_fit"]
     results = {}
     for parts in ("5", "17"):
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
         try:
-            for n in names:
-                rows = sorted(map(str, reg[n][0](spark, sf_dir).collect()))
-                results.setdefault(n, []).append(rows)
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+                for n in names:
+                    rows = sorted(map(str, reg[n][0](spark, sf_dir).collect()))
+                    results.setdefault(n, []).append(rows)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             spark.catalog.clearCache()
     for n, (a, b) in results.items():
         assert a == b, f"{n} changed results under a different shuffle width"

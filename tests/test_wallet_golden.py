@@ -12,6 +12,7 @@ These reference files are read-only fixtures; no reference code is used.
 from __future__ import annotations
 
 import math
+import os
 
 import pandas as pd
 import pytest
@@ -22,6 +23,11 @@ from cyrela_etl_spark.sources import read_wallet_csv
 
 RAW = "/root/reference/data/wallet-data.csv"
 GOLDEN = "/root/reference/data/parsed-data.csv"
+
+pytestmark = pytest.mark.skipif(
+    not (os.path.exists(RAW) and os.path.exists(GOLDEN)),
+    reason="reference golden pair (wallet-data.csv / parsed-data.csv) not present on this host",
+)
 
 
 @pytest.fixture(scope="module")
