@@ -119,6 +119,26 @@ HEADLINE = [
 ]
 
 
+def fingerprint(df) -> tuple[int, int | None]:
+    """The timed action: ``(rows, checksum)`` of ``df`` in one job.
+
+    Full materialization of every output column: a bare count() lets
+    Catalyst prune ALL projected columns (the scan+filter would be timed,
+    the projections wouldn't), so a per-row xxhash64 over every column is
+    summed alongside the row count — every column is computed and folded,
+    one row on the driver. The sum is order-insensitive, so equal
+    fingerprints mean the same relation whatever the partitioning; it is
+    None for an empty result. The sum of 64-bit hashes overflows under
+    ANSI mode, so run it on the engine session (ANSI off)."""
+    from pyspark.sql import functions as F
+
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("checksum"),
+    ).collect()[0]
+    return row["n"], row["checksum"]
+
+
 # --- Host-calibration probe (VERDICT r11 item 1) ---------------------------
 # Two fixed CPU-bound reference kernels, sampled at checkpoints
 # INTERLEAVED through the query sweep (see PROBE_EVERY below). Their wall
@@ -150,8 +170,8 @@ HEADLINE = [
 # the values here in the same commit as the kernel change, and start a
 # fresh BENCH baseline — never splice normalized totals across a re-pin.
 # Claims finer than the ~10% normalized residual need the same-session
-# interleaved A/B protocol instead (tools/ab_txn_schema_check.py is the
-# template; see README "The ±10% rule").
+# interleaved A/B protocol instead (tools/ab.py; see README "The ±10%
+# rule").
 #
 # Third kernel (round 16, VERDICT r15 item 2): "bw" — a single-thread
 # streaming sweep over a 1 GB working set (two 512 MB float64 buffers,
@@ -465,6 +485,9 @@ def main() -> None:
     # preserved in BENCH_DIAG under "superseded_attempts".
     max_attempts = 1 + max(0, int(os.environ.get("SPARK_GRAFT_BENCH_RETRY_UNSTABLE", "1")))
     superseded_attempts: list[dict] = []
+    # uptime is measured from the first attempt, so a retried sweep's
+    # session_uptime_at_query_start_sec includes the superseded sweep
+    bench_t0 = time.perf_counter()
     for attempt in range(1, max_attempts + 1):
         probe_once(spark)
         probe_samples: list[tuple[float, float]] = [probe_once(spark)]
@@ -478,7 +501,6 @@ def main() -> None:
         # BENCH_r{N}.json alone.
         samples_by_query: dict[str, list[float]] = {}
         uptime_at_start: dict[str, float] = {}
-        bench_t0 = time.perf_counter()
         load_start = os.getloadavg()
         for name in headline:
             fn, _oracle = registry[name]
@@ -486,17 +508,7 @@ def main() -> None:
             samples: list[float] = []
             for r in range(runs):
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                # Full materialization of every output column: a bare count()
-                # lets Catalyst prune ALL projected columns (the scan+filter
-                # would be timed, the projections wouldn't), so aggregate a
-                # per-column xxhash64 checksum alongside the row count — every
-                # column is computed and folded, one row on the driver.
-                row = df.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("checksum"),
-                ).collect()[0]
-                n = row["n"]
+                n, _checksum = fingerprint(fn(spark, sf_dir))
                 samples.append(time.perf_counter() - t0)
                 print(f"# {name} run {r + 1}/{runs}: {n} rows in {samples[-1]:.2f}s", file=sys.stderr)
                 # Queries that persist() internally (the LSH family) would

@@ -950,7 +950,7 @@ def collapse_exact_embeddings(
     source: each hub enters clustering as one representative whose
     ``group_size`` carries the duplication mass, and SemDeDup's
     Σ|cluster|² stays governed by n_clusters alone. Scale protocol +
-    measured 1x/10x/100x curve: tools/scale_curve_semdedup.py, README.
+    measured 1x/10x/100x curve: `tools/scale_curve.py semdedup`, README.
 
     Returns ``(representatives, membership)``: representatives are
     (vec_id, v, group_size) rows ready to feed ``semdedup_pairs(...,

@@ -54,7 +54,7 @@ _ZIPF_TOP = 30
 
 
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan=False: r18 interleaved A/B (5 reps, tools/ab_fan.py) — fanned
+    # fan=False: r18 interleaved A/B (5 reps, tools/ab.py protocol) — fanned
     # 0.769 s vs raw 0.634 s median; the explode feeds one hash agg whose
     # exchange dominates, so pre-exchange parallelism only adds a shuffle.
     toks = _docs(spark, sf_dir, fan=False).select(F.explode(X.tokens(F.col("text"))).alias("term"))

@@ -822,7 +822,7 @@ _BUDGET, _N_SHARDS = 2048, 8
 def corpus_token_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.corpus import pack_token_budget
 
-    # fan=False: r18 interleaved A/B (5 reps, tools/ab_fan.py) — fanned
+    # fan=False: r18 interleaved A/B (5 reps, tools/ab.py protocol) — fanned
     # 0.504 s vs raw 0.485 s median; the shard window's exchange is the
     # first operation, so the pre-exchange fan only adds a shuffle.
     docs = _docs(spark, sf_dir, fan=False)
@@ -874,7 +874,7 @@ _TOP_TERMS = 5
 def text_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    # fan=False: r18 interleaved A/B (5 reps, tools/ab_fan.py) — fanned
+    # fan=False: r18 interleaved A/B (5 reps, tools/ab.py protocol) — fanned
     # 1.600 s vs raw 1.497 s median; the (doc, term) hash agg shuffles
     # immediately above the explode, so the fan's exchange is pure cost.
     docs = _docs(spark, sf_dir, fan=False)

@@ -49,7 +49,9 @@ def _emb(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
     # query-side subtree shares the identical scan+exchange, so the added
     # shuffle is planned once and reused. ``fan=False``: consumers whose
     # per-row map work is too light to amortize the exchange measurably
-    # lose — each opt-out cites its interleaved A/B (tools/ab_fan.py).
+    # lose — each opt-out cites its r18 interleaved A/B. `tools/ab.py
+    # <query> --patch cyrela_etl_spark.sources.parquet.fan_out` re-checks
+    # a consumer that still fans (an opt-out never calls fan_out).
     raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return fan_out(raw) if fan else raw
 
@@ -95,7 +97,7 @@ register("vector_cosine_topk", vector_cosine_topk, ORACLE_TOPK)
 # both engines bucket identically.
 # ---------------------------------------------------------------------------
 def vector_rhp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan=False: r18 interleaved A/B (5 reps, tools/ab_fan.py) — fanned
+    # fan=False: r18 interleaved A/B (5 reps, tools/ab.py protocol) — fanned
     # 2.241 s vs raw 2.009 s median; the bucket self-join's exchange
     # dominates and the per-row plane dot products are too light to
     # amortize the extra shuffle.
@@ -147,7 +149,7 @@ _N_CENT, _NPROBE = 16, 2
 
 
 def vector_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan=False: r18 interleaved A/B (5 reps, tools/ab_fan.py) — fanned
+    # fan=False: r18 interleaved A/B (5 reps, tools/ab.py protocol) — fanned
     # 1.782 s vs raw 1.200 s median, the biggest fan loser measured: the
     # centroid TakeOrdered + assignment passes each pay the exchange
     # again (the fanned subtree is referenced more than once but the

@@ -31,8 +31,10 @@ def synth_wallet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serializes the whole 0-shuffle chain — BOTH passes (the 10-maxima
     # agg and the 34-column projection) ran as one task each, which is
     # why the flagship had the worst 8-vs-32-core scaling ratio (0.30).
-    # Interleaved A/B (6 reps, tools/ab_wallet_fan.py, identical
-    # checksums): raw 1.793 s vs fanned 1.221 s median at sf0.1. On real
+    # Interleaved A/B (6 reps, identical checksums): raw 1.793 s vs
+    # fanned 1.221 s median at sf0.1; re-run with `tools/ab.py
+    # wallet_features --patch cyrela_etl_spark.sources.parquet.fan_out`
+    # (leg B = fan_out as identity). On real
     # multi-row-group inputs fan_out is a no-op and the chain stays
     # shuffle-free (the sf0.001 plan-budget pin of ZERO still measures
     # that cold shape); on pathological single-row-group files the one

@@ -267,7 +267,7 @@ def _fresh_view_check(store: ZoneStore, zone: str, key: str, read_version: int) 
     round 12 — that listing iterates every manifest entry through the
     py4j bridge, so an N-commit chain paid O(N) driver roundtrips PER
     APPEND and the build of an N-chain paid O(N^2) total (measured by
-    tools/scale_curve_txn_vacuum.py: mean append 212 ms at N=100 vs
+    `tools/scale_curve.py txn_vacuum`: mean append 212 ms at N=100 vs
     379 ms at N=1000; on an object store this is a LIST per commit vs
     two HEADs). Correctness: manifests are contiguous from the vacuum
     floor to latest (vacuum removes a version prefix, and the publisher's
@@ -390,7 +390,7 @@ def txn_append(
     off), a winning append whose chain now exceeds K directories is
     followed immediately by ``txn_compact``, so every manifest stays
     O(K) paths and an N-append run writes O(N·K) cumulative manifest
-    bytes (measured: tools/scale_curve_txn_vacuum.py's build_auto leg).
+    bytes (measured: `tools/scale_curve.py txn_vacuum`, build_auto leg).
     The return value is then the COMPACT's version — callers must (and
     already can) treat the return as their new read version. The compact
     is best-effort maintenance: if concurrent writers win every retry,
@@ -663,7 +663,7 @@ def vacuum(
     through-r13 loop read every vacuumable manifest's JSON, and chain
     manifest v is O(v) bytes, so an N-append chain shipped O(N^2)
     manifest bytes over py4j (~35 MB at N=1000; measured by
-    tools/scale_curve_txn_vacuum.py). Now the bytes read are the retained
+    `tools/scale_curve.py txn_vacuum`). Now the bytes read are the retained
     manifests only — O(keep_last · chain) — and the filesystem calls are
     two listings plus one delete per removed object. Matching Delta's
     vacuum, this is list-then-delete:

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 ZONE_ORDER = ["landing", "processing", "curated", "serving"]
 
@@ -272,20 +272,9 @@ def upsert_table(
     snapshot concurrently).
     """
     current = store.spark.table(table)
-    old_path = store._table_location(table)
     keep = current.join(updates.select(merge_key), merge_key, "left_anti")
     merged = updates.select(*current.columns).unionByName(keep)
-    # new snapshot path per version: plain parquet can't overwrite in
-    # place while reading itself
-    import uuid
-
-    new_key = f"{key}__v{uuid.uuid4().hex[:8]}"
-    store.promote_table(merged, zone, new_key, table, mode="overwrite")
-    if not keep_old_snapshot and old_path is not None:
-        fs, jvm = store._fs()
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old_path), True)
-        return None
-    return old_path
+    return _rebind_snapshot(store, zone, key, table, merged, keep_old_snapshot)
 
 
 def delete_rows(
@@ -310,13 +299,29 @@ def delete_rows(
     a COMPLETE forget — a retained old snapshot still contains the
     forgotten rows; ``keep_old_snapshot=False`` does so immediately).
     """
+    current = store.spark.table(table)
+    kept = current.join(forget_keys.select(merge_key).distinct(), merge_key, "left_anti")
+    return _rebind_snapshot(store, zone, key, table, kept, keep_old_snapshot)
+
+
+def _rebind_snapshot(
+    store: ZoneStore,
+    zone: str,
+    key: str,
+    table: str,
+    df: DataFrame,
+    keep_old_snapshot: bool,
+) -> str | None:
+    """Write ``df`` as a new snapshot of ``table`` and rebind the catalog
+    to it; return the superseded snapshot path, or delete it and return
+    None when ``keep_old_snapshot`` is False. Each version gets its own
+    path because plain parquet cannot overwrite in place while reading
+    itself."""
     import uuid
 
-    current = store.spark.table(table)
     old_path = store._table_location(table)
-    kept = current.join(forget_keys.select(merge_key).distinct(), merge_key, "left_anti")
     new_key = f"{key}__v{uuid.uuid4().hex[:8]}"
-    store.promote_table(kept, zone, new_key, table, mode="overwrite")
+    store.promote_table(df, zone, new_key, table, mode="overwrite")
     if not keep_old_snapshot and old_path is not None:
         fs, jvm = store._fs()
         fs.delete(jvm.org.apache.hadoop.fs.Path(old_path), True)

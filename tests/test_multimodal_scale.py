@@ -1,5 +1,5 @@
 """Scale-behavior pins for the multimodal/Arrow family (VERDICT r14
-item 5) — the pytest twins of tools/scale_curve_multimodal.py:
+item 5) — the pytest twins of `tools/scale_curve.py multimodal`:
 
 1. metadata-only queries over a binary-asset table never deserialize
    payloads (the README claim), witnessed two ways: the executed

@@ -323,3 +323,24 @@ def test_delete_rows_drop_old_snapshot(spark, sf_dir, tmp_path):
     assert not os.path.exists(loc_before.replace("file:", ""))  # complete forget
     assert spark.table("t_forget_nation2").count() == nation.count() - 1
     spark.sql("DROP TABLE IF EXISTS t_forget_nation2")
+
+
+def test_upsert_table_drop_old_snapshot(spark, sf_dir, tmp_path):
+    import os
+
+    from cyrela_etl_spark.sources.zones import ZoneStore, upsert_table
+
+    store = ZoneStore(spark, str(tmp_path))
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
+    store.promote_table(nation, "curated", "nat", "t_upsert_nation2")
+    loc_before = store._table_location("t_upsert_nation2")
+    updates = spark.createDataFrame([(3, "RENAMED_3")], "n_nationkey long, n_name string")
+    out = upsert_table(
+        store, "curated", "nat", "t_upsert_nation2", updates,
+        merge_key="n_nationkey", keep_old_snapshot=False,
+    )
+    assert out is None
+    assert not os.path.exists(loc_before.replace("file:", ""))  # old snapshot gone
+    got = {r["n_nationkey"]: r["n_name"] for r in spark.table("t_upsert_nation2").collect()}
+    assert got[3] == "RENAMED_3" and len(got) == nation.count()
+    spark.sql("DROP TABLE IF EXISTS t_upsert_nation2")

@@ -3,7 +3,7 @@ mass-duplicated embedding drives within-cluster pair enumeration
 quadratic — C(|group|,2) pairs are genuinely emitted — and the
 exact-collapse pre-pass removes the quadratic term at its source while
 preserving the duplication information in group sizes. The 1x/10x/100x
-wall curve lives in tools/scale_curve_semdedup.py + README."""
+wall curve lives in `tools/scale_curve.py semdedup` + README."""
 
 from __future__ import annotations
 

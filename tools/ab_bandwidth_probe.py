@@ -11,7 +11,7 @@ not span: the L1-resident md5 kernel cannot see it at all, and the
 creates that shape DELIBERATELY — N burner processes each streaming
 np.copyto over a 1 GB working set (~4x the 260 MB L3) — and interleaves
 burned and idle legs in ONE process (the same-session A/B protocol of
-tools/ab_txn_schema_check.py), measuring per leg:
+tools/ab.py), measuring per leg:
 
   - a mini-sweep: scan/shuffle-heavy headline queries at the given SF
     (the bandwidth-sensitive shape the real bench is made of);
@@ -37,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import probe_once  # noqa: E402
+from bench import fingerprint, probe_once  # noqa: E402
 
 # scan/shuffle/agg-heavy subset — the bandwidth-sensitive shape; no
 # streaming rows (fixture prep would dominate) and no persist-heavy rows
@@ -87,11 +87,7 @@ def main() -> None:
         t0 = time.perf_counter()
         for name in SWEEP:
             fn, _ = registry[name]
-            df = fn(spark, sf_dir)
-            df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("c"),
-            ).collect()
+            fingerprint(fn(spark, sf_dir))
             spark.catalog.clearCache()
         return time.perf_counter() - t0
 

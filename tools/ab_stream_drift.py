@@ -16,7 +16,7 @@ Protocol (one session, interleaved so slow host drift cancels):
     tumbling  stream_tumbling          (1-batch drain; minimal state)
     sij       stream_interval_join     (1-batch drain; join state both sides)
     sde       stream_dedup_expiry      (3-batch drain + its own input prep)
-  each timed exactly like bench.py (count + per-column xxhash64 fold,
+  each timed exactly like bench.py (bench.fingerprint,
   clearCache after), plus per rep:
     cpu probe  bench.probe_once vs the pinned PROBE_REF      (CPU weather)
     io  probe  N x {write 64 KiB, fsync, rename, unlink} in the same
@@ -118,11 +118,7 @@ def main() -> None:
     def timed_run(name: str) -> float:
         fn, _ = registry[name]
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("checksum"),
-        ).collect()
+        bench.fingerprint(fn(spark, sf_dir))
         dt = time.perf_counter() - t0
         spark.catalog.clearCache()
         return dt

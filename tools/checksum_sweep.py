@@ -1,8 +1,9 @@
 """Order-insensitive result fingerprints for every registry query at a
-given SF: rows + sum(xxhash64(all columns)) — the same action bench.py
-times. Used by the optimization rounds to prove a restructured query
-still computes the identical relation at BENCH scale (the oracle gate
-covers sf0.01/sf0.001; this covers the sf the driver actually times).
+given SF: ``bench.fingerprint`` — rows + sum(xxhash64(all columns)), the
+same action bench.py times. Used by the optimization rounds to prove a
+restructured query still computes the identical relation at BENCH scale
+(the oracle gate covers sf0.01/sf0.001; this covers the sf the driver
+actually times).
 
 Usage:
     python tools/checksum_sweep.py out.json [names...]
@@ -25,8 +26,7 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import functions as F
-
+    from bench import fingerprint
     from cyrela_etl_spark.queries import load_all
     from cyrela_etl_spark.session import get_spark
 
@@ -41,13 +41,10 @@ def main() -> None:
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("ck"),
-            ).collect()[0]
+            n, ck = fingerprint(df)
             out[name] = {
-                "n": row["n"],
-                "ck": str(row["ck"]),
+                "n": n,
+                "ck": str(ck),
                 "cols": df.columns,
                 "sec": round(time.perf_counter() - t0, 2),
             }

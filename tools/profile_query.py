@@ -32,6 +32,7 @@ def main() -> None:
     evdir = "/tmp/spark-events-profile"
     os.makedirs(evdir, exist_ok=True)
 
+    from bench import fingerprint
     from cyrela_etl_spark.queries import load_all
     from cyrela_etl_spark.session import get_spark
 
@@ -66,10 +67,7 @@ def main() -> None:
             t0 = time.time()
             df = fn(spark, sf_dir)
             t_build = time.time() - t0
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("ck"),
-            ).collect()[0]
+            n, _ck = fingerprint(df)
             t1 = time.time()
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
@@ -77,7 +75,7 @@ def main() -> None:
                 spans[name] = (t0, t1, t1 - t0)
             print(
                 f"# {name} run {r}: wall {t1 - t0:.2f}s (build {t_build:.2f}s) "
-                f"rows={row['n']}",
+                f"rows={n}",
                 file=sys.stderr,
             )
     spark.stop()
