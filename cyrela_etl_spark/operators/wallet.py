@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cyrela_etl_spark.functions.dates import reformat_date
 from cyrela_etl_spark.schemas import WALLET_DATE_COLUMNS, WALLET_FEATURE_COLUMNS
 
 # Columns min-max scaled by their global max (reference
@@ -58,7 +59,7 @@ def normalize_dates(df: DataFrame, columns: list[str] | None = None) -> DataFram
     """
     out = df
     for c in columns or WALLET_DATE_COLUMNS:
-        out = out.withColumn(c, F.date_format(F.to_date(F.col(c), "dd/MM/yyyy"), "yyyy-MM-dd"))
+        out = out.withColumn(c, reformat_date(c))
     return out
 
 

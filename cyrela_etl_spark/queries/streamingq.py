@@ -176,8 +176,10 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled = s.unionByName(_event_stream(spark, sf_dir))
     deduped = dedup_within_watermark(doubled, keys=["event_id"], ts_col="ts", watermark="1 hour")
     out = deduped.select("event_id", "user_id", "event_type", "value")
-    sink = tempfile.mkdtemp(prefix="stream_pq_sink_") + "/out"
-    return _drain(spark, run_available_now_to_parquet, out, sink)
+    with tempfile.TemporaryDirectory(prefix="stream_pq_sink_", ignore_cleanup_errors=True) as work:
+        got = _drain(spark, run_available_now_to_parquet, out, f"{work}/out")
+        # Detach from the sink files so the workdir can go.
+        return spark.createDataFrame(got.collect(), got.schema)
 
 
 register(
@@ -214,31 +216,6 @@ FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """,
 )
-
-
-# ---------------------------------------------------------------------------
-# stream_rate_windowed — the UNBOUNDED-source proof: Spark's rate source
-# (the stock Kafka stand-in: same DataSource-V2 micro-batch interface,
-# per-partition monotone offsets, never exhausts) shaped into the events
-# contract and run through the same tumbling-window + watermark builder
-# the file-source queries use, with continuous micro-batches stopped from
-# the driver once output exists. No DuckDB oracle is possible — the input
-# is wall-clock-generated — so it is DELIBERATELY NOT REGISTERED in the
-# declared-query registry: the driver scores a bounded number of entries
-# per round, and an oracle-less row would burn a slot on a permanent
-# `no_oracle` record. Coverage lives in tests/test_streaming.py
-# (test_rate_source_windowed_produces_output and the timeout test); the
-# deterministic window/watermark SEMANTICS are covered by the file-source
-# streaming queries above against batch oracles.
-# ---------------------------------------------------------------------------
-def stream_rate_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.streaming import rate_to_events, read_rate_stream, run_until_rows
-
-    events = rate_to_events(read_rate_stream(spark, rows_per_second=2000, num_partitions=4))
-    agg = tumbling_counts(events, width="2 seconds", keys=("event_type",), watermark="2 seconds")
-    return _drain(
-        spark, run_until_rows, agg, "stream_rate_windowed", min_rows=1, output_mode="update"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -349,10 +326,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.sources.parquet import read_events
     from cyrela_etl_spark.streaming.ops import run_foreach_batch_upsert
 
-    import shutil
-
-    work = tempfile.mkdtemp(prefix="upsert_sink_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="upsert_sink_", ignore_cleanup_errors=True) as work:
         src = f"{work}/in"
         read_events(spark, sf_dir).repartition(8).write.parquet(src)
         stream = read_file_stream(
@@ -377,8 +351,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the state table is O(distinct users) — harness-small by contract
         # (the scale path returns the parquet-backed frame directly).
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 register(
@@ -581,14 +553,12 @@ WHERE event_id % 7 = 0 AND ts + INTERVAL 150 MINUTE < mx
 # batch rank-≤-3 relation.
 # ---------------------------------------------------------------------------
 def stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from cyrela_etl_spark.sources.parquet import read_events
     from cyrela_etl_spark.streaming.ops import run_foreach_batch_topk_view
 
-    work = tempfile.mkdtemp(prefix="topk_view_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="topk_view_", ignore_cleanup_errors=True) as work:
         src = f"{work}/in"
         read_events(spark, sf_dir).repartition(4).write.parquet(src)
         stream = read_file_stream(
@@ -609,8 +579,6 @@ def stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = view.select("bucket", "event_type", "n_events", "rank")
         # detach from the on-disk state snapshot (O(windows × types) rows)
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 register(
@@ -730,7 +698,6 @@ SELECT * FROM unmatched
 # the file source for format('kafka'); the codec + agg run unchanged.
 # ---------------------------------------------------------------------------
 def stream_bus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from cyrela_etl_spark.sources.parquet import normalize_event_ts
@@ -739,9 +706,8 @@ def stream_bus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
-    workdir = tempfile.mkdtemp(prefix="bus_replay_")
-    log_dir = workdir + "/log"
-    try:
+    with tempfile.TemporaryDirectory(prefix="bus_replay_", ignore_cleanup_errors=True) as workdir:
+        log_dir = workdir + "/log"
         env_schema = write_bus_envelopes(
             events, key_col="user_id", topic="events", ts_col="ts", path=log_dir, n_files=4
         )
@@ -760,8 +726,6 @@ def stream_bus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _drain(spark, run_available_now, agg, "stream_bus_replay", output_mode="complete")
         # Detach from the memory-sink view before the log dir disappears.
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 register(

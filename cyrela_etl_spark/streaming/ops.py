@@ -5,9 +5,13 @@ Scale notes (1000-executor story):
 
 - **File source** scales by listing: ``maxFilesPerTrigger`` bounds batch
   size; state (seen-files log) lives in the checkpoint, not the driver
-  heap. ``cleanSource='delete'`` reproduces the reference's
-  delete-after-consume zone hygiene (reference
-  dags/s3-etl-wallet-csv.py:171-176) without a separate delete operator.
+  heap. The reference's delete-after-consume zone hygiene (reference
+  dags/s3-etl-wallet-csv.py:171-176) is the flow's ``delete_landing``
+  stage (flows.py), not a source option.
+- **Drain.** Every bounded run goes through one ``Trigger.AvailableNow``
+  lifecycle (``_drain_available_now``): checkpoint, start, wait, clear the
+  terminated query. The runners below only build their sink: memory
+  table, parquet directory, or a ``foreachBatch`` snapshot merge.
 - **Windowed aggregation** is a streaming hash-agg partitioned by
   (window, keys) — the same shuffle a batch groupBy does, plus a state
   store per partition. Watermarks bound state size: without one, state
@@ -19,11 +23,15 @@ Scale notes (1000-executor story):
 
 from __future__ import annotations
 
+import glob
+import os
 import tempfile
-from typing import Sequence
+from contextlib import nullcontext
+from typing import Callable, ContextManager, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 
@@ -31,13 +39,12 @@ def read_file_stream(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
-    clean_source: str | None = None,
     path_glob: str | None = None,
 ) -> DataFrame:
-    """File-arrival streaming source over a zone directory (the Structured
-    Streaming replacement for the reference's polling S3KeySensor).
+    """File-arrival streaming source over a parquet zone directory (the
+    Structured Streaming replacement for the reference's polling
+    S3KeySensor).
 
     ``schema`` is mandatory: streaming sources cannot infer, and explicit
     schemas are the engine contract anyway (SURVEY.md §1.3). ``path`` must
@@ -45,13 +52,11 @@ def read_file_stream(
     belong to this feed (the reference's ``cyrela/*.csv`` wildcard,
     dags/s3-etl-wallet-csv.py:144).
     """
-    reader = spark.readStream.format(fmt).schema(schema)
+    reader = spark.readStream.format("parquet").schema(schema)
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if clean_source:
-        reader = reader.option("cleanSource", clean_source)
     return reader.load(path)
 
 
@@ -177,6 +182,38 @@ def replay_bus_stream(
     return from_bus_envelope(raw, value_schema)
 
 
+def _checkpoint(checkpoint_dir: str | None = None) -> ContextManager[str]:
+    """A query's checkpoint location: ``checkpoint_dir`` when the caller
+    gives one (kept, so a later run resumes from it), else a fresh temp
+    directory removed on exit — an AvailableNow drain or a stopped
+    unbounded run never reads it again, so repeated calls (bench loops,
+    long test sessions) leave no disk state."""
+    if checkpoint_dir is not None:
+        return nullcontext(checkpoint_dir)
+    return tempfile.TemporaryDirectory(prefix="ckpt_", ignore_cleanup_errors=True)
+
+
+def _drain_available_now(
+    writer: DataStreamWriter, checkpoint_dir: str | None = None
+) -> StreamingQuery:
+    """The one ``Trigger.AvailableNow`` lifecycle (the batch-drain trigger
+    that replaces the reference's sensor+DAG run): start ``writer`` — a
+    configured sink — at ``_checkpoint(checkpoint_dir)``, wait until it
+    has processed every input available at start, and return the
+    terminated query (its ``recentProgress`` stays readable). The query is
+    cleared from its session's StreamingQueryManager registry either way,
+    so a failed drain does not make the next ``awaitAnyTermination``
+    return at once."""
+    streams = writer._spark.streams  # the writer's own session
+    with _checkpoint(checkpoint_dir) as ckpt:
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            streams.resetTerminated()
+    return q
+
+
 def run_until_rows(
     sdf: DataFrame,
     name: str,
@@ -197,42 +234,39 @@ def run_until_rows(
     polling jobs) or read ``q.lastProgress`` — see
     ``tests/test_streaming.py`` for the listener-based variant.
 
-    Cleanup: the memory-sink temp view and the checkpoint directory are
-    both scoped to this call — the result is materialized into a LOCAL
-    (non-streaming) DataFrame, the view dropped and the checkpoint
-    removed, so repeated invocations (bench loops, long test sessions)
-    accumulate no session or disk state.
+    Cleanup: the checkpoint is the drains' temp ``_checkpoint``, removed
+    on return; the result is materialized into a LOCAL (non-streaming)
+    DataFrame and the memory-sink temp view dropped, so repeated
+    invocations accumulate no session or disk state.
     """
-    import shutil
     import time
 
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
     spark = sdf.sparkSession
-    try:
-        deadline = time.monotonic() + timeout_sec
-        while spark.table(name).count() < min_rows:
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"stream {name!r} produced <{min_rows} rows in {timeout_sec}s"
-                )
-            if not q.isActive:
-                raise RuntimeError(f"stream {name!r} died: {q.exception()}")
-            time.sleep(0.25)
-        sink = spark.table(name)
-        # Detach the result from the sink view before dropping it.
-        out = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        q.stop()
-        spark.catalog.dropTempView(name)
-        spark.streams.resetTerminated()
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    with _checkpoint() as ckpt:
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            deadline = time.monotonic() + timeout_sec
+            while spark.table(name).count() < min_rows:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(
+                        f"stream {name!r} produced <{min_rows} rows in {timeout_sec}s"
+                    )
+                if not q.isActive:
+                    raise RuntimeError(f"stream {name!r} died: {q.exception()}")
+                time.sleep(0.25)
+            sink = spark.table(name)
+            # Detach the result from the sink view before dropping it.
+            out = spark.createDataFrame(sink.collect(), sink.schema)
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(name)
+            spark.streams.resetTerminated()
     return out
 
 
@@ -371,48 +405,25 @@ def run_available_now(
     output_mode: str = "append",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Execute a streaming DataFrame to completion over all currently
-    available input (``Trigger.AvailableNow`` — the batch-drain trigger
-    that replaces the reference's sensor+DAG run) into an in-memory table;
-    returns the result as a batch DataFrame.
+    """Drain a streaming DataFrame (``_drain_available_now``) into an
+    in-memory table; returns the result as a batch DataFrame.
 
     Used by tests and the declared-query harness; production sinks swap
     ``format('memory')`` for parquet/kafka with the same trigger.
 
     The sink temp view survives the call (the returned DataFrame reads
     it) but is REPLACED by the next drain under the same name, so session
-    growth is bounded by the number of distinct query names. The
-    checkpoint directory — useless once an AvailableNow drain finishes
-    (every call starts a fresh one) — is removed, and the terminated
-    query is cleared from the StreamingQueryManager's registry.
+    growth is bounded by the number of distinct query names.
     """
-    import shutil
-
-    made_checkpoint = checkpoint_dir is None
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _drain_available_now(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        checkpoint_dir,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        sdf.sparkSession.streams.resetTerminated()
-        if made_checkpoint:
-            shutil.rmtree(checkpoint, ignore_errors=True)
     return sdf.sparkSession.table(name)
 
 
-def run_available_now_to_parquet(
-    sdf: DataFrame,
-    path: str,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Drain a streaming DataFrame (``Trigger.AvailableNow``) into a
+def run_available_now_to_parquet(sdf: DataFrame, path: str) -> DataFrame:
+    """Drain a streaming DataFrame (``_drain_available_now``) into a
     PARQUET sink and read the result back — the scale-true sink path: the
     memory-sink harness above holds results on the driver heap, a file
     sink streams each partition straight to storage and is the only shape
@@ -424,25 +435,61 @@ def run_available_now_to_parquet(
     Row-wise operators (dedup, stateful per-event emission, maps) emit
     everything and round-trip exactly.
     """
-    import shutil
-
-    made_checkpoint = checkpoint_dir is None
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_pq_")
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", path)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _drain_available_now(
+        sdf.writeStream.format("parquet").option("path", path).outputMode("append")
     )
-    try:
-        q.awaitTermination()
-    finally:
-        sdf.sparkSession.streams.resetTerminated()
-        if made_checkpoint:
-            shutil.rmtree(checkpoint, ignore_errors=True)
     return sdf.sparkSession.read.parquet(path)
+
+
+def _latest_snapshot_below(state_dir: str, epoch_id: int) -> str | None:
+    """Newest ``v_*`` snapshot STRICTLY below this epoch's own version.
+
+    Replay safety for foreachBatch merges: if epoch N crashed after
+    writing ``v_N`` but before its checkpoint committed, the redelivered
+    batch must merge into N-1's state again — reading ``versions[-1]``
+    would re-add the same counts into epoch N's own output. (A max-merge
+    is idempotent and would survive that; a SUM-merge would not.)"""
+    if not os.path.isdir(state_dir):
+        return None
+    own = f"v_{epoch_id:08d}"
+    versions = sorted(d for d in os.listdir(state_dir) if d.startswith("v_") and d < own)
+    return versions[-1] if versions else None
+
+
+def _run_snapshot_merge(
+    sdf: DataFrame,
+    state_dir: str,
+    reduce_batch: Callable[[DataFrame], DataFrame],
+    reduce_state: Callable[[DataFrame], DataFrame],
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Drain a stream through a ``foreachBatch`` sink whose state is a
+    parquet snapshot per epoch under ``state_dir`` (mirroring
+    sources/zones.py upsert_table's snapshot versions).
+
+    Per micro-batch: ``reduce_batch`` the batch, union it with
+    ``_latest_snapshot_below`` this epoch, ``reduce_state`` the union,
+    write snapshot ``v_{epoch}``. Reading below the epoch's own version
+    makes a replayed epoch N re-merge its batch into snapshot N-1, never
+    into its own output. State is O(keys); each micro-batch shuffles
+    O(batch + keys), never history. Returns the final snapshot as a batch
+    DataFrame.
+    """
+    spark = sdf.sparkSession
+
+    def _merge(batch: DataFrame, epoch_id: int) -> None:
+        part = reduce_batch(batch)
+        prev = _latest_snapshot_below(state_dir, epoch_id)
+        if prev is not None:
+            cur = spark.read.parquet(os.path.join(state_dir, prev))
+            part = reduce_state(cur.unionByName(part))
+        part.write.mode("overwrite").parquet(os.path.join(state_dir, f"v_{epoch_id:08d}"))
+
+    _drain_available_now(sdf.writeStream.foreachBatch(_merge).outputMode("append"), checkpoint_dir)
+    versions = sorted(glob.glob(os.path.join(state_dir, "v_*")))
+    if not versions:
+        raise RuntimeError(f"foreachBatch merge produced no state snapshot in {state_dir}")
+    return spark.read.parquet(versions[-1])
 
 
 def run_foreach_batch_upsert(
@@ -455,83 +502,26 @@ def run_foreach_batch_upsert(
     """Drain a stream through a ``foreachBatch`` MERGE that maintains a
     latest-row-per-key state table — the standard streaming-upsert sink
     (Delta's ``foreachBatch`` + MERGE recipe, minus the transaction log:
-    each epoch writes a new parquet snapshot version, mirroring
-    sources/zones.py upsert_table).
+    ``_run_snapshot_merge``'s epoch snapshots stand in for it).
 
-    Per micro-batch: reduce the batch to its latest row per key (max
-    ``order_cols``, fully deterministic), union with the current state
-    snapshot, keep the per-key max again, write snapshot ``v_{epoch}``.
-    Because the merge keeps the ORDER-maximum (not the arrival-latest),
-    the final state is independent of how the source chops files into
-    micro-batches — replay/out-of-order delivery converges to the same
-    table, which is what makes the batch window-query oracle exact.
-
-    State is O(keys); each micro-batch shuffles O(batch + keys), never
-    history. Returns the final state as a batch DataFrame.
+    Both reduce steps keep the latest row per key (max ``order_cols``,
+    fully deterministic). Because the merge keeps the ORDER-maximum (not
+    the arrival-latest), the final state is independent of how the source
+    chops files into micro-batches — replay/out-of-order delivery
+    converges to the same table, which is what makes the batch
+    window-query oracle exact. Returns the final state as a batch
+    DataFrame.
     """
-    import os
-    import shutil
-
-    spark = sdf.sparkSession
-    order_desc = [F.col(c).desc() for c in order_cols]
+    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
 
     def _latest(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*key_cols).orderBy(*order_desc)
         return (
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
 
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        versions = sorted(
-            d for d in os.listdir(state_dir) if d.startswith("v_")
-        ) if os.path.isdir(state_dir) else []
-        fresh = _latest(batch)
-        if versions:
-            cur = spark.read.parquet(os.path.join(state_dir, versions[-1]))
-            fresh = _latest(cur.unionByName(fresh))
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v_{epoch_id:08d}")
-        )
-
-    made_checkpoint = checkpoint_dir is None
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_upsert_")
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.streams.resetTerminated()
-        if made_checkpoint:
-            shutil.rmtree(checkpoint, ignore_errors=True)
-    versions = sorted(d for d in os.listdir(state_dir) if d.startswith("v_"))
-    if not versions:
-        raise RuntimeError("foreachBatch upsert produced no state snapshot")
-    return spark.read.parquet(os.path.join(state_dir, versions[-1]))
-
-
-def _latest_snapshot_below(state_dir: str, epoch_id: int) -> str | None:
-    """Newest ``v_*`` snapshot STRICTLY below this epoch's own version.
-
-    Replay safety for ADDITIVE foreachBatch merges: if epoch N crashed
-    after writing ``v_N`` but before its checkpoint committed, the
-    redelivered batch must merge into N-1's state again — reading
-    ``versions[-1]`` would re-add the same counts into epoch N's own
-    output. (The upsert sink's max-merge is idempotent and immune; a
-    SUM-merge is not.)"""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return None
-    own = f"v_{epoch_id:08d}"
-    versions = sorted(d for d in os.listdir(state_dir) if d.startswith("v_") and d < own)
-    return versions[-1] if versions else None
+    return _run_snapshot_merge(sdf, state_dir, _latest, _latest, checkpoint_dir)
 
 
 def run_foreach_batch_topk_view(
@@ -549,59 +539,23 @@ def run_foreach_batch_topk_view(
     state per ``group_cols`` and derive the rank from state, never from
     history.
 
-    Per micro-batch: aggregate the batch to partial counts, SUM-merge
-    them into the current state snapshot, write snapshot ``v_{epoch}``.
-    Epoch-versioned snapshots make retries idempotent (a replayed epoch N
-    re-merges the same batch into snapshot N-1, not into its own
-    output). State is O(groups); each micro-batch shuffles O(batch +
-    groups), never history — the plan shape that survives an unbounded
-    stream. The final ranking (row_number ≤ k per ``partition_cols``,
-    ordered by count desc with the group key as deterministic tiebreak)
-    runs over the O(groups)-sized state table.
+    ``_run_snapshot_merge`` counts each batch per group and SUM-merges the
+    partial counts into the state snapshot. The final ranking
+    (row_number ≤ k per ``partition_cols``, ordered by count desc with the
+    group key as deterministic tiebreak) runs over the O(groups)-sized
+    state table.
 
     Returns the ranked top-k view as a batch DataFrame with columns
     ``*group_cols, n_events, rank``.
     """
-    import os
-    import shutil
 
-    spark = sdf.sparkSession
+    def _count(batch: DataFrame) -> DataFrame:
+        return batch.groupBy(*group_cols).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
 
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        prev = _latest_snapshot_below(state_dir, epoch_id)
-        part = batch.groupBy(*group_cols).agg(
-            F.count(F.lit(1)).cast("long").alias("n_events")
-        )
-        if prev is not None:
-            cur = spark.read.parquet(os.path.join(state_dir, prev))
-            part = (
-                cur.unionByName(part)
-                .groupBy(*group_cols)
-                .agg(F.sum("n_events").cast("long").alias("n_events"))
-            )
-        part.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v_{epoch_id:08d}")
-        )
+    def _sum(df: DataFrame) -> DataFrame:
+        return df.groupBy(*group_cols).agg(F.sum("n_events").cast("long").alias("n_events"))
 
-    made_checkpoint = checkpoint_dir is None
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_topk_")
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        spark.streams.resetTerminated()
-        if made_checkpoint:
-            shutil.rmtree(checkpoint, ignore_errors=True)
-    versions = sorted(d for d in os.listdir(state_dir) if d.startswith("v_"))
-    if not versions:
-        raise RuntimeError("foreachBatch topk produced no state snapshot")
-    state = spark.read.parquet(os.path.join(state_dir, versions[-1]))
+    state = _run_snapshot_merge(sdf, state_dir, _count, _sum, checkpoint_dir)
     tiebreak = [c for c in group_cols if c not in partition_cols]
     w = Window.partitionBy(*partition_cols).orderBy(
         F.col("n_events").desc(), *[F.col(c) for c in tiebreak]

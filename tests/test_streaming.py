@@ -451,20 +451,23 @@ def test_checkpoint_recovery_resumes_replay_exactly_once(spark, sf_dir, tmp_path
     spark.catalog.dropTempView("t_ckpt_recovery")
 
 
-def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("sink", ["upsert", "topk"])
+def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path, sink):
     """VERDICT r10 item 4: the r10 recovery proof covered the windowed-agg
     drain, whose state lives INSIDE the checkpoint. The foreachBatch MERGE
-    sink keeps its state EXTERNALLY (parquet snapshot versions), where
+    sinks keep their state EXTERNALLY (parquet snapshot versions), where
     restart semantics are at-least-once per epoch — a batch whose state
     snapshot landed but whose checkpoint commit did not is REDELIVERED.
     This drives that exact crash: drain the first half with a persistent
     checkpoint (1 file per trigger -> epochs 0,1), delete commits/1 to
     simulate a crash between the v_1 snapshot write and the commit,
     append the second half, resume from the SAME checkpoint. The
-    redelivered epoch 1 re-merges the same rows into its own prior
-    output (v_1) — the order-maximum MERGE makes that a no-op — so the
-    final table must equal the one-shot batch answer, with the offset
-    log showing redelivery (offsets 0..3, v_1 overwritten in place)."""
+    redelivered epoch 1 re-merges the same rows into v_0, the newest
+    snapshot below its own version — the upsert's order-maximum MERGE
+    would survive merging into v_1 too, the top-k SUM MERGE would count
+    epoch 1 twice — so the final table must equal the one-shot batch
+    answer, with the offset log showing redelivery (offsets 0..3, v_1
+    overwritten in place)."""
     import os
     import shutil
 
@@ -472,7 +475,10 @@ def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path):
 
     from cyrela_etl_spark.sources.parquet import read_events
     from cyrela_etl_spark.streaming import read_file_stream
-    from cyrela_etl_spark.streaming.ops import run_foreach_batch_upsert
+    from cyrela_etl_spark.streaming.ops import (
+        run_foreach_batch_topk_view,
+        run_foreach_batch_upsert,
+    )
 
     events = read_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "ts", "value"
@@ -497,6 +503,11 @@ def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path):
         stream = read_file_stream(
             spark, str(src), events.schema, max_files_per_trigger=1
         )
+        if sink == "topk":
+            return run_foreach_batch_topk_view(
+                stream, state, group_cols=["user_id"], partition_cols=[],
+                k=1_000_000, checkpoint_dir=ckpt,
+            ).select("user_id", "n_events")
         return run_foreach_batch_upsert(
             stream, state, key_cols=["user_id"], order_cols=["ts", "event_id"],
             checkpoint_dir=ckpt,
@@ -504,6 +515,10 @@ def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path):
 
     def oracle(df):
         from pyspark.sql.window import Window
+
+        if sink == "topk":
+            n = F.count(F.lit(1)).cast("long")
+            return {tuple(r) for r in df.groupBy("user_id").agg(n).collect()}
 
         w = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
@@ -546,3 +561,58 @@ def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path):
     ) == ["0", "1", "2", "3"]
     assert sorted(os.listdir(state)) == [f"v_{e:08d}" for e in range(4)]
     assert os.path.getmtime(os.path.join(state, "v_00000001")) > v1_mtime
+
+
+def _temp_dirs(prefix):
+    import glob
+    import os
+    import tempfile
+
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}*")))
+
+
+def _drain_with(runner, stream, work, **kw):
+    from cyrela_etl_spark.streaming.ops import (
+        run_available_now_to_parquet,
+        run_foreach_batch_topk_view,
+        run_foreach_batch_upsert,
+    )
+
+    if runner == "memory":
+        return run_available_now(stream, "t_runner_cleanup", **kw)
+    if runner == "parquet":
+        return run_available_now_to_parquet(stream, f"{work}/out", **kw)
+    if runner == "upsert":
+        return run_foreach_batch_upsert(
+            stream, f"{work}/state", ["user_id"], ["ts", "event_id"], **kw
+        )
+    return run_foreach_batch_topk_view(stream, f"{work}/state", ["user_id"], [], 3, **kw)
+
+
+@pytest.mark.parametrize("runner", ["memory", "parquet", "upsert", "topk"])
+def test_available_now_runners_clean_up(spark, sf_dir, tmp_path, runner):
+    """Every AvailableNow runner drains through the one lifecycle: its temp
+    checkpoint is removed, no query is left active, and a caller-given
+    ``checkpoint_dir`` is kept (it is what a later run resumes from; the
+    parquet runner takes none)."""
+    before = _temp_dirs("ckpt_")
+    assert _drain_with(runner, _stream(spark, sf_dir), tmp_path / "a").count() > 0
+    assert _temp_dirs("ckpt_") <= before
+    assert spark.streams.active == []
+    if runner != "parquet":
+        ckpt = tmp_path / "ckpt"
+        _drain_with(runner, _stream(spark, sf_dir), tmp_path / "b", checkpoint_dir=str(ckpt))
+        assert (ckpt / "offsets" / "0").exists()
+        assert spark.streams.active == []
+    spark.catalog.dropTempView("t_runner_cleanup")
+
+
+def test_stream_parquet_sink_removes_its_sink_dir(spark, sf_dir):
+    """The registry's parquet-sink drain detaches its result and removes
+    the sink directory, like the other work-dir streams."""
+    from cyrela_etl_spark.queries.streamingq import stream_parquet_sink
+
+    before = _temp_dirs("stream_pq_sink_")
+    out = stream_parquet_sink(spark, sf_dir)
+    assert _temp_dirs("stream_pq_sink_") <= before
+    assert out.count() == read_events(spark, sf_dir).select("event_id").distinct().count()

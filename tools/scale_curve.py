@@ -893,21 +893,12 @@ def _stream_arrivals(spark, s: int) -> str:
 def _stream_drain(spark, sdf: DataFrame, out_path: str) -> tuple[int, int, int, int]:
     """AvailableNow drain into a parquet sink; returns (rows_out,
     n_batches, peak_state_rows, final_state_rows) from recentProgress."""
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_curve_")
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", out_path)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    from cyrela_etl_spark.streaming.ops import _drain_available_now
+
+    q = _drain_available_now(
+        sdf.writeStream.format("parquet").option("path", out_path).outputMode("append")
     )
-    try:
-        q.awaitTermination()
-        progress = list(q.recentProgress)
-    finally:
-        spark.streams.resetTerminated()
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    progress = q.recentProgress
     states = [
         sum(op["numRowsTotal"] for op in p["stateOperators"])
         for p in progress
