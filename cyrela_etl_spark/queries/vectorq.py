@@ -56,9 +56,9 @@ def _emb(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
     return fan_out(raw) if fan else raw
 
 
-def _queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _queries_df(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
     return (
-        _emb(spark, sf_dir)
+        _emb(spark, sf_dir, fan)
         .filter(F.col("vec_id") < _N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), "embedding")
     )
@@ -100,7 +100,9 @@ def vector_rhp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan=False: r18 interleaved A/B (5 reps, tools/ab.py protocol) — fanned
     # 2.241 s vs raw 2.009 s median; the bucket self-join's exchange
     # dominates and the per-row plane dot products are too light to
-    # amortize the extra shuffle.
+    # amortize the extra shuffle. The 8-row query side keeps its fan: its
+    # own A/B does not separate (4 cores, 15 reps: fanned 1.512 s vs raw
+    # 1.482 s median, 9/15 pairs, quartile ranges overlapping).
     out = rhp_lsh_topk(
         _emb(spark, sf_dir, fan=False),
         _queries_df(spark, sf_dir),
@@ -153,10 +155,11 @@ def vector_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.782 s vs raw 1.200 s median, the biggest fan loser measured: the
     # centroid TakeOrdered + assignment passes each pay the exchange
     # again (the fanned subtree is referenced more than once but the
-    # seed-sample collect cannot reuse it).
+    # seed-sample collect cannot reuse it). The 8-row query side follows:
+    # fanned 1.303 s vs raw 1.094 s median (4 cores, 9 reps, 9/9 pairs).
     out = ivf_topk(
         _emb(spark, sf_dir, fan=False),
-        _queries_df(spark, sf_dir),
+        _queries_df(spark, sf_dir, fan=False),
         k=_K,
         n_centroids=_N_CENT,
         nprobe=_NPROBE,

@@ -38,7 +38,7 @@ from pyspark.sql.types import StructType
 def read_file_stream(
     spark: SparkSession,
     path: str,
-    schema: StructType,
+    schema: StructType | str,
     max_files_per_trigger: int | None = None,
     path_glob: str | None = None,
 ) -> DataFrame:
@@ -46,8 +46,8 @@ def read_file_stream(
     Structured Streaming replacement for the reference's polling
     S3KeySensor).
 
-    ``schema`` is mandatory: streaming sources cannot infer, and explicit
-    schemas are the engine contract anyway (SURVEY.md §1.3). ``path`` must
+    ``schema`` (a StructType or DDL string) is mandatory: streaming sources
+    cannot infer, and explicit schemas are the engine contract anyway (SURVEY.md §1.3). ``path`` must
     be a directory (the zone); ``path_glob`` narrows which arriving files
     belong to this feed (the reference's ``cyrela/*.csv`` wildcard,
     dags/s3-etl-wallet-csv.py:144).

@@ -37,7 +37,35 @@ from collections import Counter
 from datetime import timedelta
 
 
-def test_stream_dedup_expiry_matches_state_machine_model(spark, sf_dir):
+def test_stream_dedup_expiry_matches_state_machine_model(spark, sf_dir, tmp_path):
+    """The query builds its arrivals with pyarrow, so its ``ts`` decode is
+    pinned to ``read_events`` on two more copies of the events table: ``ts``
+    as timestamp[ns] drains to the model built from ``read_events`` on that
+    copy, and ``ts`` as a raw int64 raises SchemaDriftError."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cyrela_etl_spark.queries.streamingq import stream_dedup_expiry
+    from cyrela_etl_spark.sources.parquet import SchemaDriftError
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    i = events.schema.get_field_index("ts")
+    copies = {}
+    for name, ts_type in (("ts_ns", pa.timestamp("ns")), ("ts_int64", pa.int64())):
+        (tmp_path / name).mkdir()
+        pq.write_table(
+            events.set_column(i, "ts", events["ts"].cast(ts_type)),
+            tmp_path / name / "events.parquet",
+        )
+        copies[name] = str(tmp_path / name)
+
+    for src in (sf_dir, copies["ts_ns"]):
+        _check_against_model(spark, src)
+    with pytest.raises(SchemaDriftError, match="events.ts"):
+        stream_dedup_expiry(spark, copies["ts_int64"])
+
+
+def _check_against_model(spark, sf_dir):
     from cyrela_etl_spark.queries.streamingq import stream_dedup_expiry
     from cyrela_etl_spark.sources.parquet import read_events
 
@@ -87,32 +115,3 @@ def test_stream_dedup_expiry_matches_state_machine_model(spark, sf_dir):
     n_resent_emitted = sum(1 for (eid, *_rest, ts) in emitted if ts > mx and eid != -1)
     assert 0 < n_resent_emitted < len(resent), (n_resent_emitted, len(resent))
 
-
-@pytest.mark.slow  # r18 slow tier: heavy model-check/e2e; default run skips (driver verify budget), full suite = -m ""
-def test_sde_fixture_cache_lifecycle(spark, sf_dir):
-    """ADVICE r16 pins for the fixture cache: (1) a second call reuses
-    the cached dir, (2) a failed revalidation (externally-swept partial
-    dir) rmtree's the stale dir BEFORE rebuilding instead of abandoning
-    it until exit, (3) every built dir is tracked for the atexit sweep,
-    not just the last winner per key."""
-    import os
-    import shutil
-
-    from cyrela_etl_spark.queries import streamingq as sq
-
-    first = sq._sde_fixture_dir(spark, sf_dir)
-    assert sq._sde_fixture_dir(spark, sf_dir) == first  # cache hit
-    assert first in sq._SDE_FIXTURE_DIRS
-    # simulate an external /tmp sweep leaving a partial dir
-    os.remove(f"{first}/arrival_1.parquet")
-    second = sq._sde_fixture_dir(spark, sf_dir)
-    assert second != first
-    assert not os.path.exists(first)  # stale partial dir reclaimed NOW
-    assert all(
-        os.path.exists(f"{second}/arrival_{i}.parquet") for i in range(3)
-    )
-    # both builds are on the atexit sweep list
-    assert first in sq._SDE_FIXTURE_DIRS and second in sq._SDE_FIXTURE_DIRS
-    # leave a clean slate for other tests/processes: drop what we built
-    shutil.rmtree(second, ignore_errors=True)
-    sq._SDE_FIXTURE_CACHE.clear()

@@ -607,12 +607,34 @@ def test_available_now_runners_clean_up(spark, sf_dir, tmp_path, runner):
     spark.catalog.dropTempView("t_runner_cleanup")
 
 
-def test_stream_parquet_sink_removes_its_sink_dir(spark, sf_dir):
-    """The registry's parquet-sink drain detaches its result and removes
-    the sink directory, like the other work-dir streams."""
-    from cyrela_etl_spark.queries.streamingq import stream_parquet_sink
+def test_stream_parquet_sink_removes_its_sink_dir(spark, sf_dir, monkeypatch):
+    """The registry's work-dir streams remove the temp dir each call makes:
+    the parquet-sink drain detaches its result, and stream_dedup_expiry's
+    arrival files go once its memory sink holds the drained rows."""
+    import os
+    import tempfile
 
-    before = _temp_dirs("stream_pq_sink_")
-    out = stream_parquet_sink(spark, sf_dir)
-    assert _temp_dirs("stream_pq_sink_") <= before
-    assert out.count() == read_events(spark, sf_dir).select("event_id").distinct().count()
+    from cyrela_etl_spark.queries.streamingq import stream_dedup_expiry, stream_parquet_sink
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    rows = {}
+    for query, prefix in (
+        (stream_parquet_sink, "stream_pq_sink_"),
+        (stream_dedup_expiry, "dedup_expiry_"),
+    ):
+        before = _temp_dirs(prefix)
+        rows[prefix] = query(spark, sf_dir).count()
+        ours = [d for d in made if os.path.basename(d).startswith(prefix)]
+        assert ours and not any(map(os.path.exists, ours)), (prefix, ours)
+        assert _temp_dirs(prefix) <= before
+    events = read_events(spark, sf_dir)
+    assert rows["stream_pq_sink_"] == events.select("event_id").distinct().count()
+    # all events, the tick and the expired-key re-sends
+    assert rows["dedup_expiry_"] > events.count()

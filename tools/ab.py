@@ -3,7 +3,7 @@ claim finer than the bench's ~10% normalized residual needs (README
 "The ±10% rule").
 
 Protocol: ONE session; per query, an untimed warm-up of every leg
-(codegen, fixture caches), then the legs alternate rep by rep so slow
+(codegen, JIT), then the legs alternate rep by rep so slow
 host drift hits them equally, and paired medians are compared. Timed
 action = ``bench.fingerprint`` (count + xxhash64 fold over every output
 column), clearCache after each rep. Row count and checksum must be

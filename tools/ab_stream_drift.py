@@ -7,15 +7,15 @@ round 7), and the growth survives host_ratio normalization (+30%/+59% vs
 r12). The bench probe kernels are deliberately CPU-only ("fixed work, no
 I/O"), so host_ratio is blind to I/O weather — and these two rows are the
 suite's most I/O-bound: every micro-batch fsyncs offset/commit logs and
-state-store deltas to a /tmp checkpoint, and stream_dedup_expiry
-additionally WRITES its own 3-file input layout before the drain starts.
+state-store deltas to a /tmp checkpoint. (stream_dedup_expiry's 3-file
+input layout is built with pyarrow before the drain, no Spark job.)
 
 Protocol (one session, interleaved so slow host drift cancels):
   per rep, in fixed order —
     control   q01_pricing_summary      (cheap batch; CPU+scan bound)
     tumbling  stream_tumbling          (1-batch drain; minimal state)
     sij       stream_interval_join     (1-batch drain; join state both sides)
-    sde       stream_dedup_expiry      (3-batch drain + its own input prep)
+    sde       stream_dedup_expiry      (3-batch drain over its Arrow-built arrivals)
   each timed exactly like bench.py (bench.fingerprint,
   clearCache after), plus per rep:
     cpu probe  bench.probe_once vs the pinned PROBE_REF      (CPU weather)
@@ -24,7 +24,7 @@ Protocol (one session, interleaved so slow host drift cancels):
   a StreamingQueryListener decomposes every drain:
     wall      = bench-style timing (what BENCH_r{N} records)
     lifetime  = onQueryStarted -> onQueryTerminated
-    prep      = wall - lifetime (input-file writes, plan, sink read)
+    prep      = wall - lifetime (input-file build, plan, sink read)
     trig_ms   = sum of per-batch durationMs.triggerExecution
     start_ms  = lifetime - trig_ms (query start/stop + offset-log setup)
     commit_ms = sum of walCommit + commitOffsets (the fsync-bound slice)
