@@ -14,14 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.sources.parquet import read_events
+from cyrela_etl_spark.sources.parquet import read_table
 
 
 # ---------------------------------------------------------------------------
 # func_json_extract — JSON path extraction over the events props column.
 # ---------------------------------------------------------------------------
 def func_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("k_val"),
@@ -48,7 +48,7 @@ FROM events
 # func_string — string function battery over customer/part.
 # ---------------------------------------------------------------------------
 def func_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = read_table(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
         F.upper("c_name").alias("upper_name"),
@@ -89,7 +89,7 @@ FROM customer
 # greatest/least, conditional nulls).
 # ---------------------------------------------------------------------------
 def func_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(F.col("l_orderkey") % 100 == 0)
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -133,7 +133,7 @@ WHERE l_orderkey % 100 = 0
 # func_datetime — timestamp decomposition/arithmetic battery over orders.
 # ---------------------------------------------------------------------------
 def func_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(F.col("o_orderkey") % 50 == 0)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 50 == 0)
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").cast("long").alias("y"),
@@ -182,7 +182,7 @@ WHERE o_orderkey % 50 = 0
 # driver records a rows-only check, which is the honest claim).
 # ---------------------------------------------------------------------------
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -214,7 +214,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``within_tolerance`` boolean — |approx − exact| / exact ≤ 3·rsd, the
     sketch's published error bound — computed engine-side. The oracle
     asserts the exact counts and that the bound holds (TRUE column)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     out = orders.groupBy("o_orderstatus").agg(
         F.approx_count_distinct("o_custkey", rsd=_APPROX_RSD).alias("approx"),
         F.countDistinct("o_custkey").alias("n_exact"),
@@ -232,7 +232,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouped_map_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.grouped import minmax_normalize
 
-    return minmax_normalize(read_events(spark, sf_dir))
+    return minmax_normalize(read_table(spark, sf_dir, "events"))
 
 
 register(
@@ -263,7 +263,7 @@ def minmax_normalize_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped-map version in tests/test_operators.py."""
     from cyrela_etl_spark.operators.grouped import minmax_normalize_window as mmw
 
-    return mmw(read_events(spark, sf_dir))
+    return mmw(read_table(spark, sf_dir, "events"))
 
 
 register(
@@ -307,7 +307,7 @@ GROUP BY o_orderstatus
 # deterministic), size/element_at/array_max/contains/slice/concat_ws.
 # ---------------------------------------------------------------------------
 def func_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     arr = F.array_sort(F.collect_list(F.col("l_linenumber").cast("long")))
     out = li.groupBy("l_orderkey").agg(arr.alias("lines"))
     return out.select(
@@ -351,7 +351,7 @@ _PCT_ACCURACY = 1000
 
 
 def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     sk = orders.groupBy("o_orderstatus").agg(
         F.percentile_approx("o_totalprice", 0.5, _PCT_ACCURACY).alias("approx_med"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -392,7 +392,7 @@ GROUP BY o_orderstatus
 # N scans with different WHEREs).
 # ---------------------------------------------------------------------------
 def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     urgent = F.col("o_orderpriority") == "1-URGENT"
     open_ = F.col("o_orderstatus") == "O"
     return orders.groupBy("o_orderstatus").agg(
@@ -430,7 +430,7 @@ GROUP BY o_orderstatus
 # outputs are exact ints, so the value hash is engine-stable.
 # ---------------------------------------------------------------------------
 def func_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(F.col("l_orderkey") % 20 == 0)
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 20 == 0)
     arrs = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_list(F.col("l_quantity").cast("long"))).alias("qtys")
     )
@@ -480,7 +480,7 @@ FROM arrs
 # shifting, so it can't overflow. One hash agg, status-sized output.
 # ---------------------------------------------------------------------------
 def func_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         F.expr("bit_or(o_orderkey & 4095)").cast("long").alias("or_low12"),
@@ -519,7 +519,7 @@ GROUP BY o_orderstatus
 # contract lands in the hash.
 # ---------------------------------------------------------------------------
 def func_try_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     den = F.col("o_custkey") % 5
     safe_div = F.try_divide(F.col("o_totalprice"), den)
     # the SUMMED quantity is exact integer cents div (engine round(x, 2)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from cyrela_etl_spark.functions.hashing import hex_prefix_long
 from cyrela_etl_spark.queries import register
+from cyrela_etl_spark.sources.parquet import read_table
 
 
 def _sql_hex64(expr: str) -> str:
@@ -43,8 +44,8 @@ _TE_SMOOTHING = 20
 
 
 def ml_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey", "c_mktsegment")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_custkey", "o_totalprice")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     joined = cust.join(orders, cust["c_custkey"] == orders["o_custkey"])
     # r14 tail diet: per_seg (|segments| rows) feeds the 1-row totals AND
     # the encoding — persist or the customer-orders join + agg runs twice.
@@ -120,9 +121,7 @@ _FH_BUCKETS = 64
 
 
 def ml_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     feats = ev.select(
         F.explode(
             F.array(

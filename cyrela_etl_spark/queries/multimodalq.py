@@ -24,15 +24,15 @@ from cyrela_etl_spark.operators.multimodal import (
     synthesize_media,
 )
 from cyrela_etl_spark.queries import register
+from cyrela_etl_spark.sources.parquet import read_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Deliberately NOT fan_out'd (r17 optimization round): the synthetic
-    # media decode here is cheap enough per row that the repartition
-    # exchange + 32-worker Arrow spin-up cost more than the single-task
-    # scan they replace (paired A/B at sf0.1: raw 1.63-2.57 s vs fanned
-    # 2.34-4.02 s on multimodal_media_meta, identical checksums).
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+# documents is read deliberately NOT fan_out'd in this module (r17
+# optimization round): the synthetic media decode here is cheap enough per
+# row that the repartition exchange + 32-worker Arrow spin-up cost more
+# than the single-task scan they replace (paired A/B at sf0.1: raw
+# 1.63-2.57 s vs fanned 2.34-4.02 s on multimodal_media_meta, identical
+# checksums).
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +50,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed 34-byte minimal container (GIF_OVERHEAD_BYTES, also pinned).
 # ---------------------------------------------------------------------------
 def multimodal_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = synthesize_media(_docs(spark, sf_dir))
+    media = synthesize_media(read_table(spark, sf_dir, "documents"))
     meta = extract_media_meta(media, strict=True)
     return meta.select(
         "doc_id",
@@ -103,7 +103,7 @@ FROM p
 # at odd positions of hex(payload) — the same quantity, SQL-spelled.
 # ---------------------------------------------------------------------------
 def multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    binary = binarize_text(_docs(spark, sf_dir))
+    binary = binarize_text(read_table(spark, sf_dir, "documents"))
     out = byte_histogram(binary)
     return out.select("doc_id", F.col("nibble").cast("int").alias("nibble"), "n")
 
@@ -141,7 +141,7 @@ _EVERY_N = 2
 
 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    binary = binarize_text(_docs(spark, sf_dir))
+    binary = binarize_text(read_table(spark, sf_dir, "documents"))
     frames = sample_frames(binary, every_n=_EVERY_N)
     return frames.select(
         "doc_id",
@@ -184,7 +184,7 @@ FROM idx
 def multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.multimodal import synthesize_mp3
 
-    media = synthesize_mp3(_docs(spark, sf_dir))
+    media = synthesize_mp3(read_table(spark, sf_dir, "documents"))
     meta = extract_media_meta(media, strict=True)
     return meta.select(
         "doc_id",

@@ -20,15 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
+from cyrela_etl_spark.sources.parquet import read_table
 
 # Exact money arithmetic: 2-decimal doubles → DECIMAL(12,2) (values < 1e6)
 # so products stay ≤ DECIMAL(38,6) with no scale truncation in either engine.
 DEC = "decimal(12,2)"
 SQL_DEC = "DECIMAL(12,2)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _dec(c: str) -> F.Column:
@@ -39,7 +36,7 @@ def _dec(c: str) -> F.Column:
 # q01: TPC-H Q1-flavored pricing summary — hash agg w/ map-side partials.
 # --------------------------------------------------------------------------
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
     disc_price = _dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount"))
     charge = disc_price * (F.lit(1).cast(DEC) + _dec("l_tax"))
     return (
@@ -77,9 +74,9 @@ register("q01_pricing_summary", q01_pricing_summary, ORACLE_Q01)
 # agg, orderBy+limit with unique tie-break.
 # --------------------------------------------------------------------------
 def q03_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp"))
+    cust = read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp"))
     revenue = F.sum(_dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount")))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -112,12 +109,12 @@ register("q03_top_orders", q03_top_orders, ORACLE_Q03)
 # with the TPC-H local-supplier condition; dims broadcast.
 # --------------------------------------------------------------------------
 def q05_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    region = read_table(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    nation = read_table(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    sup = read_table(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     revenue = F.sum(_dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount")))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -150,8 +147,8 @@ register("q05_region_revenue", q05_region_revenue, ORACLE_Q05)
 # join_semi / join_anti — left-semi and left-anti joins.
 # --------------------------------------------------------------------------
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    urgent = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    cust = read_table(spark, sf_dir, "customer")
+    urgent = read_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return (
         cust.join(urgent, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name", "c_mktsegment")
@@ -169,8 +166,8 @@ WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_ord
 
 
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    urgent = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    cust = read_table(spark, sf_dir, "customer")
+    urgent = read_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return (
         cust.join(urgent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name", "c_acctbal")
@@ -191,8 +188,8 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o
 # join_outer — left outer join with count of matches (nulls → 0 groups kept).
 # --------------------------------------------------------------------------
 def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
+    nation = read_table(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
     return (
         nation.join(cust, F.col("c_nationkey") == F.col("n_nationkey"), "left")
         .groupBy("n_nationkey", "n_name")
@@ -216,8 +213,8 @@ GROUP BY n_nationkey, n_name
 # fact table, aggregated by dim attribute.
 # --------------------------------------------------------------------------
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand")
@@ -247,7 +244,7 @@ GROUP BY p_brand
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
         orders.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -275,7 +272,7 @@ WHERE rnk <= 3
 def window_lag_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_orderdate"), F.col("o_orderkey"))
     running = (
         Window.partitionBy("o_custkey")
@@ -310,8 +307,8 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 # set_ops — UNION DISTINCT then EXCEPT DISTINCT of customer-key sets.
 # --------------------------------------------------------------------------
 def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     building = cust.filter(F.col("c_mktsegment") == "BUILDING").select(F.col("c_custkey").alias("custkey"))
     urgent = (
         orders.filter(F.col("o_orderpriority") == "1-URGENT")
@@ -335,8 +332,8 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 
 
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     machinery = cust.filter(F.col("c_mktsegment") == "MACHINERY").select(F.col("c_custkey").alias("custkey"))
     open_ = orders.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
     return machinery.intersect(open_)
@@ -357,7 +354,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 # group_rollup — ROLLUP grouping sets with decimal-exact money sum.
 # --------------------------------------------------------------------------
 def group_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -383,7 +380,7 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 # filter_project — row-level filter + computed projection (pushdown surface).
 # --------------------------------------------------------------------------
 def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     disc_price = (_dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount"))).cast("double")
     return (
         li.filter((F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07) & (F.col("l_quantity") < 10))
@@ -407,7 +404,7 @@ WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 10
 # topk_global — global orderBy + limit (TakeOrderedAndProject).
 # --------------------------------------------------------------------------
 def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -429,7 +426,7 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 15
 # distinct_agg — COUNT(DISTINCT) (expand + two-phase agg in Spark).
 # --------------------------------------------------------------------------
 def distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.countDistinct("o_orderstatus", "o_orderpriority").alias("n_status_prio"),
@@ -453,7 +450,7 @@ FROM orders
 # sql_q6 — the spark.sql() surface: scalar filter-aggregate (TPC-H Q6 shape).
 # --------------------------------------------------------------------------
 def sql_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
+    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     return spark.sql(
         f"""
         SELECT CAST(sum(CAST(l_extendedprice AS {SQL_DEC}) * CAST(l_discount AS {SQL_DEC})) AS DOUBLE) AS revenue,
@@ -483,7 +480,7 @@ WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
 # pattern, spark/jobs/pr-wallet-data-tf.py:79-118) over the star schema.
 # --------------------------------------------------------------------------
 def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey, o_totalprice,
@@ -511,8 +508,8 @@ WHERE o_totalprice > 0.9 * (SELECT max(o_totalprice) FROM orders)
 # by Catalyst as a rewritten aggregate+join; integer-exact, no float risk).
 # --------------------------------------------------------------------------
 def sql_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     return spark.sql(
         """
         SELECT o_orderkey, o_orderpriority
@@ -538,8 +535,8 @@ WHERE (SELECT count(*) FROM lineitem l WHERE l.l_orderkey = o.o_orderkey) >= 6
 # must keep 0-order customers + two-level aggregation, TPC-H Q13 shape).
 # --------------------------------------------------------------------------
 def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     per_cust = (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -568,14 +565,14 @@ GROUP BY n_orders
 # (supplier nation × customer nation), date-range filter, year rollup.
 # --------------------------------------------------------------------------
 def q07_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    nation = read_table(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    sup = read_table(spark, sf_dir, "supplier")
     volume = F.sum(_dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount")))
     n1 = nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
     n2 = nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
@@ -616,10 +613,10 @@ GROUP BY 1, 2, 3
 # customer, top-20 with unique tie-break.
 # --------------------------------------------------------------------------
 def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     revenue = F.sum(_dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount")))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -658,8 +655,8 @@ LIMIT 20
 def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.skew import salted_join
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority").withColumnRenamed(
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority").withColumnRenamed(
         "o_orderkey", "l_orderkey"
     )
     out = salted_join(li, orders, on=["l_orderkey"], salts=8, salt_on="l_linenumber")
@@ -692,8 +689,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.sources.bucketed import write_bucketed
 
     base = tempfile.mkdtemp(prefix="bucketed_")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity", "l_extendedprice")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity", "l_extendedprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     bli = write_bucketed(li, "b_lineitem", "l_orderkey", buckets=8, path=f"{base}/lineitem")
     bo = write_bucketed(orders, "b_orders", "o_orderkey", buckets=8, path=f"{base}/orders")
     return (
@@ -728,7 +725,7 @@ GROUP BY o_orderstatus
 def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_orderdate"), F.col("o_orderkey"))
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return orders.select(
@@ -770,7 +767,7 @@ _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     out = (
         orders.groupBy("o_orderstatus")
         .pivot("o_orderpriority", _PRIORITIES)
@@ -803,7 +800,7 @@ GROUP BY o_orderstatus
 # the oracle spells it as the equivalent UNION ALL.
 # --------------------------------------------------------------------------
 def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     wide = orders.select(
         "o_orderkey",
         F.col("o_totalprice").cast("double").alias("total_price"),
@@ -831,8 +828,8 @@ SELECT o_orderkey, 'cust_bucket', CAST(o_custkey % 100 AS DOUBLE) FROM orders
 # rewrites it to a left-semi hash join, never a per-row subquery.
 # --------------------------------------------------------------------------
 def sql_q04_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     return spark.sql(
         """
         SELECT o_orderpriority, count(*) AS n_orders
@@ -865,8 +862,8 @@ GROUP BY o_orderpriority
 # One fact-dim-free join + hash agg with map-side partials.
 # --------------------------------------------------------------------------
 def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     joined = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
@@ -899,8 +896,8 @@ GROUP BY l_returnflag
 # of two exactly-representable values — bit-stable cross-engine.
 # --------------------------------------------------------------------------
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"]).filter(
         (F.col("l_shipdate") >= "1996-03-01") & (F.col("l_shipdate") < "1996-04-01")
     )
@@ -992,7 +989,7 @@ def fuzzy_name_pair_candidates(names: DataFrame, name_col: str = "c_name") -> Da
 
 def fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name")
         .filter(F.length("c_name") >= 1)
     )
@@ -1068,20 +1065,20 @@ SELECT * FROM cross_pairs UNION ALL SELECT * FROM same_pairs
 # order year. Dims broadcast; the fact chain shuffles once per join key.
 # --------------------------------------------------------------------------
 def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    n_cust = _t(spark, sf_dir, "nation").select(
+    cust = read_table(spark, sf_dir, "customer")
+    supp = read_table(spark, sf_dir, "supplier")
+    n_cust = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region")
     )
-    n_supp = _t(spark, sf_dir, "nation").select(
+    n_supp = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     vol = _dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount"))
     j = (
         li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
@@ -1141,8 +1138,8 @@ GROUP BY o_year
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#7") & (F.col("p_type") == "PROMO")
     )
     j = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
@@ -1186,9 +1183,9 @@ WHERE l_quantity < thresh
 # matching orders join onward (Catalyst plans the IN as left-semi).
 # --------------------------------------------------------------------------
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("total_qty"))
@@ -1231,8 +1228,8 @@ LIMIT 100
 # shared part-side filter (size >= 1) into the scan.
 # --------------------------------------------------------------------------
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
     b1 = (
         (F.col("p_brand") == "Brand#1")
@@ -1277,7 +1274,7 @@ WHERE (p_brand = 'Brand#1'  AND p_size BETWEEN 1  AND 15 AND l_quantity BETWEEN 
 # of c_name (the driver schema has no phone column).
 # --------------------------------------------------------------------------
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pool = _t(spark, sf_dir, "customer").withColumn(
+    pool = read_table(spark, sf_dir, "customer").withColumn(
         "cntrycode", F.substring(F.col("c_name"), -2, 2)
     )
     # scalar threshold: avg positive balance, as an exact sum/count ratio
@@ -1290,7 +1287,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "idle" = no order in the last 18 months of the data window (every
     # customer in the driver data has SOME order, so TPC-H's no-order-ever
     # form would be vacuously empty)
-    recent = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "2000-01-01").select(
+    recent = read_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "2000-01-01").select(
         "o_custkey"
     )
     return (
@@ -1338,7 +1335,7 @@ GROUP BY cntrycode
 def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1996-01-01")
+    orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1996-01-01")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return orders.select(
@@ -1378,7 +1375,7 @@ WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
 # Group labels are coalesced (no natural NULLs in these columns).
 # --------------------------------------------------------------------------
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("v_orders_gs")
     return orders.sparkSession.sql(
         f"""
@@ -1419,7 +1416,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 # Plan: ONE hash agg with map-side combine + a key-sized projection.
 # --------------------------------------------------------------------------
 def agg_regression_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(7,2)")
     y = F.col("l_extendedprice").cast(SQL_DEC.lower())
     sums = li.groupBy("l_returnflag").agg(
@@ -1485,7 +1482,7 @@ WHERE CAST(n_rows AS DOUBLE) * sxx - sx * sx > 0
 # one multiply, one add on doubles, bit-identical.
 # --------------------------------------------------------------------------
 def agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.expr("percentile(o_totalprice, 0.5)").alias("median_price"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -1508,7 +1505,7 @@ def agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast(SQL_DEC.lower())
     wc = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
     wt = Window.partitionBy("l_returnflag")
@@ -1622,7 +1619,7 @@ def fuzzy_name_pair_candidates_indel(names: DataFrame, name_col: str = "c_name")
 
 def fuzzy_match_names_indel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name")
         .filter(F.length("c_name") >= 1)
     )
@@ -1701,11 +1698,11 @@ SELECT * FROM cross_pairs UNION ALL SELECT * FROM same_pairs
 # GROUP BY nation × year) is Q9's. Part name filter keeps the LIKE leg.
 # --------------------------------------------------------------------------
 def q09_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
+    supp = read_table(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders")
+    nation = read_table(spark, sf_dir, "nation")
     rev = _dec("l_extendedprice") * (F.lit(1).cast(DEC) - _dec("l_discount"))
     cost = (
         (_dec("p_retailprice") * F.lit(0.6).cast("decimal(3,2)")).cast(DEC)
@@ -1758,7 +1755,7 @@ GROUP BY n_name, year(o_orderdate)
 def scale_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.skew import key_skew_profile
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return key_skew_profile(orders, "o_custkey", top_n=20)
 
 
@@ -1802,8 +1799,8 @@ WHERE r.rank <= 20
 def scale_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.bloom import bloom_prefilter_report
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     build = cust.filter(
         (F.col("c_mktsegment") == "BUILDING") & (F.col("c_acctbal") > 5000)
     ).select(F.col("c_custkey").cast("string").alias("key"))
@@ -1864,9 +1861,8 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM b) AS n_build_keys,
 # ---------------------------------------------------------------------------
 def scale_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.skew import join_cardinality_estimate
-    from cyrela_etl_spark.sources.parquet import read_events
 
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id")
     purchases = ev.filter(F.col("event_type") == "purchase").select("user_id")
     return join_cardinality_estimate(clicks, purchases, "user_id", buckets=64)
@@ -1913,8 +1909,8 @@ FROM e CROSS JOIN a
 # DecorrelateInnerQuery; the plan has no per-row iteration).
 # --------------------------------------------------------------------------
 def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
+    read_table(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
+    read_table(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
     return spark.sql(
         """
         SELECT n.n_name, t.c_name, t.c_acctbal
@@ -1958,7 +1954,7 @@ LATERAL (
 # --------------------------------------------------------------------------
 def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -2020,9 +2016,8 @@ _CMS_D, _CMS_W = 3, 32
 
 def scale_countmin_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.functions.hashing import hex_prefix_long
-    from cyrela_etl_spark.sources.parquet import read_events
 
-    ev = read_events(spark, sf_dir).select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.concat(F.col("event_type"), F.lit("|"), (F.col("user_id") % 50).cast("string")).alias(
             "key"
         )
@@ -2112,7 +2107,7 @@ register("scale_countmin_estimate", scale_countmin_estimate, _cms_oracle())
 # classic dimension-denormalization shape; output region-sized.
 # --------------------------------------------------------------------------
 def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
+    nation = read_table(spark, sf_dir, "nation")
     return nation.groupBy(F.col("n_regionkey").cast("long").alias("region_key")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nations"),
         F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("names_csv"),
@@ -2143,7 +2138,7 @@ GROUP BY CAST(n_regionkey AS BIGINT)
 # oracle checks bag equality, not just membership.
 # --------------------------------------------------------------------------
 def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     high = orders.filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     ).select(F.col("o_custkey").alias("custkey"))
@@ -2212,7 +2207,7 @@ FROM reach GROUP BY id
 
 
 def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     cust.createOrReplaceTempView("v_cust_rec")
     return spark.sql(_REC_SQL_BODY.format(cust="v_cust_rec"))
 
@@ -2230,7 +2225,7 @@ register("sql_recursive_cte", sql_recursive_cte, _REC_SQL_BODY.format(cust="cust
 # bucket's pairing lands in the hash.
 # --------------------------------------------------------------------------
 def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     key = F.when(F.col("c_custkey") % 7 != 0, F.col("c_custkey") % 100)
     a = cust.select(key.alias("k"), F.col("c_acctbal").alias("bal_a"))
     b = cust.select(key.alias("k"), F.col("c_custkey").alias("ck_b"))
@@ -2274,7 +2269,7 @@ GROUP BY coalesce(a.k, -1)
 # both the flag and its count.
 # --------------------------------------------------------------------------
 def agg_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         F.expr("bool_and(o_totalprice > 900)").alias("all_above_floor"),
@@ -2324,7 +2319,7 @@ def agg_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-item counts, both self-join sides) and item has two (each pair
     # side's count join) — persist BOTH relations, or each consumer
     # re-plans the lineitem distinct. release: caller
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct().persist()
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct().persist()
     n_orders = li.select("l_orderkey").distinct().count()
     item = li.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n_item")).persist()
     a, b = li.alias("a"), li.alias("b")

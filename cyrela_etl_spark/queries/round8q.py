@@ -25,20 +25,11 @@ from pyspark.sql import functions as F
 
 from cyrela_etl_spark.operators import text as X
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.sources.parquet import fan_out
-from cyrela_etl_spark.queries.textq import CORPUS_SQL, corpus, sql_tokens
+from cyrela_etl_spark.sources.parquet import fan_out, read_table
+from cyrela_etl_spark.queries.textq import CORPUS_SQL, _docs, corpus, sql_tokens
 
 LN_DEC = "decimal(20,6)"   # a rounded ln()/pow() value
 ACC_DEC = "decimal(38,12)"  # sums of products of two LN_DECs
-
-
-def _docs(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
-    # fanned out: single-row-group file pins all per-row work above the
-    # scan to one task otherwise (sources/parquet.py fan_out).
-    # ``fan=False``: consumers whose first operation is itself a shuffle
-    # measurably pay the extra exchange — each opt-out cites its A/B.
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return fan_out(raw) if fan else raw
 
 
 # ---------------------------------------------------------------------------
@@ -458,9 +449,7 @@ register("ml_leakage_check", ml_leakage_check, _leakage_oracle())
 # events". Shares are single divisions of exact ints.
 # ---------------------------------------------------------------------------
 def events_power_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    per_user = read_events(spark, sf_dir).groupBy("user_id").agg(
+    per_user = read_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("c")
     )
     hist = per_user.groupBy("c").agg(F.count(F.lit(1)).alias("n_users"))
@@ -515,9 +504,7 @@ FROM cum, tot
 # at the boundary — no float accumulation.
 # ---------------------------------------------------------------------------
 def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    ev = read_events(spark, sf_dir).select(
+    ev = read_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 10).cast("long").alias("cohort"), "event_type"
     )
     ct = ev.groupBy("cohort", "event_type").agg(F.count(F.lit(1)).alias("n_t"))
@@ -571,14 +558,12 @@ FROM wn GROUP BY cohort
 # IV sum folds round-12 decimals (exact).
 # ---------------------------------------------------------------------------
 def ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.queries.relational import _t
-
     returned = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("orderkey"))
         .agg(F.max((F.col("l_returnflag") == "R").cast("int")).alias("is_ret"))
     )
-    orders = _t(spark, sf_dir, "orders").join(
+    orders = read_table(spark, sf_dir, "orders").join(
         returned, F.col("o_orderkey") == F.col("orderkey")
     )
     feats = orders.select(
@@ -670,7 +655,7 @@ FROM scored
 # classes): w_c = N / (k · n_c), one division per class.
 # ---------------------------------------------------------------------------
 def ml_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     # r14 tail diet: feeds the 1-row total AND the weight join — persist
     # or the label agg over the corpus runs twice (k-row table).
     # release: caller (cache contract, queries/__init__)
@@ -704,12 +689,10 @@ FROM pl, tot
 # a single division of exact ints.
 # ---------------------------------------------------------------------------
 def window_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.queries.relational import _t
-
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").asc(), F.col("c_custkey").asc()
     )
-    return _t(spark, sf_dir, "customer").select(
+    return read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("long").alias("c_custkey"),
         "c_mktsegment",
         "c_acctbal",
@@ -745,10 +728,8 @@ _MAP_MIN_COUNT = 3
 
 
 def func_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
     ct = (
-        read_events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .select((F.col("user_id") % 20).cast("long").alias("cohort"), "event_type")
         .groupBy("cohort", "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1039,9 +1020,7 @@ def _sessions(ev: DataFrame, etype: str) -> DataFrame:
 
 
 def temporal_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     a = _sessions(ev, _OVL_TYPE_A).select(
         "user_id",
         F.col("sess_no").alias("a_sess"),
@@ -1120,7 +1099,7 @@ _CQ_K = 8
 def vector_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.clustering import kmeans_quality_profile
 
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     return kmeans_quality_profile(emb, k=_CQ_K, iterations=2)
 
 
@@ -1505,9 +1484,7 @@ register("graph_degree_distribution", graph_degree_distribution, _degree_dist_or
 # order is pinned by (acctbal DESC, custkey DESC) on both sides.
 # ---------------------------------------------------------------------------
 def func_struct_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.queries.relational import _t
-
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_nationkey",
         F.struct(
             F.col("c_acctbal").alias("bal"),
@@ -1569,9 +1546,8 @@ _ASOF_TOL_S = 7 * 86400
 
 def temporal_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.temporal import asof_join
-    from cyrela_etl_spark.sources.parquet import read_events
 
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id", "value"
     )
@@ -1632,9 +1608,8 @@ _PB_BUCKETS = 32
 
 def scale_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.functions.hashing import stable_hash64
-    from cyrela_etl_spark.queries.relational import _t
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     b = orders.select(
         F.pmod(stable_hash64(F.col("o_custkey").cast("string")), F.lit(_PB_BUCKETS)).alias(
             "bucket"
@@ -1799,9 +1774,7 @@ _PCTS = (0.25, 0.5, 0.75, 0.95)
 
 
 def agg_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.queries.relational import _t
-
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         *[
@@ -1835,9 +1808,7 @@ _WILSON_Z2 = "3.8415"  # z=1.96 → z² to 4 decimals, exact in both parsers
 
 
 def events_conversion_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     per_user = ev.groupBy((F.col("user_id") % 10).cast("long").alias("cohort"), "user_id").agg(
         F.max((F.col("event_type") == "click").cast("int")).alias("clicked"),
         F.max((F.col("event_type") == "purchase").cast("int")).alias("purchased"),
@@ -1907,7 +1878,7 @@ def vector_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.functions.vectors import to_double_array
     from cyrela_etl_spark.operators.clustering import _assign, _dist2, _means
 
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     base = emb.select(F.col("vec_id"), to_double_array("embedding").alias("v"))
     seeds = (
         base.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -2017,9 +1988,7 @@ _FUNNEL_STAGES = ("signup", "click", "purchase")
 
 
 def events_funnel_conversion_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     firsts = (
         ev.filter(F.col("event_type").isin(*_FUNNEL_STAGES))
         .groupBy("user_id", "event_type")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
+from cyrela_etl_spark.sources.parquet import read_table
 from cyrela_etl_spark.sources.csv import read_csv, write_csv
 from cyrela_etl_spark.sources.zones import ZoneStore
 
@@ -26,7 +27,7 @@ from cyrela_etl_spark.sources.zones import ZoneStore
 # read → decimal-exact aggregate.
 # ---------------------------------------------------------------------------
 def storage_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     path = tempfile.mkdtemp(prefix="csv_rt_") + "/orders"
@@ -62,7 +63,7 @@ GROUP BY o_orderstatus
 def storage_zone_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="zones_rt_")
     store = ZoneStore(spark, root)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
     store.promote(cust, "landing", "cust", fmt="csv")
@@ -98,7 +99,7 @@ GROUP BY c_mktsegment
 def storage_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="zone_tbl_")
     store = ZoneStore(spark, root)
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+    supp = read_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
     store.promote_table(supp.filter(F.col("s_suppkey") % 2 == 0), "curated", "supp", "zone_supplier")
@@ -144,7 +145,7 @@ def storage_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial_agg_state,
     )
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderdate", "o_totalprice"
     )
     batches = [
@@ -185,7 +186,7 @@ GROUP BY o_orderpriority
 def storage_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.sources.zones import snapshot_diff
 
-    old = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    old = read_table(spark, sf_dir, "orders")
     kept = old.filter(F.col("o_orderkey") % 97 != 0)
     bumped = kept.withColumn(
         "o_totalprice",
@@ -229,7 +230,7 @@ _Z_SHIFT = 16
 def storage_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.zorder import zorder_cluster_stats
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         F.pmod(F.col("o_custkey"), F.lit(65536)).cast("long").alias("k1"),
         F.pmod(
             F.datediff(F.to_date("o_orderdate"), F.to_date(F.lit(_Z_EPOCH))),
@@ -278,7 +279,7 @@ def storage_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import numeric_profile
 
     return numeric_profile(
-        spark.read.parquet(f"{sf_dir}/orders.parquet"), _PROFILE_COLS
+        read_table(spark, sf_dir, "orders"), _PROFILE_COLS
     )
 
 
@@ -312,7 +313,7 @@ def storage_moments_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import moments_profile
 
     return moments_profile(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
+        read_table(spark, sf_dir, "lineitem"),
         key_col="l_returnflag",
         value_col="l_quantity",
     )
@@ -362,7 +363,7 @@ WHERE n_rows >= 2 AND m2 > 0
 def storage_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.sources.jsonl import read_jsonl, write_jsonl
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     path = tempfile.mkdtemp(prefix="jsonl_rt_") + "/orders"
@@ -400,7 +401,7 @@ GROUP BY o_orderstatus
 def storage_jsonl_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.sources.jsonl import read_jsonl
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang")
     lines = docs.select(
         F.when(
             F.col("doc_id") % 25 == 0, F.lit("{corrupt not-json")
@@ -442,7 +443,7 @@ _DRIFT_BINS = 20
 def storage_histogram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import histogram_drift
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.filter(F.col("o_orderkey") % 2 == 0)
     curr = orders.filter(F.col("o_orderkey") % 2 == 1)
     return histogram_drift(base, curr, "o_totalprice", bins=_DRIFT_BINS)
@@ -495,9 +496,8 @@ FROM joined
 # ---------------------------------------------------------------------------
 def storage_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import equidepth_histogram
-    from cyrela_etl_spark.sources.parquet import read_events
 
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     return equidepth_histogram(ev, key_col="event_type", value_col="value", bins=8)
 
 
@@ -537,13 +537,12 @@ FROM binned GROUP BY 1, 2
 def storage_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from cyrela_etl_spark.sources.parquet import read_events
     from cyrela_etl_spark.sources.zones import delete_rows, snapshot_diff
 
     root = tempfile.mkdtemp(prefix="zone_forget_")
     try:
         store = ZoneStore(spark, root)
-        ev = read_events(spark, sf_dir).select("event_id", "user_id", "event_type", "value")
+        ev = read_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
         store.promote_table(ev, "curated", "ev", "zone_events")
         forget = ev.filter(F.col("user_id") % 97 == 0).select("user_id").distinct()
         old_path = delete_rows(store, "curated", "ev", "zone_events", forget, "user_id")
@@ -616,10 +615,9 @@ CROSS JOIN tot t
 # ---------------------------------------------------------------------------
 def storage_winsorize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import winsorize_profile
-    from cyrela_etl_spark.sources.parquet import read_events
 
     return winsorize_profile(
-        read_events(spark, sf_dir), key_col="event_type", value_col="value"
+        read_table(spark, sf_dir, "events"), key_col="event_type", value_col="value"
     )
 
 
@@ -664,7 +662,7 @@ GROUP BY e.event_type
 # footer-metadata work, not a data rewrite.
 # ---------------------------------------------------------------------------
 def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     root = tempfile.mkdtemp(prefix="schema_evo_") + "/orders_evolving"
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -723,7 +721,7 @@ def sql_hex64_storage(expr: str) -> str:
 def storage_integrity_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.functions.hashing import hex_prefix_long
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     row_repr = F.concat_ws(
         "|",
         F.col("o_orderkey").cast("string"),
@@ -777,7 +775,7 @@ GROUP BY o_orderstatus
 # matrix — no joins, no second scan.
 # ---------------------------------------------------------------------------
 def storage_correlation_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("decimal(12,2)").alias("q"),
         F.col("l_extendedprice").cast("decimal(12,2)").alias("p"),
         F.col("l_discount").cast("decimal(12,4)").alias("d"),
@@ -901,7 +899,7 @@ register("storage_correlation_profile", storage_correlation_profile, _corr_oracl
 # scans is asserted separately (tests) — this row pins data fidelity.
 # ---------------------------------------------------------------------------
 def storage_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"
     )
     path = tempfile.mkdtemp(prefix="orc_rt_") + "/lineitem"
@@ -949,7 +947,7 @@ GROUP BY l_returnflag
 def storage_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.functions.hashing import hex_prefix_long
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
     payload = F.concat(
@@ -1011,9 +1009,7 @@ GROUP BY o_orderstatus
 # (a mangled partition path changes the group counts).
 # ---------------------------------------------------------------------------
 def storage_hive_partition_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
-    ev = read_events(spark, sf_dir).select("event_id", "event_type", "user_id", "value")
+    ev = read_table(spark, sf_dir, "events").select("event_id", "event_type", "user_id", "value")
     path = tempfile.mkdtemp(prefix="hive_rt_") + "/events"
     ev.write.partitionBy("event_type").mode("overwrite").parquet(path)
     back = spark.read.parquet(path).filter(F.col("event_type").isin("click", "purchase"))
@@ -1053,10 +1049,10 @@ GROUP BY event_type
 # serialization so the document bytes are deterministic.
 # ---------------------------------------------------------------------------
 def storage_nested_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
     lines = li.groupBy("l_orderkey").agg(
@@ -1137,7 +1133,7 @@ def storage_txn_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="txn_acid_q_")
     store = ZoneStore(spark=spark, root=root)
     try:
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
         base = orders.filter(F.col("o_orderkey") <= 20000)

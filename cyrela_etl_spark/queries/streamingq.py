@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
+from cyrela_etl_spark.sources.parquet import read_table
 from cyrela_etl_spark.session import scoped_conf
 from cyrela_etl_spark.streaming import (
     dedup_within_watermark,
@@ -279,10 +280,8 @@ WHERE l.event_type = 'click' AND r.event_type = 'purchase'
 # driver schema ships no separate user table.
 # ---------------------------------------------------------------------------
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cyrela_etl_spark.sources.parquet import read_events
-
     dim = (
-        read_events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .select("user_id")
         .distinct()
         .select("user_id", (F.col("user_id") % 10).alias("cohort"))
@@ -321,12 +320,11 @@ GROUP BY 1, 2
 def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cyrela_etl_spark.sources.parquet import read_events
     from cyrela_etl_spark.streaming.ops import run_foreach_batch_upsert
 
     with tempfile.TemporaryDirectory(prefix="upsert_sink_", ignore_cleanup_errors=True) as work:
         src = f"{work}/in"
-        read_events(spark, sf_dir).repartition(8).write.parquet(src)
+        read_table(spark, sf_dir, "events").repartition(8).write.parquet(src)
         stream = read_file_stream(
             spark, src, spark.read.parquet(src).schema, max_files_per_trigger=2
         )
@@ -427,7 +425,7 @@ def _write_sde_arrivals(sf_dir: str, workdir: str) -> None:
             f"events.ts: unsupported physical type {ts_type}; expected a "
             "parquet timestamp (nanos, micros or millis; with or without tz)"
         )
-    # read_events' decode: nanos truncate to whole microseconds, and a
+    # read_table's events decode: nanos truncate to whole microseconds, and a
     # naive timestamp is UTC wall clock (the session tz is pinned to UTC)
     ts = pc.cast(ev["ts"], options=pc.CastOptions(schema.field("ts").type, allow_time_truncate=True))
     ev = ev.set_column(4, "ts", ts).cast(schema)
@@ -506,12 +504,11 @@ WHERE event_id % 7 = 0 AND ts + INTERVAL 150 MINUTE < mx
 def stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cyrela_etl_spark.sources.parquet import read_events
     from cyrela_etl_spark.streaming.ops import run_foreach_batch_topk_view
 
     with tempfile.TemporaryDirectory(prefix="topk_view_", ignore_cleanup_errors=True) as work:
         src = f"{work}/in"
-        read_events(spark, sf_dir).repartition(4).write.parquet(src)
+        read_table(spark, sf_dir, "events").repartition(4).write.parquet(src)
         stream = read_file_stream(
             spark, src, spark.read.parquet(src).schema, max_files_per_trigger=2
         )
@@ -651,10 +648,9 @@ SELECT * FROM unmatched
 def stream_bus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from cyrela_etl_spark.sources.parquet import normalize_event_ts
     from cyrela_etl_spark.streaming import replay_bus_stream, write_bus_envelopes
 
-    events = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
+    events = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
     with tempfile.TemporaryDirectory(prefix="bus_replay_", ignore_cleanup_errors=True) as workdir:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from cyrela_etl_spark.operators.temporal import asof_join, range_join_buckets, time_bucket
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.sources.parquet import read_events as _events
+from cyrela_etl_spark.sources.parquet import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -22,7 +22,7 @@ from cyrela_etl_spark.sources.parquet import read_events as _events
 # at or before the click. Union-merge plan (one shuffle) vs DuckDB ASOF JOIN.
 # ---------------------------------------------------------------------------
 def temporal_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "ts", "user_id", "value")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"), F.col("value").alias("p_value")
@@ -60,7 +60,7 @@ _WINDOW_S = 1800
 
 
 def temporal_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"), F.col("ts").alias("view_ts"), "user_id"
     )
@@ -103,7 +103,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
 # builder runs under Structured Streaming in streamingq).
 # ---------------------------------------------------------------------------
 def temporal_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             time_bucket("ts", "1 hour").alias("bucket"),
@@ -139,7 +139,7 @@ GROUP BY 1, 2
 def temporal_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.temporal import gap_fill
 
-    return gap_fill(_events(spark, sf_dir), width="1 hour")
+    return gap_fill(read_table(spark, sf_dir, "events"), width="1 hour")
 
 
 register(
@@ -170,7 +170,7 @@ FROM spine s LEFT JOIN b ON s.event_type = b.event_type AND s.bucket = b.bucket
 def temporal_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     is_break = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
@@ -222,7 +222,7 @@ def temporal_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.temporal import ohlc_downsample
 
     return ohlc_downsample(
-        _events(spark, sf_dir), key_cols=["event_type"], width="1 hour"
+        read_table(spark, sf_dir, "events"), key_cols=["event_type"], width="1 hour"
     ).select(
         "event_type",
         "bucket_start",
@@ -269,7 +269,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import zscore_anomalies
 
     return zscore_anomalies(
-        _events(spark, sf_dir),
+        read_table(spark, sf_dir, "events"),
         key_col="event_type",
         value_col="value",
         id_col="event_id",
@@ -313,7 +313,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.profile import mad_anomalies
 
     return mad_anomalies(
-        _events(spark, sf_dir),
+        read_table(spark, sf_dir, "events"),
         key_col="event_type",
         value_col="value",
         id_col="event_id",
@@ -370,7 +370,7 @@ WHERE abs(round(0.6745 * ((d.value - d.med) / m.mad), 6)) > 3.5
 def temporal_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     # r14 tail diet: daily feeds the per-type stats AND the deviation
     # join — persist (type x day rows) or the event-scale daily agg runs
     # twice. release: caller
@@ -490,7 +490,7 @@ GROUP BY event_type, n_days, target, k
 # formulation would rescan events three times).
 # ---------------------------------------------------------------------------
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     per_user = ev.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(F.when(F.col("event_type") == "view", F.col("ts")))
@@ -576,7 +576,7 @@ FROM v LEFT JOIN c ON v.user_id = c.user_id
 def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     channel = (F.get_json_object("props", "$.k").cast("long") % 10).alias("channel")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id", channel, F.lit(None).cast("double").alias("value"),
@@ -657,7 +657,7 @@ FROM att GROUP BY 1
 # one IEEE division of two exact counts, rounded on both engines.
 # ---------------------------------------------------------------------------
 def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     cohort = (
         ev.groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"))
@@ -729,7 +729,7 @@ FROM matrix m JOIN sizes s ON m.cohort_week = s.cohort_week
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select("user_id", "ts", "event_id", "event_type")
@@ -801,7 +801,7 @@ _EWMA_ALPHA = 0.2
 
 
 def temporal_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))).alias("seq")
     )
@@ -854,7 +854,7 @@ FROM seq
 def temporal_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changed = F.when(
         F.lag("event_type").over(w).isNull()
@@ -932,7 +932,7 @@ FROM agg
 def temporal_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     vals = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket")).agg(
         (
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double")
@@ -1030,7 +1030,7 @@ FROM f
 # boundaries are bit-identical doubles).
 # ---------------------------------------------------------------------------
 def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     anchor = ev.agg(F.max("ts").alias("anchor"))
     users = (
         ev.filter(F.col("event_type") == "purchase")
@@ -1158,7 +1158,7 @@ FROM scored
 def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     triples = ev.select(
         "event_type", F.date_trunc("hour", "ts").alias("bucket"), "user_id"
     ).distinct()
@@ -1211,7 +1211,7 @@ SELECT DISTINCT event_type, bucket, n_users_24h FROM rolled
 # clicks; the final row is scalar arithmetic. No windows.
 # ---------------------------------------------------------------------------
 def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id",
         "user_id",
@@ -1310,7 +1310,7 @@ FROM agg
 def events_sequence_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = ev.select(
         F.col("event_type").alias("step1"),
@@ -1367,7 +1367,7 @@ _BOT_MIN_GAPS = 5
 def events_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ms = F.unix_millis(F.col("ts"))
     gaps = ev.select(
@@ -1436,7 +1436,7 @@ WHERE n_gaps >= {_BOT_MIN_GAPS} AND sg > 0
 # warehouse serves.
 # ---------------------------------------------------------------------------
 def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     month = F.date_trunc("month", F.col("ts"))
     day = F.date_trunc("day", F.col("ts"))
     dau = ev.groupBy(month.alias("month"), day.alias("day")).agg(
@@ -1485,7 +1485,7 @@ FROM d JOIN m USING (month)
 # totals; output is at most |types|·168 rows.
 # ---------------------------------------------------------------------------
 def events_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
         (F.weekday(F.col("ts")) + 1).cast("long").alias("iso_dow"),
@@ -1535,7 +1535,7 @@ FROM cells c JOIN totals t USING (event_type)
 # computing the same relation, the strongest oracle available).
 # ---------------------------------------------------------------------------
 def temporal_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id", "value"
     )
@@ -1581,7 +1581,7 @@ FROM clicks c ASOF LEFT JOIN purchases p ON c.user_id = p.user_id AND p.p_ts >= 
 # on a strictly coarser key; output user-sized.
 # ---------------------------------------------------------------------------
 def events_type_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     per_type = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -1639,7 +1639,7 @@ _FT_LOOKBACK_S = 7 * 24 * 3600
 def events_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.temporal import range_join_buckets
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     channel = (F.get_json_object("props", "$.k").cast("long") % 10).alias("channel")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("c_id"), channel
@@ -1722,7 +1722,7 @@ GROUP BY coalesce(ft.channel, -1)
 # projection. Output is span-sized (days), never event-sized.
 # ---------------------------------------------------------------------------
 def temporal_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     span = ev.agg(
         F.date_trunc("day", F.min("ts")).alias("d0"),
         F.date_trunc("day", F.max("ts")).alias("d1"),
@@ -1780,7 +1780,7 @@ FROM days
 def window_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     epoch = F.col("ts").cast("long")
     w = (
         Window.partitionBy("user_id")
@@ -1827,7 +1827,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
 def events_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
@@ -1896,7 +1896,7 @@ WHERE (n_events > prev_n AND n_events > next_n)
 def events_gap_magnitude_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     ms = F.unix_millis(F.col("ts"))
     gaps = ev.select(
@@ -2071,7 +2071,7 @@ FROM curve GROUP BY day
 # Plan: ONE per-user shuffle into the native session aggregation.
 # ---------------------------------------------------------------------------
 def temporal_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
@@ -2123,7 +2123,7 @@ FROM s GROUP BY user_id, session_idx
 # one user-keyed join → day agg; shuffles carry user-day rows.
 # ---------------------------------------------------------------------------
 def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     user_days = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).distinct()
@@ -2175,7 +2175,7 @@ GROUP BY u.day
 def temporal_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     weekly = ev.groupBy(
         "event_type", F.date_trunc("week", F.col("ts")).alias("week_start")
     ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
@@ -2237,7 +2237,7 @@ WHERE prev_n IS NOT NULL
 def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     v = F.when(F.col("event_id") % 3 != 0, F.col("value"))
     w = (
         Window.partitionBy("user_id")
@@ -2284,7 +2284,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 # per-type sum; shuffles carry cell rows (≤ types·168·2).
 # ---------------------------------------------------------------------------
 def events_heatmap_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     # millisecond epochs on BOTH engines (unix_millis ≡ epoch_ms, the
     # bot_regularity parity) — second-granularity spellings diverge:
     # DuckDB's epoch() is a fractional DOUBLE whose BIGINT cast ROUNDS
@@ -2389,7 +2389,7 @@ FROM joined GROUP BY event_type
 def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
         F.date_trunc("week", F.col("ts")).alias("week_start"),
@@ -2458,7 +2458,7 @@ _ALERT_THRESHOLD, _ALERT_COOLDOWN_S = 100.0, 600
 def events_alert_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     alerts = ev.filter(F.col("value") > _ALERT_THRESHOLD)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ms = F.unix_millis(F.col("ts"))

@@ -21,7 +21,7 @@ from cyrela_etl_spark.functions.hashing import MERSENNE_PRIME
 from cyrela_etl_spark.operators import dedup as D
 from cyrela_etl_spark.operators import text as X
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.sources.parquet import fan_out
+from cyrela_etl_spark.sources.parquet import fan_out, read_table
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments (the DuckDB spellings of functions/hashing.py and
@@ -60,7 +60,7 @@ def _docs(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
     above it to one task (see sources/parquet.py fan_out; no-op on
     splittable inputs). ``fan=False`` for consumers that shuffle first
     (see corpus())."""
-    raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    raw = read_table(spark, sf_dir, "documents")
     return fan_out(raw) if fan else raw
 
 
@@ -75,7 +75,7 @@ CORPUS_SQL = """
 
 
 def corpus(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text", "lang")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     exact = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text", "lang"
     )
@@ -1376,7 +1376,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_ranks = X.bm25_lite_topk(docs, _BM25_TERMS, k=_RRF_DEPTH).select(
         "doc_id", F.col("rank").alias("r_text")
     )
-    emb = fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    emb = fan_out(read_table(spark, sf_dir, "embeddings"))
     emb_docs = emb.join(docs.select("doc_id"), emb["vec_id"] == docs["doc_id"]).select(
         "vec_id", "embedding"
     )

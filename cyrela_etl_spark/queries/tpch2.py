@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.queries.relational import _t
+from cyrela_etl_spark.sources.parquet import read_table
 
 COST_DEC = "decimal(18,6)"
 VAL_DEC = "decimal(38,6)"
@@ -59,7 +59,7 @@ def _pseudo_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly on a round-half boundary at sf0.1 (1027.3478125 — Spark
     HALF_UP vs DuckDB nearest-even), caught by this round's 10x-scale
     verify pass; integer rationals remove the boundary entirely."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     cost_ppm = F.expr(
         "(CAST(round(l_extendedprice * 100) AS BIGINT) * 10000)"
         " div CAST(l_quantity AS BIGINT)"
@@ -95,18 +95,18 @@ _Q2_SIZE_LO, _Q2_SIZE_HI = 1, 15
 
 def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _pseudo_partsupp(spark, sf_dir)
-    part = _t(spark, sf_dir, "part").filter(
+    part = read_table(spark, sf_dir, "part").filter(
         (F.col("p_type") == _Q2_TYPE)
         & F.col("p_size").between(_Q2_SIZE_LO, _Q2_SIZE_HI)
     )
     sup = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(read_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == _Q2_REGION)),
+            F.broadcast(read_table(spark, sf_dir, "region").filter(F.col("r_name") == _Q2_REGION)),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
@@ -180,13 +180,13 @@ _Q11_REGION = "ASIA"
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _pseudo_partsupp(spark, sf_dir)
     sup = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(read_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == _Q11_REGION)),
+            F.broadcast(read_table(spark, sf_dir, "region").filter(F.col("r_name") == _Q11_REGION)),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey")
@@ -269,12 +269,12 @@ _Q16_SIZES = (1, 4, 9, 14, 19, 23, 36, 45)
 
 def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _pseudo_partsupp(spark, sf_dir)
-    part = _t(spark, sf_dir, "part").filter(
+    part = read_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != _Q16_EXCL_BRAND)
         & (~F.col("p_type").startswith("SMALL"))
         & F.col("p_size").isin(*_Q16_SIZES)
     )
-    complainers = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    complainers = read_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (
@@ -323,14 +323,14 @@ _Q20_NAME_PREFIX = "red "
 
 
 def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     ps = _pseudo_partsupp(spark, sf_dir)
     year_qty = (
         li.filter(F.year("l_shipdate") == _Q20_YEAR)
         .groupBy(F.col("l_partkey").alias("y_partkey"), F.col("l_suppkey").alias("y_suppkey"))
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty_year"))
     )
-    red_parts = _t(spark, sf_dir, "part").filter(
+    red_parts = read_table(spark, sf_dir, "part").filter(
         F.col("p_name").startswith(_Q20_NAME_PREFIX)
     ).select("p_partkey")
     excess = (
@@ -345,13 +345,13 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sup = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(read_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == _Q20_REGION)),
+            F.broadcast(read_table(spark, sf_dir, "region").filter(F.col("r_name") == _Q20_REGION)),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
     )

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.queries.relational import DEC, SQL_DEC, _dec, _t
+from cyrela_etl_spark.queries.relational import DEC, SQL_DEC, _dec
+from cyrela_etl_spark.sources.parquet import read_table
 
 # --------------------------------------------------------------------------
 # q15_top_supplier — revenue view over a quarter; supplier(s) at max.
@@ -35,7 +36,7 @@ _Q15_START, _Q15_END = "1996-01-01", "1996-04-01"
 
 
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(_Q15_START)) & (F.col("l_shipdate") < F.lit(_Q15_END))
     )
     revenue = (
@@ -55,7 +56,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = revenue.agg(F.max("_rev_dec").alias("_mx"))
     return (
         revenue.join(F.broadcast(mx), F.col("_rev_dec") == F.col("_mx"))
-        .join(F.broadcast(_t(spark, sf_dir, "supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(read_table(spark, sf_dir, "supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             F.col("s_suppkey").cast("long").alias("s_suppkey"),
             "s_name",
@@ -88,8 +89,8 @@ _LATE_DAYS = 90
 
 
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(f"INTERVAL {_LATE_DAYS} DAYS")
@@ -106,7 +107,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     waiting = per_order.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
     return (
         waiting.join(
-            F.broadcast(_t(spark, sf_dir, "supplier")), F.col("late_supp") == F.col("s_suppkey")
+            F.broadcast(read_table(spark, sf_dir, "supplier")), F.col("late_supp") == F.col("s_suppkey")
         )
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))

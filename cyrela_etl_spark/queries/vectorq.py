@@ -27,7 +27,7 @@ from cyrela_etl_spark.operators.similarity import (
     rhp_lsh_topk,
 )
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.sources.parquet import fan_out
+from cyrela_etl_spark.sources.parquet import fan_out, read_table
 
 _K = 5
 _N_QUERIES = 8  # query set = vec_id < 8 (small by contract — broadcast side)
@@ -52,7 +52,7 @@ def _emb(spark: SparkSession, sf_dir: str, fan: bool = True) -> DataFrame:
     # lose — each opt-out cites its r18 interleaved A/B. `tools/ab.py
     # <query> --patch cyrela_etl_spark.sources.parquet.fan_out` re-checks
     # a consumer that still fans (an opt-out never calls fan_out).
-    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    raw = read_table(spark, sf_dir, "embeddings")
     return fan_out(raw) if fan else raw
 
 
@@ -1122,7 +1122,7 @@ register("vector_power_iteration_pca", vector_power_iteration_pca, _power_iter_o
 def vector_exact_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.similarity import collapse_exact_embeddings
 
-    base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+    base = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dup = base.unionByName(
         base.filter(F.col("vec_id") % 5 == 0).select(
             (F.col("vec_id") + F.lit(1000000)).alias("vec_id"), "embedding"

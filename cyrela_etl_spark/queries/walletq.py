@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from cyrela_etl_spark.operators.wallet import wallet_pipeline
 from cyrela_etl_spark.queries import register
-from cyrela_etl_spark.sources.parquet import fan_out
+from cyrela_etl_spark.sources.parquet import fan_out, read_table
 
 # orders → wallet-shaped columns, all deterministic expressions. Money
 # columns use exact power-of-two scalings of the 2-decimal o_totalprice so
@@ -39,7 +39,7 @@ def synth_wallet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-free (the sf0.001 plan-budget pin of ZERO still measures
     # that cold shape); on pathological single-row-group files the one
     # round-robin exchange is what restores parallelism.
-    o = fan_out(spark.read.parquet(f"{sf_dir}/orders.parquet"))
+    o = fan_out(read_table(spark, sf_dir, "orders"))
     brand = F.when(F.col("o_orderpriority") == "1-URGENT", "Cyrela")
     brand = brand.when(F.col("o_orderpriority") == "2-HIGH", "Living")
     brand = brand.when(F.col("o_orderpriority") == "3-MEDIUM", "VIVAZ").otherwise("Outra")

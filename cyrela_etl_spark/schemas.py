@@ -129,8 +129,10 @@ TESTDATA_TABLES: list[str] = [
 # The driver regenerates /root/testdata between rounds and has already changed
 # a physical encoding once (events.ts: INT64-nanos → TIMESTAMP(MICROS), round
 # 5→6); any future drift should fail loudly with a named column instead of a
-# DATATYPE_MISMATCH deep inside a query plan. Columns whose set lists several
-# types are encodings the engine explicitly adapts to (sources/parquet.py).
+# DATATYPE_MISMATCH deep inside a query plan. sources/parquet.py read_table —
+# the one reader of these tables — checks every read against this map.
+# Columns whose set lists several types are encodings the engine explicitly
+# adapts to.
 TESTDATA_EXPECTED: dict[str, dict[str, set[str]]] = {
     "region": {"r_regionkey": {"int"}, "r_name": {"string"}},
     "nation": {"n_nationkey": {"int"}, "n_name": {"string"}, "n_regionkey": {"int"}},

@@ -7,8 +7,7 @@ from cyrela_etl_spark.sources.jdbc import write_jdbc
 from cyrela_etl_spark.sources.jsonl import read_jsonl, write_jsonl
 from cyrela_etl_spark.sources.parquet import (
     load_tables,
-    read_events,
-    read_parquet,
+    read_table,
     write_parquet,
 )
 from cyrela_etl_spark.sources.zones import ZoneStore
@@ -19,8 +18,7 @@ __all__ = [
     "write_csv",
     "read_jsonl",
     "write_jsonl",
-    "read_parquet",
-    "read_events",
+    "read_table",
     "write_parquet",
     "load_tables",
     "write_jdbc",

@@ -135,15 +135,20 @@ def _estimate_natural_splits(
     return est
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Open the testdata table ``{sf_dir}/{name}.parquet`` — the
+    engine's one reader for it.
 
+    Every read runs the schema-drift tripwire (``check_table_schema``
+    against schemas.TESTDATA_EXPECTED) on the loaded schema, so a drifted
+    column fails here, named, instead of deep inside a query plan or —
+    worse — as a silently different result. ``df.schema`` is already
+    resolved when the read returns; the check costs no Spark job.
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read the events table, normalizing ``ts`` to a session-tz timestamp.
-
-    A real lake contains parquet written by multiple writers, so the reader
-    adapts to the physical encoding of ``ts`` instead of assuming one:
+    ``events`` is returned with ``ts`` normalized to a session-tz
+    timestamp. A real lake contains parquet written by multiple writers,
+    so the reader adapts to the physical encoding of ``ts`` instead of
+    assuming one:
 
     - INT64 TIMESTAMP(NANOS): Spark's reader rejects this outright unless
       ``spark.sql.legacy.parquet.nanosAsLong`` is set — a session default
@@ -162,8 +167,9 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually loaded. A session not built by ``get_spark`` must set it
     itself to read nanos-encoded files.
     """
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return normalize_event_ts(df)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    check_table_schema(name, df.schema)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def events_long_ts_schema(spark: SparkSession, sf_dir: str):
@@ -246,22 +252,14 @@ def check_table_schema(name: str, schema: T.StructType) -> None:
 
 
 def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> dict[str, DataFrame]:
-    """Load the driver testdata tables (TESTDATA.md) and register temp views.
-
-    Returns {name: DataFrame}; each is also available to ``spark.sql`` as a
-    temp view of the same name. Each loaded schema is checked against the
-    supported-encodings map (schema-drift tripwire); ``events`` is loaded
-    through its dtype-adaptive reader so ``ts`` is always a timestamp.
+    """Load the testdata tables (TESTDATA.md) through ``read_table``
+    and register each as a temp view of the same name for ``spark.sql``.
+    Returns {name: DataFrame}.
     """
     from cyrela_etl_spark.schemas import TESTDATA_TABLES
 
     out: dict[str, DataFrame] = {}
     for name in tables or TESTDATA_TABLES:
-        if name == "events":
-            df = read_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        check_table_schema(name, df.schema)
-        df.createOrReplaceTempView(name)
-        out[name] = df
+        out[name] = read_table(spark, sf_dir, name)
+        out[name].createOrReplaceTempView(name)
     return out

@@ -63,8 +63,8 @@ def _windowed_reference(spark, sf_dir):
     )
 
 
-def _write_docs(spark, path: str, rows: list[tuple[int, str]]) -> str:
-    spark.createDataFrame(rows, "doc_id LONG, text STRING").write.mode(
+def _write_docs(spark, pad, path: str, rows: list[tuple[int, str]]) -> str:
+    pad(spark.createDataFrame(rows, "doc_id LONG, text STRING"), "documents").write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "documents.parquet"))
     return path
@@ -72,7 +72,7 @@ def _write_docs(spark, path: str, rows: list[tuple[int, str]]) -> str:
 
 @pytest.mark.slow  # r18 slow tier: heavy model-check/e2e; default run skips (driver verify budget), full suite = -m ""
 def test_distributed_plan_matches_windowed_reference_on_adversarial_corpora(
-    spark, tmp_path
+    spark, tmp_path, pad_testdata_table
 ):
     from cyrela_etl_spark.queries.textq import corpus_curriculum_stages
 
@@ -89,7 +89,7 @@ def test_distributed_plan_matches_windowed_reference_on_adversarial_corpora(
         + [(100 + i, " ".join(["w"] * (3 + i))) for i in range(10)],
     }
     for name, rows in corpora.items():
-        d = _write_docs(spark, str(tmp_path / name), rows)
+        d = _write_docs(spark, pad_testdata_table, str(tmp_path / name), rows)
         got = {
             (r["doc_id"], r["n_tokens"], r["position"], r["stage"])
             for r in corpus_curriculum_stages(spark, d)

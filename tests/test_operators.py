@@ -245,9 +245,9 @@ def test_minmax_window_parity_with_grouped_map(spark, sf_dir):
     import pandas as pd
 
     from cyrela_etl_spark.operators.grouped import minmax_normalize, minmax_normalize_window
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     a = minmax_normalize(ev).toPandas().sort_values("event_id").reset_index(drop=True)
     b = minmax_normalize_window(ev).toPandas().sort_values("event_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b[a.columns])

@@ -22,10 +22,10 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def partitioned_layout(spark):
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
     work = tempfile.mkdtemp(prefix="part_prune_")
-    ev = read_events(spark, SF)
+    ev = read_table(spark, SF, "events")
     counts = {r["event_type"]: r["n"] for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()}
     # partitioned: one directory per event_type; flat: same data, no layout
     ev.write.partitionBy("event_type").mode("overwrite").parquet(f"{work}/by_type")

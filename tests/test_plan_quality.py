@@ -175,9 +175,9 @@ def test_triangle_closure_is_equi_join_with_cached_edges(spark):
 
 def test_equidepth_histogram_broadcasts_bounds_no_global_sort(spark, sf_dir):
     from cyrela_etl_spark.operators.profile import equidepth_histogram
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
-    plan = _plan(equidepth_histogram(read_events(spark, sf_dir), "event_type", "value"))
+    plan = _plan(equidepth_histogram(read_table(spark, sf_dir, "events"), "event_type", "value"))
     assert "BroadcastHashJoin" in plan          # boundary table broadcasts back
     assert "Sort [" not in plan or "SortMergeJoin" not in plan  # no global ntile sort
     assert "Window" not in plan                 # bin assignment is a projection

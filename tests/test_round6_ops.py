@@ -162,9 +162,9 @@ def test_ohlc_deterministic_open_close(spark):
 
 def test_ohlc_single_exchange(spark):
     from cyrela_etl_spark.operators.temporal import ohlc_downsample
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
-    plan = _plan(ohlc_downsample(read_events(spark, SF), key_cols=["event_type"]))
+    plan = _plan(ohlc_downsample(read_table(spark, SF, "events"), key_cols=["event_type"]))
     # Window exchange on (event_type, bucket) is reused by the groupBy —
     # exactly one shuffle in the whole plan.
     assert plan.count("Exchange hashpartitioning") == 1
@@ -199,11 +199,11 @@ def test_skew_profile_no_global_sort(spark):
 # foreachBatch upsert
 # ---------------------------------------------------------------------------
 def test_foreach_batch_upsert_converges_to_batch_latest(spark, tmp_path):
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming.ops import read_file_stream, run_foreach_batch_upsert
 
     src = str(tmp_path / "in")
-    read_events(spark, SF).repartition(4).write.parquet(src)
+    read_table(spark, SF, "events").repartition(4).write.parquet(src)
     stream = read_file_stream(spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1)
     final = run_foreach_batch_upsert(
         stream,
@@ -215,7 +215,7 @@ def test_foreach_batch_upsert_converges_to_batch_latest(spark, tmp_path):
 
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     batch = (
-        read_events(spark, SF)
+        read_table(spark, SF, "events")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
@@ -486,9 +486,9 @@ def test_zscore_anomalies_flags_outlier(spark):
 
 def test_zscore_stats_join_is_broadcast(spark):
     from cyrela_etl_spark.operators.profile import zscore_anomalies
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
-    plan = _plan(zscore_anomalies(read_events(spark, SF), "event_type", "value", "event_id"))
+    plan = _plan(zscore_anomalies(read_table(spark, SF, "events"), "event_type", "value", "event_id"))
     assert "BroadcastHashJoin" in plan
 
 

@@ -38,7 +38,7 @@ def test_ewma_recurrence_hand_computed(spark, monkeypatch):
         ],
         "user_id long, ts timestamp, event_id long, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = {r["user_id"]: r for r in temporalq.temporal_ewma(spark, SF).collect()}
     # e1=10; e2=.2*20+.8*10=12; e3=.2*30+.8*12=15.6
     assert rows[1]["ewma_value"] == 15.6
@@ -59,7 +59,7 @@ def test_ewma_ignores_input_row_order(spark, monkeypatch):
         ],
         "user_id long, ts timestamp, event_id long, value double",
     ).repartition(4)
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: shuffled)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: shuffled)
     [row] = temporalq.temporal_ewma(spark, SF).collect()
     assert row["ewma_value"] == 15.6
 
@@ -81,7 +81,7 @@ def test_markov_counts_and_probs(spark, monkeypatch):
         ],
         "user_id long, ts timestamp, event_id long, event_type string",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: seq)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: seq)
     out = {
         (r["from_type"], r["to_type"]): r
         for r in temporalq.events_markov_transitions(spark, SF).collect()
@@ -224,7 +224,7 @@ def test_scd2_runs_hand_computed(spark, monkeypatch):
         ],
         "user_id long, ts timestamp, event_id long, event_type string",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: log)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: log)
     rows = sorted(
         temporalq.temporal_scd2_intervals(spark, SF).collect(),
         key=lambda r: r["run_id"],
@@ -398,7 +398,7 @@ def test_interpolate_hand_computed(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: ev)
     rows = {
         r["bucket"].hour: r for r in temporalq.temporal_interpolate(spark, SF).collect()
     }
@@ -574,7 +574,7 @@ def test_rolling_actives_hand_computed(spark, monkeypatch):
         [at(0, 1), at(0, 2), at(1, 1), (2503, datetime.datetime(2026, 1, 6, 1), 3, "view", 1.0)],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: ev)
     rows = {
         r["bucket"]: r["n_users_24h"]
         for r in temporalq.events_rolling_active_users(spark, SF).collect()
@@ -687,7 +687,7 @@ def test_gopher_rules_hand_computed(spark, monkeypatch):
         [(1, good), (2, short), (3, symbols)], "doc_id long, text string"
     )
     # route the query's documents read to the fixture frame
-    monkeypatch.setattr(spark.read.__class__, "parquet", lambda self, path: tiny)
+    monkeypatch.setattr(textq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = {r["doc_id"]: r for r in textq.quality_gopher_rules(spark, SF).collect()}
     assert rows[1]["keep"] is True and rows[1]["first_failed_rule"] is None
     assert rows[2]["keep"] is False and rows[2]["first_failed_rule"] == "min_words"
@@ -749,7 +749,7 @@ def test_ab_test_hand_computed(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: ev)
     [row] = temporalq.events_ab_test(spark, SF).collect()
     assert (row["n_a"], row["x_a"], row["n_b"], row["x_b"]) == (2, 1, 2, 2)
     assert row["rate_a"] == 0.5 and row["rate_b"] == 1.0

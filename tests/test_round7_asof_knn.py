@@ -75,7 +75,7 @@ def test_gini_diversity_hand_computed(spark, monkeypatch):
     tiny = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     got = {r["user_id"]: r for r in temporalq.events_type_diversity(spark, "x").collect()}
     # user 1: N=4, s2=8 -> (1e6*(16-8)) div 16 = 500000 (uniform over 2 types)
     assert got[1]["n_types"] == 2 and got[1]["gini_ppm"] == 500_000

@@ -26,7 +26,7 @@ def test_calendar_dim_iso_contract(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = {r["day"].day: r for r in temporalq.temporal_calendar_dim(spark, "x").collect()}
     assert len(rows) == 4  # Jan 1..4 inclusive
     assert rows[1]["iso_dow"] == 4 and rows[1]["is_weekend"] is False
@@ -44,7 +44,7 @@ def test_time_range_frame_trailing_hour(spark, monkeypatch):
         [ev(1, 0), ev(2, 30), ev(3, 60), ev(4, 61), ev(5, 200)],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     got = {
         r["event_id"]: r["n_trailing_1h"]
         for r in temporalq.window_time_range_frame(spark, "x").collect()

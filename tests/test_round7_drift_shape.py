@@ -28,7 +28,7 @@ def test_cusum_window_identity_matches_recursive_form(spark, monkeypatch):
     tiny = spark.createDataFrame(
         rows, "event_id long, ts timestamp, event_type string, value double"
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     row = temporalq.temporal_cusum_drift(spark, "ignored").collect()[0]
     assert row["n_days"] == 5
     assert row["target_per_day"] == 14
@@ -50,7 +50,7 @@ def test_cusum_steady_series_no_alarm(spark, monkeypatch):
     tiny = spark.createDataFrame(
         rows, "event_id long, ts timestamp, event_type string, value double"
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     row = temporalq.temporal_cusum_drift(spark, "ignored").collect()[0]
     # constant series: every deviation is -k / -k, both CUSUMs pinned at 0
     assert row["peak_high"] == 0

@@ -43,7 +43,7 @@ def test_set_ops_all_multiplicity(spark, monkeypatch):
         "o_custkey long, o_orderpriority string, o_orderstatus string",
     )
     monkeypatch.setattr(
-        relational, "_t", lambda spark, sf_dir, name: orders if name == "orders" else None
+        relational, "read_table", lambda spark, sf_dir, name: orders if name == "orders" else None
     )
     rows = relational.set_ops_all(spark, "x").collect()
     got = sorted((r["custkey"], r["op"]) for r in rows)

@@ -86,7 +86,7 @@ def test_readability_hand_computed_on_punctuated_text(spark, monkeypatch):
     pdf = pd.DataFrame({"doc_id": [1], "text": ["the cat sat. the dog ran!"]})
 
     monkeypatch.setattr(
-        type(spark.read), "parquet", lambda self, p: spark.createDataFrame(pdf)
+        textq, "read_table", lambda s, d, name: spark.createDataFrame(pdf)
     )
     out = textq.text_readability(spark, SF).collect()[0]
     assert out["n_words"] == 6
@@ -102,7 +102,7 @@ def test_readability_zero_word_docs_excluded(spark, monkeypatch):
 
     pdf = pd.DataFrame({"doc_id": [1, 2], "text": ["   ", "a b"]})
     monkeypatch.setattr(
-        type(spark.read), "parquet", lambda self, p: spark.createDataFrame(pdf)
+        textq, "read_table", lambda s, d, name: spark.createDataFrame(pdf)
     )
     out = textq.text_readability(spark, SF).toPandas()
     assert list(out["doc_id"]) == [2]
@@ -141,7 +141,7 @@ def test_trigrams_hand_built_paths(spark, monkeypatch):
                 }
             )
     ev = spark.createDataFrame(pd.DataFrame(rows))
-    monkeypatch.setattr(temporalq, "_events", lambda s, d: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda s, d, name: ev)
     out = [
         (r["step1"], r["step2"], r["step3"], r["n_paths"])
         for r in temporalq.events_sequence_trigrams(spark, SF).collect()
@@ -172,5 +172,5 @@ def test_trigrams_never_cross_users(spark, monkeypatch):
                 }
             )
     ev = spark.createDataFrame(pd.DataFrame(rows))
-    monkeypatch.setattr(temporalq, "_events", lambda s, d: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda s, d, name: ev)
     assert temporalq.events_sequence_trigrams(spark, SF).count() == 0

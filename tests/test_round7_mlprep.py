@@ -98,10 +98,10 @@ def test_feature_hash_fixed_dimensionality_and_mass(spark):
     3 per event; distinct features per bucket is bounded by the (tiny)
     true vocabulary."""
     from cyrela_etl_spark.queries.mlprepq import ml_feature_hash
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
     out = ml_feature_hash(spark, SF).toPandas()
-    n_events = read_events(spark, SF).count()
+    n_events = read_table(spark, SF, "events").count()
     assert out["bucket"].between(0, 63).all()
     assert out["n_features"].sum() == 3 * n_events
     assert (out["signed_count"].abs() <= out["n_features"]).all()

@@ -6,7 +6,7 @@ from __future__ import annotations
 import datetime
 
 
-def test_novelty_conservation_law(spark, tmp_path):
+def test_novelty_conservation_law(spark, tmp_path, pad_testdata_table):
     """Σ n_first over documents counts each distinct corpus gram exactly
     once; a pure replica scores novelty 0."""
     from cyrela_etl_spark.queries.textq import text_ngram_novelty
@@ -19,7 +19,7 @@ def test_novelty_conservation_law(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    docs.write.parquet(f"{tmp_path}/documents.parquet")
+    pad_testdata_table(docs, "documents").write.parquet(f"{tmp_path}/documents.parquet")
     rows = {r["doc_id"]: r for r in text_ngram_novelty(spark, str(tmp_path)).collect()}
     assert rows[1]["novelty_ppm"] == 1_000_000
     assert rows[2]["novelty_ppm"] == 0  # every gram first seen in doc 1
@@ -51,7 +51,7 @@ def test_first_touch_earliest_click_wins(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = {r["channel"]: r for r in temporalq.events_first_touch(spark, "x").collect()}
     assert rows[3]["n_purchases"] == 1 and rows[3]["revenue"] == 50.0
     assert rows[-1]["n_purchases"] == 1 and rows[-1]["revenue"] == 10.0
@@ -66,7 +66,7 @@ def test_listagg_order_is_input_order_free(spark, monkeypatch):
         "n_name string, n_regionkey int",
     ).repartition(3)
     monkeypatch.setattr(
-        relational, "_t", lambda spark, sf_dir, name: tiny if name == "nation" else None
+        relational, "read_table", lambda spark, sf_dir, name: tiny if name == "nation" else None
     )
     row = relational.agg_listagg(spark, "x").collect()[0]
     assert row["names_csv"] == "ARGENTINA,BRAZIL,CANADA"

@@ -23,7 +23,7 @@ def test_peak_days_endpoints_excluded(spark, monkeypatch):
     # series 5, 9, 3, 3, 8: day2 is a peak, day3 a valley (strict only on
     # one side -> day4 is nothing), endpoints never classified
     tiny = _mk_events(spark, [5, 9, 3, 3, 8])
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     got = {r["day"].day: r["kind"] for r in temporalq.events_peak_days(spark, "x").collect()}
     assert got == {2: "peak"}  # day3 (3) ties day4 (3): not strictly below both
 
@@ -32,7 +32,7 @@ def test_peak_and_valley_detected(spark, monkeypatch):
     from cyrela_etl_spark.queries import temporalq
 
     tiny = _mk_events(spark, [5, 9, 3, 8, 6])
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     got = {r["day"].day: r["kind"] for r in temporalq.events_peak_days(spark, "x").collect()}
     assert got == {2: "peak", 3: "valley", 4: "peak"}
 
@@ -51,7 +51,7 @@ def test_gap_histogram_digit_buckets(spark, monkeypatch):
     )
     from cyrela_etl_spark.queries import temporalq as tq
 
-    monkeypatch.setattr(tq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(tq, "read_table", lambda spark, sf_dir, name: tiny)
     got = {
         r["gap_digits"]: (r["n_gaps"], r["share_ppm"])
         for r in tq.events_gap_magnitude_histogram(spark, "x").collect()
@@ -59,14 +59,14 @@ def test_gap_histogram_digit_buckets(spark, monkeypatch):
     assert got == {1: (1, 333333), 3: (1, 333333), 4: (1, 333333)}
 
 
-def test_curriculum_stage_order_and_budget(spark, tmp_path):
+def test_curriculum_stage_order_and_budget(spark, tmp_path, pad_testdata_table):
     from cyrela_etl_spark.queries.textq import corpus_curriculum_stages
 
     docs = spark.createDataFrame(
         [(i, " ".join(["w"] * n)) for i, n in enumerate([1, 2, 3, 4, 5, 6, 7, 8])],
         "doc_id long, text string",
     )
-    docs.write.parquet(f"{tmp_path}/documents.parquet")
+    pad_testdata_table(docs, "documents").write.parquet(f"{tmp_path}/documents.parquet")
     rows = {r["doc_id"]: r for r in corpus_curriculum_stages(spark, str(tmp_path)).collect()}
     # shortest docs lead the curriculum; 8 docs / 4 stages = 2 each
     assert rows[0]["stage"] == 1 and rows[0]["position"] == 1
@@ -76,7 +76,7 @@ def test_curriculum_stage_order_and_budget(spark, tmp_path):
     assert rows[0]["stage_share_ppm"] == 83333
 
 
-def test_bpe_pairs_hand_computed(spark, tmp_path):
+def test_bpe_pairs_hand_computed(spark, tmp_path, pad_testdata_table):
     from cyrela_etl_spark.queries.textq import text_bpe_pair_stats
 
     docs = spark.createDataFrame(
@@ -84,7 +84,7 @@ def test_bpe_pairs_hand_computed(spark, tmp_path):
         [(1, "abab ab x")],
         "doc_id long, text string",
     )
-    docs.write.parquet(f"{tmp_path}/documents.parquet")
+    pad_testdata_table(docs, "documents").write.parquet(f"{tmp_path}/documents.parquet")
     rows = [(r["pair"], r["n_occurrences"]) for r in text_bpe_pair_stats(spark, str(tmp_path)).collect()]
     assert rows == [("ab", 3), ("ba", 1)]
 
@@ -110,7 +110,7 @@ def test_concurrency_curve_meeting_rooms(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = temporalq.temporal_concurrency_curve(spark, "x").collect()
     assert len(rows) == 1
     # at 10:05-10:10 three would overlap only if the touch counted: A,B

@@ -10,13 +10,13 @@ import datetime
 # ---------------------------------------------------------------------------
 # text_rake_keywords
 # ---------------------------------------------------------------------------
-def test_rake_hand_computed(spark, tmp_path):
+def test_rake_hand_computed(spark, tmp_path, pad_testdata_table):
     from cyrela_etl_spark.queries.textq import text_rake_keywords
 
     docs = spark.createDataFrame(
         [(1, "red apple and green apple")], "doc_id long, text string"
     )
-    docs.write.parquet(f"{tmp_path}/documents.parquet")
+    pad_testdata_table(docs, "documents").write.parquet(f"{tmp_path}/documents.parquet")
     rows = text_rake_keywords(spark, str(tmp_path)).collect()
     # phrases: "red apple", "green apple" (split on stopword "and");
     # deg/freq: red 2/1, green 2/1, apple 4/2 -> all 2.0 => 2e6 ppm;
@@ -27,7 +27,7 @@ def test_rake_hand_computed(spark, tmp_path):
     ]
 
 
-def test_rake_long_runs_dropped(spark, tmp_path):
+def test_rake_long_runs_dropped(spark, tmp_path, pad_testdata_table):
     """A stopword-free run longer than the 4-token cap contributes
     neither a phrase nor word-score mass."""
     from cyrela_etl_spark.queries.textq import text_rake_keywords
@@ -36,7 +36,7 @@ def test_rake_long_runs_dropped(spark, tmp_path):
         [(1, "one two three four five"), (2, "big data")],
         "doc_id long, text string",
     )
-    docs.write.parquet(f"{tmp_path}/documents.parquet")
+    pad_testdata_table(docs, "documents").write.parquet(f"{tmp_path}/documents.parquet")
     rows = text_rake_keywords(spark, str(tmp_path)).collect()
     assert [r["phrase"] for r in rows] == ["big data"]
 
@@ -77,7 +77,7 @@ def test_stickiness_hand_computed(spark, monkeypatch):
         [ev(1, 1), ev(1, 2), ev(2, 2), ev(2, 3)],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = {
         r["day"].day: r for r in temporalq.events_stickiness(spark, "ignored").collect()
     }

@@ -16,7 +16,7 @@ def test_regression_perfect_line(spark, monkeypatch):
         "l_returnflag string, l_quantity double, l_extendedprice double",
     )
     monkeypatch.setattr(
-        relational, "_t", lambda spark, sf_dir, name: tiny if name == "lineitem" else None
+        relational, "read_table", lambda spark, sf_dir, name: tiny if name == "lineitem" else None
     )
     rows = {r["l_returnflag"]: r for r in relational.agg_regression_slope(spark, "x").collect()}
     assert rows["N"]["slope"] == 2.0
@@ -38,7 +38,7 @@ def test_seasonality_iso_weekday_mapping(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = {
         (r["iso_dow"], r["hour_of_day"]): r
         for r in temporalq.events_seasonality(spark, "x").collect()
@@ -49,13 +49,13 @@ def test_seasonality_iso_weekday_mapping(spark, monkeypatch):
     assert rows[(7, 23)]["share_ppm"] == 333333
 
 
-def test_bitwise_hand_computed(spark, tmp_path):
+def test_bitwise_hand_computed(spark, tmp_path, pad_testdata_table):
     from cyrela_etl_spark.queries.functionsq import func_bitwise
 
     orders = spark.createDataFrame(
         [(1, "O"), (2, "O"), (3, "O")], "o_orderkey long, o_orderstatus string"
     )
-    orders.write.parquet(f"{tmp_path}/orders.parquet")
+    pad_testdata_table(orders, "orders").write.parquet(f"{tmp_path}/orders.parquet")
     row = func_bitwise(spark, str(tmp_path)).collect()[0]
     assert row["n_orders"] == 3
     assert row["or_low12"] == 3
@@ -75,7 +75,7 @@ def test_recursive_cte_bfs_closed_form(spark, monkeypatch):
         [(i, "SEG") for i in range(100, 130)], "c_custkey long, c_mktsegment string"
     )
     monkeypatch.setattr(
-        relational, "_t", lambda spark, sf_dir, name: cust if name == "customer" else None
+        relational, "read_table", lambda spark, sf_dir, name: cust if name == "customer" else None
     )
     rows = {r["custkey"]: r["min_hops"] for r in relational.sql_recursive_cte(spark, "x").collect()}
     assert len(rows) == 16  # seed + 15 reachable within 5 hops
@@ -102,7 +102,7 @@ def test_native_session_window_inclusive_gap_boundary(spark, monkeypatch):
         ],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    monkeypatch.setattr(temporalq, "_events", lambda spark, sf_dir: tiny)
+    monkeypatch.setattr(temporalq, "read_table", lambda spark, sf_dir, name: tiny)
     rows = sorted(
         temporalq.temporal_session_window_native(spark, "x").collect(),
         key=lambda r: r["session_start"],

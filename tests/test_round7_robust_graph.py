@@ -101,7 +101,7 @@ def test_weighted_median_hand_computed(spark, monkeypatch):
         "l_returnflag string, l_extendedprice double, l_quantity double",
     )
     monkeypatch.setattr(
-        relational, "_t", lambda spark, sf_dir, name: tiny if name == "lineitem" else None
+        relational, "read_table", lambda spark, sf_dir, name: tiny if name == "lineitem" else None
     )
     rows = {
         r["l_returnflag"]: r
@@ -125,7 +125,7 @@ def test_weighted_median_tied_values_share_cumweight(spark, monkeypatch):
         "l_returnflag string, l_extendedprice double, l_quantity double",
     ).repartition(3)
     monkeypatch.setattr(
-        relational, "_t", lambda spark, sf_dir, name: tiny if name == "lineitem" else None
+        relational, "read_table", lambda spark, sf_dir, name: tiny if name == "lineitem" else None
     )
     row = relational.agg_weighted_median(spark, "ignored").collect()[0]
     # both 10s carry cum weight 2 (>= 3/2 doubled), so the median is 10

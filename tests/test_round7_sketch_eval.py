@@ -32,10 +32,10 @@ def test_countmin_estimate_bounded_by_total_mass(spark):
     """No counter can exceed the total event count — a row-hash bug that
     merged rows would break this."""
     from cyrela_etl_spark.queries.relational import scale_countmin_estimate
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
     out = scale_countmin_estimate(spark, SF).toPandas()
-    total = read_events(spark, SF).count()
+    total = read_table(spark, SF, "events").count()
     assert (out["cms_estimate"] <= total).all()
 
 
@@ -102,7 +102,7 @@ def test_bot_regularity_flags_metronome_not_burst(spark, monkeypatch):
 
     rows = _ev_rows(1, [60] * 6) + _ev_rows(2, [1, 600, 5, 900, 2, 1200])
     ev = spark.createDataFrame(pd.DataFrame(rows))
-    monkeypatch.setattr(temporalq, "_events", lambda s, d: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda s, d, name: ev)
     out = temporalq.events_bot_regularity(spark, SF).toPandas().set_index("user_id")
     assert bool(out.loc[1, "is_regular"]) is True
     assert out.loc[1, "gap_cv"] == 0.0
@@ -118,7 +118,7 @@ def test_bot_regularity_min_gap_floor(spark, monkeypatch):
 
     rows = _ev_rows(1, [60] * 3)  # 3 gaps < the 5-gap floor
     ev = spark.createDataFrame(pd.DataFrame(rows))
-    monkeypatch.setattr(temporalq, "_events", lambda s, d: ev)
+    monkeypatch.setattr(temporalq, "read_table", lambda s, d, name: ev)
     assert temporalq.events_bot_regularity(spark, SF).count() == 0
 
 

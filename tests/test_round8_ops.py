@@ -76,9 +76,11 @@ def test_q20_excludes_exact_half_lifetime_shipper(spark, tmp_path):
     }
     schemas = {
         "lineitem": pa.schema([
-            ("l_partkey", pa.int64()), ("l_suppkey", pa.int64()),
-            ("l_quantity", pa.float64()), ("l_extendedprice", pa.float64()),
-            ("l_shipdate", pa.timestamp("us")),
+            ("l_orderkey", pa.int64()), ("l_partkey", pa.int64()), ("l_suppkey", pa.int64()),
+            ("l_linenumber", pa.int32()), ("l_quantity", pa.float64()),
+            ("l_extendedprice", pa.float64()), ("l_discount", pa.float64()),
+            ("l_tax", pa.float64()), ("l_returnflag", pa.string()),
+            ("l_linestatus", pa.string()), ("l_shipdate", pa.timestamp("us")),
         ]),
         "part": pa.schema([
             ("p_partkey", pa.int64()), ("p_name", pa.string()), ("p_brand", pa.string()),

@@ -79,9 +79,9 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     """Hive-partitioned zone writes must let a date filter prune at the
     source: the scan's partition count is the proof (at 100 TB/day this is
     reading one day, not the lake)."""
-    from cyrela_etl_spark.sources.parquet import read_events, write_parquet
+    from cyrela_etl_spark.sources.parquet import read_table, write_parquet
 
-    ev = read_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
+    ev = read_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     path = str(tmp_path / "events_by_day")
     write_parquet(ev, path, partition_by=["day"])
     back = spark.read.parquet(path)
@@ -106,14 +106,14 @@ def test_stateful_running_totals_resume_across_batches(spark, sf_dir):
     import shutil
     import tempfile
 
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming import read_file_stream, run_available_now
     from cyrela_etl_spark.streaming.stateful import running_totals
 
     # Per-user-disjoint split across two files: ts order across batches is
     # not guaranteed for one key, so keep each key's rows in one file while
     # the OPERATOR still runs across 2 sequential micro-batches.
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="ev_split_")
     ev.filter("user_id < 75").coalesce(1).write.parquet(f"{tmp}/f1")
     ev.filter("user_id >= 75").coalesce(1).write.parquet(f"{tmp}/f2")

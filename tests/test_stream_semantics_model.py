@@ -39,8 +39,8 @@ from datetime import timedelta
 
 def test_stream_dedup_expiry_matches_state_machine_model(spark, sf_dir, tmp_path):
     """The query builds its arrivals with pyarrow, so its ``ts`` decode is
-    pinned to ``read_events`` on two more copies of the events table: ``ts``
-    as timestamp[ns] drains to the model built from ``read_events`` on that
+    pinned to ``read_table`` on two more copies of the events table: ``ts``
+    as timestamp[ns] drains to the model built from ``read_table`` on that
     copy, and ``ts`` as a raw int64 raises SchemaDriftError."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -67,10 +67,10 @@ def test_stream_dedup_expiry_matches_state_machine_model(spark, sf_dir, tmp_path
 
 def _check_against_model(spark, sf_dir):
     from cyrela_etl_spark.queries.streamingq import stream_dedup_expiry
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
     cols = ["event_id", "user_id", "event_type", "value", "ts"]
-    base = [tuple(r[c] for c in cols) for r in read_events(spark, sf_dir).select(*cols).collect()]
+    base = [tuple(r[c] for c in cols) for r in read_table(spark, sf_dir, "events").select(*cols).collect()]
     mx = max(r[4] for r in base)
     delay = timedelta(hours=1)
 

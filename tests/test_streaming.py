@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from cyrela_etl_spark.sources.parquet import events_long_ts_schema, normalize_event_ts, read_events
+from cyrela_etl_spark.sources.parquet import events_long_ts_schema, normalize_event_ts, read_table
 from cyrela_etl_spark.streaming import (
     dedup_within_watermark,
     read_file_stream,
@@ -26,7 +26,7 @@ def _canon(df):
 
 
 def test_tumbling_stream_equals_batch(spark, sf_dir):
-    batch = tumbling_counts(read_events(spark, sf_dir), width="1 hour")
+    batch = tumbling_counts(read_table(spark, sf_dir, "events"), width="1 hour")
     streamed = run_available_now(
         tumbling_counts(_stream(spark, sf_dir), width="1 hour"),
         "t_tumbling_eq", output_mode="complete",
@@ -39,7 +39,7 @@ def test_stream_dedup_reconstructs_distinct(spark, sf_dir):
     doubled = s.unionByName(_stream(spark, sf_dir))
     deduped = dedup_within_watermark(doubled, keys=["event_id"], watermark="1 hour")
     out = run_available_now(deduped.select("event_id"), "t_dedup_eq", output_mode="append")
-    n_distinct = read_events(spark, sf_dir).select("event_id").distinct().count()
+    n_distinct = read_table(spark, sf_dir, "events").select("event_id").distinct().count()
     assert out.count() == n_distinct
 
 
@@ -151,7 +151,7 @@ def test_bus_envelope_roundtrip_matches_batch(spark, sf_dir, tmp_path):
     relation. Swapping the parquet leg for format('kafka') is config."""
     from pyspark.sql import functions as F
 
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming import (
         from_bus_envelope,
         read_file_stream,
@@ -160,7 +160,7 @@ def test_bus_envelope_roundtrip_matches_batch(spark, sf_dir, tmp_path):
         tumbling_counts,
     )
 
-    events = read_events(spark, sf_dir).limit(2000)
+    events = read_table(spark, sf_dir, "events").limit(2000)
     env = to_bus_envelope(events, key_col="user_id", topic="events", ts_col="ts")
     # the envelope schema IS Kafka's source schema
     assert [(f.name, f.dataType.simpleString()) for f in env.schema.fields] == [
@@ -276,13 +276,13 @@ def test_outer_interval_join_withholds_unexpired_tail(spark):
     from pyspark.sql import functions as F
 
     from cyrela_etl_spark.queries.streamingq import stream_interval_join_outer
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
 
     sf = "/root/testdata/sf0.001"
     out = stream_interval_join_outer(spark, sf)
     nulls = out.filter(F.col("purchase_id").isNull()).collect()
     assert nulls, "expected some expired unmatched clicks"
-    ev = read_events(spark, sf)
+    ev = read_table(spark, sf, "events")
     max_click, max_purchase = (
         ev.groupBy()
         .agg(
@@ -319,10 +319,10 @@ def test_bus_replay_is_multi_micro_batch(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming import replay_bus_stream, write_bus_envelopes
 
-    events = read_events(spark, sf_dir).select(
+    events = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
     log_dir = str(tmp_path / "bus_log")
@@ -384,14 +384,14 @@ def test_checkpoint_recovery_resumes_replay_exactly_once(spark, sf_dir, tmp_path
 
     from pyspark.sql import functions as F
 
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming import (
         replay_bus_stream,
         run_available_now,
         write_bus_envelopes,
     )
 
-    events = read_events(spark, sf_dir).select(
+    events = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
     first = events.filter(F.col("event_id") % 2 == 0)
@@ -473,14 +473,14 @@ def test_foreachbatch_merge_restart_is_idempotent(spark, sf_dir, tmp_path, sink)
 
     from pyspark.sql import functions as F
 
-    from cyrela_etl_spark.sources.parquet import read_events
+    from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming import read_file_stream
     from cyrela_etl_spark.streaming.ops import (
         run_foreach_batch_topk_view,
         run_foreach_batch_upsert,
     )
 
-    events = read_events(spark, sf_dir).select(
+    events = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
     halves = [
@@ -634,7 +634,7 @@ def test_stream_parquet_sink_removes_its_sink_dir(spark, sf_dir, monkeypatch):
         ours = [d for d in made if os.path.basename(d).startswith(prefix)]
         assert ours and not any(map(os.path.exists, ours)), (prefix, ours)
         assert _temp_dirs(prefix) <= before
-    events = read_events(spark, sf_dir)
+    events = read_table(spark, sf_dir, "events")
     assert rows["stream_pq_sink_"] == events.select("event_id").distinct().count()
     # all events, the tick and the expired-key re-sends
     assert rows["dedup_expiry_"] > events.count()

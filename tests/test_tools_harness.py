@@ -63,3 +63,18 @@ def test_scale_curve_families_and_replicate(spark):
     ids = sorted(r["k"] for r in rows)
     assert ids == [c * 100 + i for c in range(3) for i in range(5)]  # disjoint id spaces
     assert sorted(r["v"] for r in rows) == sorted([i * 10 for i in range(5)] * 3)
+
+
+def test_scale_curve_registry_families_build_whole_driver_tables(spark, sf_dir, tmp_path, monkeypatch):
+    # fuzzy and wave7 write their scaled inputs as driver tables and run
+    # registry queries on them, so every table must pass read_table's
+    # drift tripwire (all schemas.TESTDATA_EXPECTED columns present)
+    from cyrela_etl_spark.sources.parquet import read_table
+
+    monkeypatch.setattr(scale_curve, "SF_DIR", sf_dir)
+    monkeypatch.setattr(scale_curve, "WORK", str(tmp_path))
+    monkeypatch.setattr(scale_curve, "FUZZY_BASE_NAMES", 50)
+    scale_curve.fuzzy(spark, [1, 2])
+    # wave7's input: the tagged corpus, read by its text queries
+    docs = read_table(spark, scale_curve.tagged_corpus(spark, 2), "documents")
+    assert docs.count() == 2 * read_table(spark, sf_dir, "documents").count()

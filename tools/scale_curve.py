@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F  # noqa: E402
 
 from bench import fingerprint  # noqa: E402
 from cyrela_etl_spark.session import get_spark  # noqa: E402
+from cyrela_etl_spark.sources.parquet import read_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WORK = os.path.join(tempfile.gettempdir(), "scale_curve")
@@ -136,14 +137,15 @@ def tagged_corpus(spark, s: int) -> str:
     vocabularies: every token in replica k carries an ``r{k}x`` prefix
     and doc_id is offset by k * 10M. Shingles, hash buckets and per-gram
     document frequencies never collide across replicas, so the true
-    output scales exactly linearly. Returns a dir holding
-    documents.parquet (the layout registry queries read)."""
+    output scales exactly linearly. The other document columns are
+    copied unchanged. Returns a dir holding documents.parquet (the
+    layout registry queries read)."""
 
     def tag_tokens(text: Column, k: Column) -> Column:
         tag = F.concat(F.lit("r"), k.cast("string"), F.lit("x"))
         return F.concat(tag, F.regexp_replace(text, F.lit(r"\s+"), F.concat(F.lit(" "), tag)))
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, SF_DIR, "documents")
     root = f"{WORK}/tagged_docs_{s}x"
     scaled = replicate(docs, s, {"doc_id": 10_000_000}, {"text": tag_tokens})
     write(scaled, f"{root}/documents.parquet", partitions=max(4, s))
@@ -166,7 +168,7 @@ def curriculum(spark, sizes: list[int]) -> None:
     # operator, not session startup
     corpus_curriculum_stages(spark, SF_DIR).count()
     spark.catalog.clearCache()
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = read_table(spark, SF_DIR, "documents")
     n_base = docs.count()
     for s in sizes:
         sf_dir = SF_DIR
@@ -217,7 +219,7 @@ def asof(spark, sizes: list[int]) -> None:
       property the union-merge formulation exists for."""
     from cyrela_etl_spark.operators.temporal import asof_join, range_join_buckets
 
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    events = read_table(spark, SF_DIR, "events")
     # warm-up (codegen + shuffle machinery) so the 1x leg times the operator
     ev = events.limit(1000)
     asof_join(
@@ -620,10 +622,11 @@ FUZZY_BASE_NAMES = 15_000  # ~sf0.1 customer cardinality
 def _fuzzy_bucket_profile(spark, sf_dir: str) -> dict:
     """max/mean variant-bucket width for both blockings (substitution
     masks and deletion neighborhoods) over the customer names."""
-    from cyrela_etl_spark.queries.relational import _t
-
     names = (
-        _t(spark, sf_dir, "customer").select("c_name").filter(F.length("c_name") >= 1).distinct()
+        read_table(spark, sf_dir, "customer")
+        .select("c_name")
+        .filter(F.length("c_name") >= 1)
+        .distinct()
     )
     masked = names.select(
         F.explode(F.sequence(F.lit(1), F.length("c_name"))).alias("pos"), F.col("c_name")
@@ -690,6 +693,11 @@ def fuzzy(spark, sizes: list[int]) -> None:
     names = spark.range(1, FUZZY_BASE_NAMES + 1).select(
         F.col("id").alias("c_custkey"),
         F.format_string("Customer#%09d", F.col("id")).alias("c_name"),
+        # typed nulls for the customer columns the fuzzy queries never
+        # read, so the table passes read_table's drift tripwire
+        F.lit(None).cast("int").alias("c_nationkey"),
+        F.lit(None).cast("double").alias("c_acctbal"),
+        F.lit(None).cast("string").alias("c_mktsegment"),
     )
 
     def tag(name: Column, k: Column) -> Column:
@@ -859,12 +867,10 @@ def _stream_arrivals(spark, s: int) -> str:
     """Scaled, time-sliced arrival dir: STREAM_SLICES parquet files in ts
     order with staged mtimes (file-source batch order follows file
     modification time)."""
-    from cyrela_etl_spark.sources.parquet import read_events
-
     path = f"{WORK}/stream_{s}x"
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
-    events = read_events(spark, SF_DIR).select(*STREAM_COLS)
+    events = read_table(spark, SF_DIR, "events").select(*STREAM_COLS)
     scaled = replicate(events, s, {"event_id": 1_000_000_000, "user_id": 1_000_000})
     # 20% duplicates resent +50s (inside the 1h watermark): the dedup leg
     # must drop every one of them
@@ -975,7 +981,7 @@ def _graph_base_edges(spark) -> str:
     """Materialize the registry LPA edge graph at sf to parquet."""
     from cyrela_etl_spark.operators import dedup as D
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
     posting = docs.select(
         F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=3)).alias("g")
     )
@@ -1166,7 +1172,7 @@ def multimodal(spark, sizes: list[int]) -> None:
         synthesize_media,
     )
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id")
+    docs = read_table(spark, SF_DIR, "documents").select("doc_id")
     assert docs.count() == MEDIA_BASE_DOCS
     base: dict = {}
     for s in sizes:
@@ -1474,7 +1480,7 @@ def ann(spark, sizes: list[int]) -> None:
         sq_int8_topk,
     )
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+    emb = read_table(spark, SF_DIR, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("embedding")
     )
     base_path = write(emb, f"{WORK}/ann_1x/emb.parquet", partitions=8)
