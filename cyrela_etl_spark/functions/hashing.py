@@ -40,10 +40,3 @@ def fast_hash60(col: Column) -> Column:
     queries keep md5 and operators expose it behind ``hash_fn='xxhash64'``.
     """
     return F.shiftrightunsigned(F.xxhash64(col), 4).cast("long")
-
-
-def universal_hash(x: Column, a: int, b: int, prime: int = MERSENNE_PRIME) -> Column:
-    """(a*x + b) mod prime — the classic universal hash used to simulate
-    independent MinHash permutations from one base hash (Broder 1997,
-    'On the resemblance and containment of documents')."""
-    return (x % F.lit(prime) * F.lit(a) + F.lit(b)) % F.lit(prime)

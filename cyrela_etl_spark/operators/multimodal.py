@@ -28,10 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Deterministic fake media properties derived from payload bytes (the
-# fallback for containers with no pure-Python header parse).
-FAKE_DECODE = True
-
 MEDIA_META_SCHEMA = (
     "doc_id long, n_bytes long, content_hash string, media_kind string, "
     "width int, height int, n_frames int, sample_rate int, duration_ms long"
@@ -361,9 +357,10 @@ def extract_media_meta(binary_df: DataFrame, strict: bool = False) -> DataFrame:
     ``mapInPandas``.
 
     Per batch: byte length + md5 content hash (true properties of any
-    payload), then a REAL header parse for BMP/PNG/JPEG (width/height —
-    JPEG via the SOFn marker walk) and RIFF/WAV (sample_rate, n_frames,
-    duration_ms) containers — pure byte parsing, no codec library.
+    payload), then a REAL header parse for BMP/PNG/JPEG/GIF (width/height —
+    JPEG via the SOFn marker walk) and RIFF/WAV and MP3 (sample_rate,
+    n_frames, duration_ms) containers — pure byte parsing, no codec
+    library.
     Payloads in other containers get hash-derived stub dimensions
     (media_kind='unknown') so tests are stable, or — with
     ``strict=True`` — raise NotImplementedError (the behavior a
@@ -404,10 +401,11 @@ def extract_media_meta(binary_df: DataFrame, strict: bool = False) -> DataFrame:
                         n_frames=mp3["n_frames"],
                         duration_ms=mp3["duration_ms"],
                     )
-                elif not FAKE_DECODE or strict:
+                elif strict:
                     raise NotImplementedError(
-                        "media decode beyond BMP/WAV headers requires an "
-                        "image/audio codec; not available in this environment"
+                        "media decode beyond BMP/PNG/JPEG/GIF/WAV/MP3 headers "
+                        "requires an image/audio codec; not available in this "
+                        "environment"
                     )
                 else:
                     row.update(

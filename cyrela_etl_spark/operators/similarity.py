@@ -7,8 +7,7 @@ Two paths, same results where they overlap:
   against every query independently — no shuffle except the final
   per-query top-k (a tree-aggregated window over k·|queries| rows).
   Scoring is JVM-side zip_with/aggregate folds — bit-reproducible,
-  oracle-checkable. For raw throughput over very wide corpora,
-  `cosine_topk_arrow` does the same with Arrow-batched numpy matmul.
+  oracle-checkable.
 
 - **LSH-bucketed ANN** (`rhp_lsh_topk`): random-hyperplane LSH (Charikar
   2002). Sign-pattern of dot products with H fixed hyperplanes → bucket
@@ -75,74 +74,6 @@ def cosine_topk(
     )
     return (
         pruned.withColumn("rank", F.row_number().over(_rank_window()))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
-
-
-def cosine_topk_arrow(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 6,
-    max_queries: int = 4096,
-) -> DataFrame:
-    """Brute-force top-k via Arrow-batched numpy matmul (the throughput
-    path). Queries are collected once (small by contract) and closed over;
-    each partition computes a (batch × queries) GEMM and emits only its
-    local top-k per query, so the final global top-k shuffles
-    k·|queries|·n_partitions rows, not the corpus.
-
-    Matches ``cosine_topk`` exactly: scores are rounded to ``round_digits``
-    BEFORE local selection, and local ties break by vec_id asc (lexsort) —
-    the same total order the global rank uses, so a boundary tie can never
-    drop the row the global window would have kept.
-    """
-    # Enforce the "queries are small" contract instead of documenting it
-    # (VERDICT r7 item 3): a caller passing a million-row query table must
-    # fail loudly, not drag it through the driver. The limit(cap+1) probe
-    # costs one extra row, never a count job over the full table.
-    qrows = queries.select("query_id", vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_arrow: query set exceeds max_queries={max_queries}; "
-            "the broadcast-GEMM path requires a driver-bounded query table — "
-            "use cosine_topk (pure DataFrame join) for large query sets"
-        )
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    spark = data.sparkSession
-    b_qids = spark.sparkContext.broadcast(qids)
-    b_qmat = spark.sparkContext.broadcast(qnorm)
-
-    out_schema = "query_id long, vec_id long, cosine double"
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, qm = b_qids.value, b_qmat.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = m @ qm.T  # (batch, queries)
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            for j in range(qm.shape[0]):
-                col = sims[:, j]
-                mask = ids != qi[j]
-                cids, cs = ids[mask], col[mask]
-                # lexsort: primary -cosine, tie-break vec_id asc — the
-                # global rank's total order applied locally.
-                top = np.lexsort((cids, -cs))[:k]
-                yield pd.DataFrame({"query_id": qi[j], "vec_id": cids[top], "cosine": cs[top]})
-
-    scored = data.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
-    return (
-        scored.withColumn("rank", F.row_number().over(_rank_window()))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", "cosine")
     )
@@ -320,8 +251,8 @@ def _ivf_assign(
     Arrow-batched numpy GEMM against a *broadcast variable* of centroids —
     per-row, zero shuffle, and the plan is O(1) in n_centroids×dim (plan
     literals at 1k centroids × 1k dims would be a multi-MB codegen'd
-    expression). Same determinism contract as ``cosine_topk_arrow``:
-    scores round to ``round_digits`` before selection; ties break cid asc.
+    expression). Same determinism contract as ``cosine_topk``: scores
+    round to ``round_digits`` before selection; ties break cid asc.
     """
     spark = data.sparkSession
     cids = np.array([c for c, _ in centroids], dtype=np.int64)

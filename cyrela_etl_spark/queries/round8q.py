@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from cyrela_etl_spark.operators import text as X
 from cyrela_etl_spark.queries import register
 from cyrela_etl_spark.sources.parquet import fan_out, read_table
-from cyrela_etl_spark.queries.textq import CORPUS_SQL, _docs, corpus, sql_tokens
+from cyrela_etl_spark.queries.textq import CORPUS_SQL, _docs, corpus, dup_pairs, sql_tokens
 
 LN_DEC = "decimal(20,6)"   # a rounded ln()/pow() value
 ACC_DEC = "decimal(38,12)"  # sums of products of two LN_DECs
@@ -799,23 +799,7 @@ _BFS_SEEDS = 3
 
 
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = corpus(spark, sf_dir)
-    from cyrela_etl_spark.queries.textq import sql_norm  # noqa: F401  (SQL twin)
-
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    keyed = c.select(
-        F.col("doc_id").alias("id"),
-        F.md5(norm).alias("k_exact"),
-        F.md5(F.concat_ws(" ", F.slice(X.tokens(F.col("text")), 1, 6))).alias("k_prefix"),
-    )
-
-    def _pairs(key: str) -> DataFrame:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return a.join(
-            b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.id") < F.col("b.id"))
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    return _pairs("k_exact").unionByName(_pairs("k_prefix")).distinct()
+    return dup_pairs(corpus(spark, sf_dir)).distinct()
 
 
 def graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -525,29 +525,31 @@ FROM binned GROUP BY 1, 2
 
 # ---------------------------------------------------------------------------
 # storage_forget_user — right-to-be-forgotten propagation through the
-# snapshot catalog (sources/zones.py delete_rows): events land in a zone
-# table, a deterministic deletion-request list (user_id % 97 = 0) is
-# MERGE-DELETEd (anti join → new snapshot → catalog rebind), and the
-# OUTPUT is read back from the post-delete snapshot — so the check covers
-# the physical write path, not just the anti join. snapshot_diff between
-# the superseded and live snapshots supplies the CDC evidence column
-# (every changed key must classify as 'deleted', and their count is
-# value-checked against the oracle's arithmetic).
+# transaction log (sources/txn.py txn_delete_rows): events are committed
+# as version 1 of a txn table, a deterministic deletion-request list
+# (user_id % 97 = 0) is MERGE-DELETEd (anti join → new snapshot → version
+# 2), and the OUTPUT is read back from the post-delete version — so the
+# check covers the physical write path, not just the anti join.
+# snapshot_diff between version 1 (time travel) and the latest version
+# supplies the CDC evidence column (every changed key must classify as
+# 'deleted', and their count is value-checked against the oracle's
+# arithmetic). Nothing is registered in the session catalog.
 # ---------------------------------------------------------------------------
 def storage_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from cyrela_etl_spark.sources.zones import delete_rows, snapshot_diff
+    from cyrela_etl_spark.sources.txn import txn_delete_rows, txn_init, txn_read
+    from cyrela_etl_spark.sources.zones import snapshot_diff
 
     root = tempfile.mkdtemp(prefix="zone_forget_")
     try:
         store = ZoneStore(spark, root)
         ev = read_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
-        store.promote_table(ev, "curated", "ev", "zone_events")
+        v0 = txn_init(store, "curated", "ev", ev)
         forget = ev.filter(F.col("user_id") % 97 == 0).select("user_id").distinct()
-        old_path = delete_rows(store, "curated", "ev", "zone_events", forget, "user_id")
-        new_df = store.table("zone_events")
-        old_df = spark.read.parquet(old_path)
+        txn_delete_rows(store, "curated", "ev", forget, "user_id")
+        new_df = txn_read(store, "curated", "ev")
+        old_df = txn_read(store, "curated", "ev", version=v0)
         cdc = snapshot_diff(old_df, new_df, key_cols=["event_id"])
         cdc_deleted = cdc.filter(F.col("change") == "deleted").agg(
             F.count(F.lit(1)).cast("long").alias("n_cdc_deleted_total")

@@ -485,22 +485,7 @@ register("dedup_simhash_pairs", dedup_simhash_pairs, _simhash_pairs_oracle())
 # tests/test_corpus_ops.py against a union-find reference.)
 # ---------------------------------------------------------------------------
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = corpus(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    keyed = c.select(
-        F.col("doc_id").alias("id"),
-        F.md5(norm).alias("k_exact"),
-        F.md5(F.concat_ws(" ", F.slice(X.tokens(F.col("text")), 1, 6))).alias("k_prefix"),
-    )
-
-    def _pairs(key: str) -> DataFrame:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.id") < F.col("b.id"))).select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-
-    edges = _pairs("k_exact").unionByName(_pairs("k_prefix"))
-    return D.connected_components(edges)
+    return D.connected_components(dup_pairs(corpus(spark, sf_dir)))
 
 
 _COMPONENTS_EDGES_SQL = f"""
@@ -518,6 +503,28 @@ pairs AS (
     ON a.k_prefix = b.k_prefix AND a.id < b.id
 )
 """
+
+
+def dup_pairs(c: DataFrame) -> DataFrame:
+    """Spark twin of ``_COMPONENTS_EDGES_SQL``: the duplicate-pair graph
+    (id_a < id_b) over a corpus DataFrame — exact normalized-text md5
+    pairs UNION ALL 6-token-prefix md5 pairs, one self-join per key. The
+    caller builds ``c`` (and chooses its ``fan``)."""
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    keyed = c.select(
+        F.col("doc_id").alias("id"),
+        F.md5(norm).alias("k_exact"),
+        F.md5(F.concat_ws(" ", F.slice(X.tokens(F.col("text")), 1, 6))).alias("k_prefix"),
+    )
+
+    def _pairs(key: str) -> DataFrame:
+        a, b = keyed.alias("a"), keyed.alias("b")
+        return a.join(
+            b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.id") < F.col("b.id"))
+        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+
+    return _pairs("k_exact").unionByName(_pairs("k_prefix"))
+
 
 register(
     "dedup_components",
@@ -1483,21 +1490,7 @@ register("search_hybrid_rrf", search_hybrid_rrf, _rrf_oracle())
 def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.graph import triangle_stats
 
-    c = corpus(spark, sf_dir, fan=False)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    keyed = c.select(
-        F.col("doc_id").alias("id"),
-        F.md5(norm).alias("k_exact"),
-        F.md5(F.concat_ws(" ", F.slice(X.tokens(F.col("text")), 1, 6))).alias("k_prefix"),
-    )
-
-    def _pairs(key: str) -> DataFrame:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return a.join(
-            b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.id") < F.col("b.id"))
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    edges = _pairs("k_exact").unionByName(_pairs("k_prefix"))
+    edges = dup_pairs(corpus(spark, sf_dir, fan=False))
     return triangle_stats(edges, orient_by_degree=False)
 
 
@@ -1750,21 +1743,7 @@ register("text_phrase_search", text_phrase_search, _phrase_oracle())
 # ---------------------------------------------------------------------------
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = corpus(spark, sf_dir, fan=False)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    keyed = c.select(
-        F.col("doc_id").alias("id"),
-        F.md5(norm).alias("k_exact"),
-        F.md5(F.concat_ws(" ", F.slice(X.tokens(F.col("text")), 1, 6))).alias("k_prefix"),
-    )
-
-    def _pairs(key: str) -> DataFrame:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return a.join(
-            b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.id") < F.col("b.id"))
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    edges = _pairs("k_exact").unionByName(_pairs("k_prefix"))
-    comp = D.connected_components(edges)
+    comp = D.connected_components(dup_pairs(c))
     labeled = (
         c.select(F.col("doc_id").alias("id"), F.length("text").cast("long").alias("len"))
         .join(comp, "id", "left")
@@ -2322,22 +2301,7 @@ WHERE round(CAST(d.dot AS DOUBLE)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.graph import integer_pagerank
 
-    c = corpus(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    keyed = c.select(
-        F.col("doc_id").alias("id"),
-        F.md5(norm).alias("k_exact"),
-        F.md5(F.concat_ws(" ", F.slice(X.tokens(F.col("text")), 1, 6))).alias("k_prefix"),
-    )
-
-    def _pairs(key: str) -> DataFrame:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return a.join(
-            b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.id") < F.col("b.id"))
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    edges = _pairs("k_exact").unionByName(_pairs("k_prefix"))
-    return integer_pagerank(edges, iterations=2)
+    return integer_pagerank(dup_pairs(corpus(spark, sf_dir)), iterations=2)
 
 
 register(

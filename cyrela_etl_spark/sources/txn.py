@@ -539,11 +539,12 @@ def txn_upsert(
     max_retries: int = 10,
 ) -> int:
     """Keyed MERGE with optimistic retry: read the latest snapshot, merge
-    (updates replace same-key rows, new keys append — the
-    ``zones.upsert_table`` relation), attempt the commit; on conflict
-    RE-READ the winner's snapshot and re-merge, so the final state always
-    contains BOTH writers' changes — the lost-update prevention the plain
-    snapshot-rebind catalog cannot give (VERDICT r7 item 3 / r8 item 2).
+    (updates replace same-key rows, new keys append: ``updates ∪
+    (current ⟕anti updates)`` on ``merge_key``, Delta's MERGE WHEN
+    MATCHED UPDATE / NOT MATCHED INSERT for whole-row updates), attempt
+    the commit; on conflict RE-READ the winner's snapshot and re-merge,
+    so the final state always contains BOTH writers' changes — no lost
+    update (VERDICT r7 item 3 / r8 item 2).
     One anti-join shuffle per attempt; retries are conflict-rate-bound,
     not data-bound.
 
@@ -586,9 +587,13 @@ def txn_delete_rows(
     merge_key: str,
     max_retries: int = 10,
 ) -> int:
-    """Keyed MERGE-DELETE (the ``zones.delete_rows`` relation) under the
-    same optimistic-retry protocol; concurrent upserts and deletes
-    serialize through the version log instead of clobbering each other."""
+    """Keyed MERGE-DELETE (``current ⟕anti distinct(forget_keys)`` on
+    ``merge_key``, Delta's MERGE WHEN MATCHED THEN DELETE — the
+    right-to-be-forgotten primitive) under the same optimistic-retry
+    protocol; concurrent upserts and deletes serialize through the
+    version log instead of clobbering each other. The forgotten rows
+    survive in older versions until ``vacuum`` drops them: a COMPLETE
+    forget is this commit plus ``vacuum(keep_last=1, min_age_sec=0)``."""
     for _ in range(max_retries):
         v = latest_version(store, zone, key)
         current = txn_read(store, zone, key, v)

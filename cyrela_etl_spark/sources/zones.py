@@ -246,89 +246,6 @@ def compact_zone(
     return path, n_before, n_target
 
 
-def upsert_table(
-    store: ZoneStore,
-    zone: str,
-    key: str,
-    table: str,
-    updates: DataFrame,
-    merge_key: str,
-    keep_old_snapshot: bool = True,
-) -> str | None:
-    """Keyed MERGE (upsert) into a catalog zone table without a
-    transaction log: rows in ``updates`` replace same-key rows in the
-    table, new keys append — i.e. ``updates ∪ (current ⟕anti updates)``,
-    written as a NEW snapshot and the catalog rebound (readers of the
-    old snapshot finish against the old files; the swap is the rebind).
-    One shuffle (the anti join on the merge key). This is the
-    plain-parquet spelling of Delta's MERGE WHEN MATCHED UPDATE / NOT
-    MATCHED INSERT for whole-row updates.
-
-    Each call writes a full new snapshot — Delta's VACUUM has no
-    automatic counterpart here. Returns the SUPERSEDED snapshot path so
-    callers can delete it once readers drain (keep it for time-travel /
-    rollback otherwise); ``keep_old_snapshot=False`` deletes it
-    immediately after the rebind (only safe when nothing reads the old
-    snapshot concurrently).
-    """
-    current = store.spark.table(table)
-    keep = current.join(updates.select(merge_key), merge_key, "left_anti")
-    merged = updates.select(*current.columns).unionByName(keep)
-    return _rebind_snapshot(store, zone, key, table, merged, keep_old_snapshot)
-
-
-def delete_rows(
-    store: ZoneStore,
-    zone: str,
-    key: str,
-    table: str,
-    forget_keys: DataFrame,
-    merge_key: str,
-    keep_old_snapshot: bool = True,
-) -> str | None:
-    """Keyed MERGE-DELETE into a catalog zone table — the right-to-be-
-    forgotten / retention-policy primitive (Delta's MERGE WHEN MATCHED
-    THEN DELETE, spelled over the plain-parquet snapshot catalog): every
-    row whose ``merge_key`` appears in ``forget_keys`` is dropped, the
-    survivor set is written as a NEW snapshot and the catalog rebound.
-    One shuffle (the anti join); ``forget_keys`` is distinct-ed and is
-    small by contract (a deletion request list), so the anti join
-    broadcasts at scale.
-
-    Returns the superseded snapshot path (callers must delete it too for
-    a COMPLETE forget — a retained old snapshot still contains the
-    forgotten rows; ``keep_old_snapshot=False`` does so immediately).
-    """
-    current = store.spark.table(table)
-    kept = current.join(forget_keys.select(merge_key).distinct(), merge_key, "left_anti")
-    return _rebind_snapshot(store, zone, key, table, kept, keep_old_snapshot)
-
-
-def _rebind_snapshot(
-    store: ZoneStore,
-    zone: str,
-    key: str,
-    table: str,
-    df: DataFrame,
-    keep_old_snapshot: bool,
-) -> str | None:
-    """Write ``df`` as a new snapshot of ``table`` and rebind the catalog
-    to it; return the superseded snapshot path, or delete it and return
-    None when ``keep_old_snapshot`` is False. Each version gets its own
-    path because plain parquet cannot overwrite in place while reading
-    itself."""
-    import uuid
-
-    old_path = store._table_location(table)
-    new_key = f"{key}__v{uuid.uuid4().hex[:8]}"
-    store.promote_table(df, zone, new_key, table, mode="overwrite")
-    if not keep_old_snapshot and old_path is not None:
-        fs, jvm = store._fs()
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old_path), True)
-        return None
-    return old_path
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,

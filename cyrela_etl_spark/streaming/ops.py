@@ -464,8 +464,8 @@ def _run_snapshot_merge(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Drain a stream through a ``foreachBatch`` sink whose state is a
-    parquet snapshot per epoch under ``state_dir`` (mirroring
-    sources/zones.py upsert_table's snapshot versions).
+    parquet snapshot per epoch under ``state_dir`` (mirroring the
+    one-immutable-snapshot-per-version commits of sources/txn.py).
 
     Per micro-batch: ``reduce_batch`` the batch, union it with
     ``_latest_snapshot_below`` this epoch, ``reduce_state`` the union,

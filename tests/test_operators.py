@@ -14,8 +14,6 @@ from cyrela_etl_spark.operators import dedup as D
 from cyrela_etl_spark.operators import multimodal as M
 from cyrela_etl_spark.operators import text as X
 from cyrela_etl_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_arrow,
     embedding_neardup_pairs,
     rhp_lsh_topk,
 )
@@ -45,25 +43,6 @@ def test_rhp_dim_mismatch_raises(spark, sf_dir):
     q = emb.selectExpr("vec_id AS query_id", "embedding")
     with pytest.raises(PySparkException, match="dim=128"):
         rhp_lsh_topk(emb, q, dim=128).collect()
-
-
-# -- similarity: arrow path parity ------------------------------------------
-def test_cosine_topk_arrow_matches_exact(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter("vec_id < 6").selectExpr("vec_id AS query_id", "embedding")
-    exact = sorted(map(tuple, cosine_topk(emb, q, k=7).collect()))
-    arrow = sorted(map(tuple, cosine_topk_arrow(emb, q, k=7).collect()))
-    assert exact == arrow
-
-
-def test_cosine_topk_arrow_rejects_oversized_query_set(spark, sf_dir):
-    # VERDICT r7 item 3: the "queries are small" contract is enforced, not
-    # documented — an oversized query table raises instead of being
-    # collected through the driver.
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.selectExpr("vec_id AS query_id", "embedding")
-    with pytest.raises(ValueError, match="max_queries=5"):
-        cosine_topk_arrow(emb, q, k=3, max_queries=5)
 
 
 # -- dedup: planted duplicates are found ------------------------------------

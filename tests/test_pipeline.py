@@ -182,25 +182,6 @@ def test_compact_zone_reduces_files_preserves_data(spark, sf_dir, tmp_path):
     assert len(glob.glob(f"{path}/*.parquet")) == n_after
 
 
-def test_upsert_table_replaces_and_inserts(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from cyrela_etl_spark.sources.zones import ZoneStore, upsert_table
-
-    store = ZoneStore(spark, str(tmp_path))
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
-    store.promote_table(nation, "curated", "nat", "t_upsert_nation")
-    updates = spark.createDataFrame(
-        [(0, "RENAMED_0"), (999, "BRAND_NEW")], "n_nationkey long, n_name string"
-    )
-    upsert_table(store, "curated", "nat", "t_upsert_nation", updates, merge_key="n_nationkey")
-    got = {r["n_nationkey"]: r["n_name"] for r in spark.table("t_upsert_nation").collect()}
-    assert got[0] == "RENAMED_0"          # matched key replaced
-    assert got[999] == "BRAND_NEW"        # new key inserted
-    assert len(got) == nation.count() + 1  # everything else kept
-    spark.sql("DROP TABLE IF EXISTS t_upsert_nation")
-
-
 def test_snapshot_diff_classifies_changes(spark):
     from cyrela_etl_spark.sources.zones import snapshot_diff
 
@@ -278,69 +259,3 @@ def test_promote_table_append_refuses_foreign_location(spark, sf_dir, tmp_path):
     # the table still reads fine from its original location
     assert spark.table("t_append_guard").count() == nation.count()
     spark.sql("DROP TABLE IF EXISTS t_append_guard")
-
-
-def test_delete_rows_forgets_keys_and_returns_old_snapshot(spark, sf_dir, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cyrela_etl_spark.sources.zones import ZoneStore, delete_rows
-
-    store = ZoneStore(spark, str(tmp_path))
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
-    store.promote_table(nation, "curated", "nat", "t_forget_nation")
-    forget = spark.createDataFrame([(0,), (5,), (999,)], "n_nationkey long")
-    old_path = delete_rows(
-        store, "curated", "nat", "t_forget_nation", forget, merge_key="n_nationkey"
-    )
-    kept = {r["n_nationkey"] for r in spark.table("t_forget_nation").collect()}
-    assert 0 not in kept and 5 not in kept          # requested keys gone
-    assert len(kept) == nation.count() - 2          # 999 never existed; rest kept
-    # the superseded snapshot still exists (time-travel / rollback) and
-    # still CONTAINS the forgotten rows — a complete forget deletes it too
-    assert old_path is not None and os.path.exists(old_path.replace("file:", ""))
-    old_keys = {r["n_nationkey"] for r in spark.read.parquet(old_path).collect()}
-    assert {0, 5} <= old_keys
-    spark.sql("DROP TABLE IF EXISTS t_forget_nation")
-
-
-def test_delete_rows_drop_old_snapshot(spark, sf_dir, tmp_path):
-    import os
-
-    from cyrela_etl_spark.sources.zones import ZoneStore, delete_rows
-
-    store = ZoneStore(spark, str(tmp_path))
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
-    store.promote_table(nation, "curated", "nat", "t_forget_nation2")
-    loc_before = store._table_location("t_forget_nation2")
-    forget = spark.createDataFrame([(1,)], "n_nationkey long")
-    out = delete_rows(
-        store, "curated", "nat", "t_forget_nation2", forget,
-        merge_key="n_nationkey", keep_old_snapshot=False,
-    )
-    assert out is None
-    assert not os.path.exists(loc_before.replace("file:", ""))  # complete forget
-    assert spark.table("t_forget_nation2").count() == nation.count() - 1
-    spark.sql("DROP TABLE IF EXISTS t_forget_nation2")
-
-
-def test_upsert_table_drop_old_snapshot(spark, sf_dir, tmp_path):
-    import os
-
-    from cyrela_etl_spark.sources.zones import ZoneStore, upsert_table
-
-    store = ZoneStore(spark, str(tmp_path))
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
-    store.promote_table(nation, "curated", "nat", "t_upsert_nation2")
-    loc_before = store._table_location("t_upsert_nation2")
-    updates = spark.createDataFrame([(3, "RENAMED_3")], "n_nationkey long, n_name string")
-    out = upsert_table(
-        store, "curated", "nat", "t_upsert_nation2", updates,
-        merge_key="n_nationkey", keep_old_snapshot=False,
-    )
-    assert out is None
-    assert not os.path.exists(loc_before.replace("file:", ""))  # old snapshot gone
-    got = {r["n_nationkey"]: r["n_name"] for r in spark.table("t_upsert_nation2").collect()}
-    assert got[3] == "RENAMED_3" and len(got) == nation.count()
-    spark.sql("DROP TABLE IF EXISTS t_upsert_nation2")

@@ -48,8 +48,8 @@ def test_init_read_roundtrip_and_versions(spark, store):
 def test_stale_writer_cannot_publish_over_unseen_version(spark, store):
     """The deterministic two-writer interleave: A and B both read v1; B
     commits v2 first; A's commit AT ITS READ VERSION must fail loudly
-    instead of silently erasing B's write (the lost update the plain
-    snapshot-rebind catalog allows)."""
+    instead of silently erasing B's write (the lost update a commit with
+    no conflict witness allows)."""
     txn_init(store, "curated", "accounts", _accounts(spark, [(1, 100), (2, 200)]))
 
     # both writers snapshot the same version
@@ -301,6 +301,29 @@ def test_lockfile_publisher_two_thread_race(spark, store):
     got = _rows(txn_read(store, "curated", "accounts"))
     assert got == {(0, 0)} | {(k, k * 10) for b in (100, 200) for k in range(b, b + 3)}
     assert latest_version(store, "curated", "accounts") == 7
+
+
+def test_storage_forget_user_leaves_session_catalog_unchanged(spark, sf_dir):
+    """The registry's right-to-be-forgotten query keeps its txn table in a
+    temp root: the session catalog gains no table (a catalog-bound table
+    would outlive the temp dir it points at) and the root is removed."""
+    import glob
+    import os
+    import sys
+    import tempfile
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+    from cyrela_etl_spark.queries.storageq import storage_forget_user
+
+    spark.sql("DROP TABLE IF EXISTS zone_events")
+    tables = {t.name for t in spark.catalog.listTables()}
+    roots = os.path.join(tempfile.gettempdir(), "zone_forget_*")
+    before = set(glob.glob(roots))
+    n_rows, _ = bench.fingerprint(storage_forget_user(spark, sf_dir))
+    assert n_rows > 0
+    assert {t.name for t in spark.catalog.listTables()} == tables
+    assert set(glob.glob(roots)) <= before
 
 
 def test_time_travel_of_vacuumed_version_fails_cleanly(spark, store):
