@@ -1,19 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same results where they overlap:
+Every top-k operator is two steps: score (query_id, vec_id, score)
+pairs, then rank them with the one shared ``_topk`` — a plain
+``row_number`` window whose partial WindowGroupLimit Spark plants below
+the rank exchange, so the shuffle carries k rows per map partition and
+query, never the corpus.
 
-- **Brute-force top-k** (`cosine_topk`): exact. The query set is broadcast
+- **Exact top-k** (`cosine_topk`, `l2_topk`): the query set is broadcast
   (it is small by construction); each data partition scores its rows
-  against every query independently — no shuffle except the final
-  per-query top-k (a tree-aggregated window over k·|queries| rows).
-  Scoring is JVM-side zip_with/aggregate folds — bit-reproducible,
-  oracle-checkable.
+  against every query independently. Scoring is JVM-side
+  zip_with/aggregate folds — bit-reproducible, oracle-checkable.
 
-- **LSH-bucketed ANN** (`rhp_lsh_topk`): random-hyperplane LSH (Charikar
-  2002). Sign-pattern of dot products with H fixed hyperplanes → bucket
-  key; candidates searched within bucket only (equality join on bucket —
-  shuffle by bucket key, never n²). Recall < 1 by design; hyperplanes are
-  deterministic (seeded) so results are stable and testable.
+- **ANN top-k**: random-hyperplane LSH buckets (`rhp_lsh_topk`, Charikar
+  2002 — equality join on the bucket, never n²), inverted lists
+  (`ivf_topk`), int8 and product quantization (`sq_int8_topk`,
+  `pq_adc_topk`, `ivf_pq_topk`) and prefix truncation
+  (`matryoshka_topk`). Recall < 1 by design; every hyperplane, centroid
+  and codebook is deterministic so results are stable and testable.
+  The trained operators score through one private function each
+  (``_ivf_scored``, ``_sq_scored``, ``_pq_scored``, ``_ivf_pq_scored``),
+  which ``tools/scale_curve.py ann`` reuses with pinned training.
 """
 
 from __future__ import annotations
@@ -28,9 +34,34 @@ from pyspark.sql import functions as F
 from cyrela_etl_spark.functions.vectors import cosine_similarity, dot, to_double_array
 
 
-def _rank_window():
-    # Deterministic per-query ranking: score desc, then neighbor id asc.
-    return Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+# Every score rounds to this many digits BEFORE ranking, so the order is
+# stable across engines whose last-bit rounding differs.
+_ROUND_DIGITS = 6
+
+
+def _topk(scored: DataFrame, k: int, score_col: str, ascending: bool) -> DataFrame:
+    """Each query's k best rows of ``scored`` (query_id, vec_id,
+    <score_col>, ...): one total order, score then vec_id asc, ranked by
+    one plain ``row_number`` window and cut at ``rank <= k``. Returns
+    (query_id, rank, vec_id, <the other columns of scored>).
+
+    The scale contract rides on Spark's rank-limit pushdown: for
+    k <= ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000, left at
+    its default by session.py) the planner puts a partial
+    WindowGroupLimit below the rank's exchange, so each map partition
+    ships only its local top-k and the shuffle carries
+    k * partitions * |queries| rows at any corpus size. Above 1000 the
+    whole scored set would funnel into |queries| reducers
+    (tests/test_plan_quality.py pins the pushdown for every ANN query).
+    """
+    score = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("query_id").orderBy(score, F.col("vec_id").asc())
+    rest = [c for c in scored.columns if c not in ("query_id", "vec_id")]
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "vec_id", *rest)
+    )
 
 
 def cosine_topk(
@@ -39,44 +70,21 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact cosine top-k: for each query row, the k nearest data rows.
 
     ``queries`` must have columns (query_id, <vec_col>). Vectors are cast
     to double before arithmetic (float32 accumulation drifts). Scores are
-    rounded to ``round_digits`` BEFORE ranking so ordering is stable across
-    engines whose last-bit rounding differs.
+    rounded to ``_ROUND_DIGITS`` before ranking.
     """
     d = data.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v"))
     q = queries.select(F.col("query_id"), to_double_array(vec_col).alias("qv"))
-    cos = cosine_similarity(F.col("qv"), F.col("v"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
+    cos = F.round(cosine_similarity(F.col("qv"), F.col("v")), _ROUND_DIGITS)
     scored = (
         d.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", cos.alias("cosine"))
     )
-    # Two-phase top-k: a per-(query, input-partition) local top-k first, so
-    # the final per-query rank sees only k·n_partitions rows instead of the
-    # whole corpus funneling into one reducer partition per query (the
-    # single-window formulation collapses a 100 TB corpus onto |queries|
-    # reducers). Both ranks share one total order (cosine desc, vec_id asc)
-    # so the local cut can never drop a row the global rank would keep.
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(_rank_window()))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _topk(scored, k, "cosine", ascending=False)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -98,13 +106,12 @@ def rhp_bucket(vec_col, planes: list[list[float]]):
 def rhp_lsh_topk(
     data: DataFrame,
     queries: DataFrame,
+    dim: int,
     k: int = 10,
     n_planes: int = 8,
-    dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """ANN top-k: candidates share the query's hyperplane sign bucket.
 
@@ -113,18 +120,12 @@ def rhp_lsh_topk(
     bucket. Recall is tunable via n_planes (fewer planes → bigger buckets
     → higher recall, more compute).
 
-    ``dim`` given explicitly costs NO extra job: the length check rides
-    the plan as a per-row guard (a silent mismatch would null out every
-    plane dot product — zip_with pads with nulls — and collapse all rows
-    into bucket 0, i.e. a full scan with no error, so the guard raises
-    instead). ``dim=None`` falls back to sampling the length from the
-    data (one 1-row job).
+    ``dim`` costs no extra job: the length check rides the plan as a
+    per-row guard (a silent mismatch would null out every plane dot
+    product — zip_with pads with nulls — and collapse all rows into
+    bucket 0, i.e. a full scan with no error, so the guard raises
+    instead).
     """
-    if dim is None:
-        sampled = data.select(F.size(F.col(vec_col)).alias("d")).first()
-        if sampled is None:
-            raise ValueError("cannot derive embedding dim from empty data")
-        dim = sampled["d"]
     planes = _hyperplanes(dim, n_planes, seed)
 
     def _guarded_bucket(col):
@@ -149,30 +150,12 @@ def rhp_lsh_topk(
         to_double_array(vec_col).alias("qv"),
         _guarded_bucket(F.col(vec_col)).alias("bucket"),
     )
-    cos = cosine_similarity(F.col("qv"), F.col("v"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
+    cos = F.round(cosine_similarity(F.col("qv"), F.col("v")), _ROUND_DIGITS)
     scored = (
         d.join(F.broadcast(q), (d["bucket"] == q["bucket"]) & (F.col("vec_id") != F.col("query_id")))
         .select("query_id", "vec_id", cos.alias("cosine"))
     )
-    # Two-phase rank (same reasoning as cosine_topk): local per-partition
-    # top-k first so the final per-query window sees k·n_partitions rows,
-    # not every bucket candidate funneling into |queries| reducers.
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(_rank_window()))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _topk(scored, k, "cosine", ascending=False)
 
 
 def seed_centroids(
@@ -220,7 +203,7 @@ def kmeans_refine(
     centroids keep their seed cid, so downstream tie-breaks stay stable.
     """
     for _ in range(iters):
-        assigned = _ivf_assign(data, centroids, 1, id_col, vec_col, "vec_id", 6)
+        assigned = _ivf_assign(data, centroids, 1, id_col, vec_col, "vec_id")
         means = (
             assigned.select("list_id", F.posexplode("v").alias("pos", "x"))
             .groupBy("list_id", "pos")
@@ -243,7 +226,6 @@ def _ivf_assign(
     id_col: str,
     vec_col: str,
     id_out: str,
-    round_digits: int | None,
 ) -> DataFrame:
     """(id, v, list_id) rows: each input row replicated once per its
     ``nearest_m`` closest centroids (by rounded cosine desc, cid asc).
@@ -252,7 +234,7 @@ def _ivf_assign(
     per-row, zero shuffle, and the plan is O(1) in n_centroids×dim (plan
     literals at 1k centroids × 1k dims would be a multi-MB codegen'd
     expression). Same determinism contract as ``cosine_topk``: scores
-    round to ``round_digits`` before selection; ties break cid asc.
+    round to ``_ROUND_DIGITS`` before selection; ties break cid asc.
     """
     spark = data.sparkSession
     cids = np.array([c for c, _ in centroids], dtype=np.int64)
@@ -270,9 +252,9 @@ def _ivf_assign(
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             vecs = np.array(list(pdf[vec_col]), dtype=np.float64)
-            sims = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)) @ cm.T
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
+            sims = np.round(
+                (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)) @ cm.T, _ROUND_DIGITS
+            )
             # Per-row total order (cosine desc, cid asc), vectorized.
             order = np.lexsort((np.broadcast_to(ci, sims.shape), -sims), axis=1)[:, :m]
             yield pd.DataFrame(
@@ -288,6 +270,28 @@ def _ivf_assign(
     ).mapInPandas(assign, schema=schema)
 
 
+def _ivf_scored(
+    data: DataFrame,
+    queries: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Every (query_id, vec_id, cosine) pair ``ivf_topk`` scores with the
+    given centroids, self pairs included: each row sits in its nearest
+    list, each query probes its ``nprobe`` nearest, and the probe join
+    (broadcast query side) shuffles by list id only."""
+    d = _ivf_assign(data, centroids, 1, id_col, vec_col, "vec_id")
+    q = _ivf_assign(
+        queries, centroids, nprobe, "query_id", vec_col, "query_id"
+    ).withColumnRenamed("v", "qv")
+    cos = F.round(cosine_similarity(F.col("qv"), F.col("v")), _ROUND_DIGITS)
+    return d.join(F.broadcast(q), d["list_id"] == q["list_id"]).select(
+        "query_id", "vec_id", cos.alias("cosine")
+    )
+
+
 def ivf_topk(
     data: DataFrame,
     queries: DataFrame,
@@ -296,7 +300,6 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 6,
     refine_iters: int = 0,
 ) -> DataFrame:
     """IVF-flavored ANN top-k: partition the corpus into inverted lists by
@@ -316,22 +319,9 @@ def ivf_topk(
     centroids = seed_centroids(data, n_centroids, id_col, vec_col)
     if refine_iters:
         centroids = kmeans_refine(data, centroids, refine_iters, id_col, vec_col)
-    d = _ivf_assign(data, centroids, 1, id_col, vec_col, "vec_id", round_digits)
-    q = (
-        _ivf_assign(queries, centroids, nprobe, "query_id", vec_col, "query_id", round_digits)
-        .withColumnRenamed("v", "qv")
-    )
-    cos = cosine_similarity(F.col("qv"), F.col("v"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    scored = (
-        d.join(F.broadcast(q), (d["list_id"] == q["list_id"]) & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", "vec_id", cos.alias("cosine"))
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(_rank_window()))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
+    scored = _ivf_scored(data, queries, centroids, nprobe, id_col, vec_col)
+    return _topk(
+        scored.filter(F.col("vec_id") != F.col("query_id")), k, "cosine", ascending=False
     )
 
 
@@ -341,7 +331,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_col: str | None = None,
-    round_digits: int | None = 6,
     allow_full_scan: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ t).
@@ -359,9 +348,7 @@ def embedding_neardup_pairs(
         )
     d = data.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"), F.col(block_col).alias("blk") if block_col else F.lit(0).alias("blk"))
     a, b = d.alias("a"), d.alias("b")
-    cos = cosine_similarity(F.col("a.v"), F.col("b.v"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
+    cos = F.round(cosine_similarity(F.col("a.v"), F.col("b.v")), _ROUND_DIGITS)
     return (
         a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos.alias("cosine"))
@@ -375,10 +362,9 @@ def l2_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact Euclidean (L2) top-k — the metric twin of ``cosine_topk``,
-    same broadcast + two-phase-rank plan. Distance is computed by the
+    same broadcast + ``_topk`` plan. Distance is computed by the
     three-dot-product expansion sqrt(aa − 2ab + bb) so both engines fold
     floats in the identical order as their dot products (a zip-subtract-
     square fold would sum in a different order and drift past the
@@ -394,25 +380,10 @@ def l2_topk(
             F.lit(0.0),
         )
     )
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
     scored = d.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id", "vec_id", dist.alias("l2_dist")
+        "query_id", "vec_id", F.round(dist, _ROUND_DIGITS).alias("l2_dist")
     )
-    order = [F.col("l2_dist").asc(), F.col("vec_id").asc()]
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(*order)
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    final_w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "l2_dist")
-    )
+    return _topk(scored, k, "l2_dist", ascending=True)
 
 
 # ---------------------------------------------------------------------------
@@ -439,32 +410,15 @@ def _int_dot(a, b):
     )
 
 
-def sq_int8_topk(
+def _sq_scored(
     data: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
-    """Approximate cosine top-k over scalar-quantized (int8) vectors.
-
-    The production rationale at 100 TB: an int8 corpus is 4× smaller than
-    float32 (16× vs double), so the scan is 4× less IO and the dot products
-    are integer SIMD — this is the standard first compression rung before
-    PQ. Accuracy loss is bounded (|Δcos| ≲ 1/127 per axis); the returned
-    score is the cosine OF THE QUANTIZED vectors, deterministically.
-
-    Determinism contract: quantization is round(127·x/max|x|) per element
-    (identical double ops both engines), dot/norms are EXACT integer
-    folds, and the only floats are two correctly-rounded sqrts + one
-    division, rounded to ``round_digits`` before ranking. Ties break on
-    vec_id. Same broadcast + two-phase rank plan as ``cosine_topk`` —
-    no shuffle except the final k·partitions window.
-
-    Zero vectors (scale = 0) would divide by zero; the synthetic
-    embeddings have none, and real pipelines drop them upstream.
-    """
+    """Every (query_id, vec_id, cosine) pair ``sq_int8_topk`` scores, self
+    pairs included: cosine of the int8-quantized vectors (exact integer
+    dot and norms, rounded), broadcast query side, no shuffle."""
     d0 = data.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v"))
     q0 = queries.select("query_id", to_double_array(vec_col).alias("v"))
 
@@ -482,24 +436,39 @@ def sq_int8_topk(
 
     cos = F.round(
         _int_dot(F.col("qq"), F.col("qd")) / (F.sqrt(F.col("nq")) * F.sqrt(F.col("nd"))),
-        round_digits,
+        _ROUND_DIGITS,
     )
-    scored = d.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id", "vec_id", cos.alias("cosine")
-    )
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(_rank_window()))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
+    return d.join(F.broadcast(q)).select("query_id", "vec_id", cos.alias("cosine"))
+
+
+def sq_int8_topk(
+    data: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate cosine top-k over scalar-quantized (int8) vectors.
+
+    The production rationale at 100 TB: an int8 corpus is 4× smaller than
+    float32 (16× vs double), so the scan is 4× less IO and the dot products
+    are integer SIMD — this is the standard first compression rung before
+    PQ. Accuracy loss is bounded (|Δcos| ≲ 1/127 per axis); the returned
+    score is the cosine OF THE QUANTIZED vectors, deterministically.
+
+    Determinism contract: quantization is round(127·x/max|x|) per element
+    (identical double ops both engines), dot/norms are EXACT integer
+    folds, and the only floats are two correctly-rounded sqrts + one
+    division, rounded to ``_ROUND_DIGITS`` before ranking. Ties break on
+    vec_id. Same broadcast + ``_topk`` plan as ``cosine_topk`` — no
+    shuffle except the rank's k·partitions exchange.
+
+    Zero vectors (scale = 0) would divide by zero; the synthetic
+    embeddings have none, and real pipelines drop them upstream.
+    """
+    scored = _sq_scored(data, queries, id_col, vec_col)
+    return _topk(
+        scored.filter(F.col("vec_id") != F.col("query_id")), k, "cosine", ascending=False
     )
 
 
@@ -590,6 +559,45 @@ def pq_encode(
     )
 
 
+def _adc_table(queries: DataFrame, books: DataFrame, m: int, dsub: int, vec_col: str) -> DataFrame:
+    """Per-query ADC distance table (query_id, j, cid, d2_ppm): each query
+    subvector's exact ppm squared distance to every codeword of its
+    subspace — m·ksub·|queries| rows, joined broadcast."""
+    qsubs = _sub_explode(
+        queries.select(F.col("query_id"), to_double_array(vec_col).alias("v")),
+        m,
+        dsub,
+        "query_id",
+    )
+    return qsubs.join(F.broadcast(books), "j").select(
+        "query_id", "j", "cid", _d2_ppm(F.col("sub"), F.col("cv")).alias("d2_ppm")
+    )
+
+
+def _pq_scored(
+    data: DataFrame,
+    queries: DataFrame,
+    books: DataFrame,
+    m: int,
+    dsub: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Every (query_id, vec_id, adc_ppm) pair ``pq_adc_topk`` scores with
+    the given codebooks, self pairs included: codes ⋈ broadcast distance
+    table, then the per-(query, vec) integer sum of m lookups."""
+    codes = pq_encode(data, books, m, dsub, id_col=id_col, vec_col=vec_col)
+    dtable = _adc_table(queries, books, m, dsub, vec_col)
+    return (
+        codes.join(
+            F.broadcast(dtable),
+            (codes["j"] == dtable["j"]) & (codes["code"] == dtable["cid"]),
+        )
+        .groupBy("query_id", F.col("id").alias("vec_id"))
+        .agg(F.sum("d2_ppm").cast("long").alias("adc_ppm"))
+    )
+
+
 def pq_adc_topk(
     data: DataFrame,
     queries: DataFrame,
@@ -611,47 +619,53 @@ def pq_adc_topk(
     Scale shape: encode = projection + broadcast join + struct-min hash
     agg (shuffle carries m partial minima per vector); search = codes ⋈
     broadcast distance-table (m·ksub·|queries| rows) + per-(query, vec)
-    integer sum + the same two-phase top-k rank as ``cosine_topk``. No
-    full-precision vector is touched at query time — that is the PQ
-    contract that lets 100 TB of vectors serve from the codes alone.
+    integer sum + the shared ``_topk`` rank. No full-precision vector is
+    touched at query time — that is the PQ contract that lets 100 TB of
+    vectors serve from the codes alone.
     """
-    dsub = dim // m
     books = pq_codebooks(data, m, ksub, dim, id_col=id_col, vec_col=vec_col)
+    scored = _pq_scored(data, queries, books, m, dim // m, id_col, vec_col)
+    return _topk(
+        scored.filter(F.col("vec_id") != F.col("query_id")), k, "adc_ppm", ascending=True
+    )
+
+
+def _ivf_pq_scored(
+    data: DataFrame,
+    queries: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    books: DataFrame,
+    nprobe: int,
+    m: int,
+    dsub: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Every (query_id, vec_id, adc_ppm) pair ``ivf_pq_topk`` scores with
+    the given centroids and codebooks, self pairs included. Candidate
+    restriction FIRST (codes ⋈ own list ⋈ broadcast probe lists), then
+    the ADC lookup — the join order that reads only the probed fraction
+    of the code table per query."""
+    lists = _ivf_assign(data, centroids, 1, id_col, vec_col, "vec_id").select(
+        "vec_id", "list_id"
+    )
+    qlists = _ivf_assign(
+        queries, centroids, nprobe, "query_id", vec_col, "query_id"
+    ).select("query_id", "list_id")
     codes = pq_encode(data, books, m, dsub, id_col=id_col, vec_col=vec_col)
-    qsubs = _sub_explode(
-        queries.select(F.col("query_id"), to_double_array(vec_col).alias("v")),
-        m,
-        dsub,
-        "query_id",
-    )
-    dtable = qsubs.join(F.broadcast(books), "j").select(
-        "query_id", "j", "cid", _d2_ppm(F.col("sub"), F.col("cv")).alias("d2_ppm")
-    )
-    scored = (
-        codes.join(
-            F.broadcast(dtable),
-            (codes["j"] == dtable["j"]) & (codes["code"] == dtable["cid"]),
-        )
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("vec_id"))
-        .agg(F.sum("d2_ppm").cast("long").alias("adc_ppm"))
-    )
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("adc_ppm").asc(), F.col("vec_id").asc()
-    )
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    final_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_ppm").asc(), F.col("vec_id").asc()
+    dtable = _adc_table(queries, books, m, dsub, vec_col)
+    cand = codes.join(lists, codes["id"] == lists["vec_id"]).join(
+        F.broadcast(qlists), "list_id"
     )
     return (
-        pruned.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "adc_ppm")
+        cand.join(
+            F.broadcast(dtable),
+            (cand["j"] == dtable["j"])
+            & (cand["code"] == dtable["cid"])
+            & (cand["query_id"] == dtable["query_id"]),
+        )
+        .groupBy(cand["query_id"], F.col("id").alias("vec_id"))
+        .agg(F.sum("d2_ppm").cast("long").alias("adc_ppm"))
     )
 
 
@@ -679,18 +693,12 @@ def ivf_pq_topk(
     Scale shape: list assignment and PQ encoding are both broadcast-
     centroid map passes over the corpus (one Arrow GEMM, one struct-min
     hash agg); query-time joins carry only codes ⋈ (broadcast probe table)
-    ⋈ (broadcast distance table); the top-k is the shared two-phase rank.
-    Determinism: coarse scores round to 6 before list ranking (ties cid
-    asc); ADC is exact ppm integers; final ties break vec_id asc.
+    ⋈ (broadcast distance table); the top-k is the shared ``_topk`` rank.
+    Determinism: coarse scores round to ``_ROUND_DIGITS`` before list
+    ranking (ties cid asc); ADC is exact ppm integers; final ties break
+    vec_id asc.
     """
-    dsub = dim // m
     centroids = seed_centroids(data, n_centroids, id_col, vec_col)
-    lists = _ivf_assign(data, centroids, 1, id_col, vec_col, "vec_id", 6).select(
-        "vec_id", "list_id"
-    )
-    qlists = _ivf_assign(
-        queries, centroids, nprobe, "query_id", vec_col, "query_id", 6
-    ).select("query_id", "list_id")
     # n_centroids == ksub draws the identical md5-ordered sample for the
     # coarse lists and the codebooks: reuse it (one TakeOrdered pass over
     # the corpus instead of two — at 100 TB each pass is a full scan).
@@ -698,49 +706,9 @@ def ivf_pq_topk(
         data, m, ksub, dim, id_col=id_col, vec_col=vec_col,
         seeds=centroids if n_centroids == ksub else None,
     )
-    codes = pq_encode(data, books, m, dsub, id_col=id_col, vec_col=vec_col)
-    qsubs = _sub_explode(
-        queries.select(F.col("query_id"), to_double_array(vec_col).alias("v")),
-        m,
-        dsub,
-        "query_id",
-    )
-    dtable = qsubs.join(F.broadcast(books), "j").select(
-        "query_id", "j", "cid", _d2_ppm(F.col("sub"), F.col("cv")).alias("d2_ppm")
-    )
-    # Candidate restriction FIRST (codes ⋈ own list ⋈ broadcast probe
-    # lists), then the ADC lookup — the join order that reads only the
-    # probed fraction of the code table per query.
-    cand = codes.join(lists, codes["id"] == lists["vec_id"]).join(
-        F.broadcast(qlists), "list_id"
-    )
-    scored = (
-        cand.join(
-            F.broadcast(dtable),
-            (cand["j"] == dtable["j"])
-            & (cand["code"] == dtable["cid"])
-            & (cand["query_id"] == dtable["query_id"]),
-        )
-        .filter(F.col("id") != cand["query_id"])
-        .groupBy(cand["query_id"], F.col("id").alias("vec_id"))
-        .agg(F.sum("d2_ppm").cast("long").alias("adc_ppm"))
-    )
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("adc_ppm").asc(), F.col("vec_id").asc()
-    )
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= k)
-        .drop("__pid", "__lrank")
-    )
-    final_w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_ppm").asc(), F.col("vec_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "adc_ppm")
+    scored = _ivf_pq_scored(data, queries, centroids, books, nprobe, m, dim // m, id_col, vec_col)
+    return _topk(
+        scored.filter(F.col("vec_id") != F.col("query_id")), k, "adc_ppm", ascending=True
     )
 
 
@@ -750,7 +718,6 @@ def semdedup_pairs(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): semantic near-duplicate
@@ -779,7 +746,7 @@ def semdedup_pairs(
     # spillable; at cluster scale the equivalent is checkpointing the
     # assignment to a temp table before the pair join.
     assigned = _ivf_assign(
-        data, cents, 1, id_col, vec_col, "vec_id", round_digits
+        data, cents, 1, id_col, vec_col, "vec_id"
     ).persist()  # release: caller (cache contract, queries/__init__)
     return embedding_neardup_pairs(
         assigned,
@@ -787,7 +754,6 @@ def semdedup_pairs(
         id_col="vec_id",
         vec_col="v",
         block_col="list_id",
-        round_digits=round_digits,
     )
 
 
@@ -808,47 +774,28 @@ def matryoshka_topk(
     dimensionality. Completes the engine's vector-compression ladder
     (int8 → PQ/ADC → SemDeDup → MRL truncation).
 
-    Both stages share the deterministic contract: scores rounded to 6
-    before ranking, ties on vec_id. The coarse stage reuses the
-    broadcast + two-phase-rank plan (no per-query reducer funnel); the
-    refine stage's exact cosine touches only candidates — a
-    dim/coarse_dim compute reduction. Deployment note: the parquet scan
-    still reads whole arrays; at 100 TB store the head ``coarse_dim``
-    dims as their OWN column so column pruning turns the compute
-    reduction into an IO reduction too.
+    Both stages share the deterministic contract: scores rounded to
+    ``_ROUND_DIGITS`` before ranking, ties on vec_id, and both rank with
+    ``_topk`` (the coarse cut k·refine_factor must stay <= 1000 for the
+    rank-limit pushdown; no per-query reducer funnel); the refine
+    stage's exact cosine touches only candidates — a dim/coarse_dim
+    compute reduction. Deployment note: the parquet scan still reads
+    whole arrays; at 100 TB store the head ``coarse_dim`` dims as their
+    OWN column so column pruning turns the compute reduction into an IO
+    reduction too.
     """
     d = data.select(F.col(id_col).alias("vec_id"), to_double_array(vec_col).alias("v"))
     q = queries.select(F.col("query_id"), to_double_array(vec_col).alias("qv"))
     head = F.slice(F.col("v"), 1, coarse_dim)
     qhead = F.slice(F.col("qv"), 1, coarse_dim)
-    coarse = F.round(cosine_similarity(qhead, head), 6)
+    coarse = F.round(cosine_similarity(qhead, head), _ROUND_DIGITS)
     scored = d.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id", "vec_id", "v", "qv", coarse.alias("coarse_cos")
     )
-    m = k * refine_factor
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("coarse_cos").desc(), F.col("vec_id").asc()
-    )
-    cand_w = Window.partitionBy("query_id").orderBy(
-        F.col("coarse_cos").desc(), F.col("vec_id").asc()
-    )
-    candidates = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= m)
-        .withColumn("__crank", F.row_number().over(cand_w))
-        .filter(F.col("__crank") <= m)
-        .drop("__pid", "__lrank", "__crank")
-    )
-    exact = F.round(cosine_similarity(F.col("qv"), F.col("v")), 6)
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        candidates.select("query_id", "vec_id", exact.alias("cosine"))
-        .withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
+    candidates = _topk(scored, k * refine_factor, "coarse_cos", ascending=False)
+    exact = F.round(cosine_similarity(F.col("qv"), F.col("v")), _ROUND_DIGITS)
+    return _topk(
+        candidates.select("query_id", "vec_id", exact.alias("cosine")), k, "cosine", ascending=False
     )
 
 

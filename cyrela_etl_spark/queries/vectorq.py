@@ -242,7 +242,7 @@ WHERE round({_SQL_COS.format(a='a.v', b='b.v')}, 6) >= {_NEARDUP_T}
 
 # ---------------------------------------------------------------------------
 # vector_l2_topk — exact Euclidean top-k (metric twin of cosine; same
-# broadcast + two-phase rank plan; sqrt(aa-2ab+bb) expansion keeps the
+# broadcast + rank-limited top-k plan; sqrt(aa-2ab+bb) expansion keeps the
 # float fold order identical to the oracle's list_dot_product).
 # ---------------------------------------------------------------------------
 def vector_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,7 +580,7 @@ register("vector_matryoshka_topk", vector_matryoshka_topk, ORACLE_MRL)
 # BOTH rankings in SQL, so the report itself is verified, not just the
 # indexes it grades.
 #
-# Plan: reuses the audited two-phase top-k and IVF subplans; the report
+# Plan: reuses the audited rank-limited top-k and IVF subplans; the report
 # join matches two ≤(queries·k)-row rank lists — broadcast-sized by
 # contract. Left join from exact keeps missed neighbors visible.
 # ---------------------------------------------------------------------------
@@ -641,8 +641,8 @@ register("vector_recall_report", vector_recall_report, _recall_oracle())
 # embedding quality (a low agreement rate flags label noise or a broken
 # embedding space).
 #
-# Plan: the audited two-phase exact top-k subplan (queries broadcast,
-# partition-local prune) → neighbor labels via ONE id-keyed join →
+# Plan: the audited exact top-k subplan (queries broadcast, map-side
+# rank limit) → neighbor labels via ONE id-keyed join →
 # (query, label) hash count → struct-max argmax (no window over the
 # candidate set) → broadcast join back to the query's own label. Output
 # is query-sized.

@@ -1,6 +1,6 @@
 """Model check for vector_recall_report (queries/vectorq.py) —
 model-check wave 3. The recall report composes BOTH retrieval paths
-(exact two-phase cosine top-k and the IVF probe pipeline) with a
+(exact cosine top-k and the IVF probe pipeline) with a
 hit-counting left join; this model recomputes the whole composition:
 
 - the exact side as the sequential-fold cosine model (independent);

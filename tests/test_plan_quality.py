@@ -298,32 +298,46 @@ def test_zipf_topk_is_take_ordered_not_vocab_window(spark, sf_dir):
 
 
 def test_ann_topk_rank_prunes_before_exchange(spark, sf_dir):
-    """The ANN top-k rank must plan a WindowGroupLimit BELOW the window's
-    exchange (Spark 4's rank-limit pushdown): each map partition ships
-    only its local top-k, so the final rank shuffle carries
+    """Every vector top-k rank must plan a WindowGroupLimit BELOW the
+    window's exchange (Spark 4's rank-limit pushdown): each map partition
+    ships only its local top-k, so the final rank shuffle carries
     k * partitions * |queries| rows at ANY corpus scale. Found by the r13
-    ANN scale curve (ivf/sq legs showed ~0 shuffle bytes at 2M vectors);
-    this pins it — losing the pushdown (e.g. by breaking the rank
-    expression's filter shape) would make the rank shuffle corpus-sized."""
-    from cyrela_etl_spark.queries.vectorq import vector_ivf_topk, vector_sq_int8_topk
+    ANN scale curve (ivf/sq legs showed ~0 shuffle bytes at 2M vectors).
+    Exactly ONE Exchange may sit between the first and last group limit:
+    the rank's own. A second one is a hand-written pre-rank stage that
+    Spark's pushdown already does; none means the pushdown is lost (e.g.
+    by breaking the rank expression's filter shape) and the rank shuffle
+    is corpus-sized."""
+    from cyrela_etl_spark.queries import load_all
 
-    for fn in (vector_ivf_topk, vector_sq_int8_topk):
-        plan = _plan(fn(spark, sf_dir))
+    registry = load_all()
+    for name in (
+        "vector_cosine_topk",
+        "vector_rhp_lsh_topk",
+        "vector_ivf_topk",
+        "vector_l2_topk",
+        "vector_sq_int8_topk",
+        "vector_pq_adc_topk",
+        "vector_ivf_pq_topk",
+        "vector_matryoshka_topk",
+    ):
+        plan = _plan(registry[name][0](spark, sf_dir))
         # the pushdown plants a FINAL group limit above the window's
         # exchange and a PARTIAL one below it — assert the structure
-        # directly (two occurrences with an Exchange strictly between),
-        # not first-index positions across the whole plan string, which
-        # an unrelated upstream Exchange would break spuriously
-        # (ADVICE r13)
+        # directly (occurrences with Exchanges strictly between), not
+        # first-index positions across the whole plan string, which an
+        # unrelated upstream Exchange would break spuriously (ADVICE r13)
         lines = plan.splitlines()
         w_idx = [i for i, line in enumerate(lines) if "WindowGroupLimit" in line]
-        assert len(w_idx) >= 2, f"{fn.__name__}: partial+final WindowGroupLimit\n{plan}"
+        assert len(w_idx) >= 2, f"{name}: partial+final WindowGroupLimit\n{plan}"
         between = [
             i
             for i, line in enumerate(lines)
             if "Exchange" in line and w_idx[0] < i < w_idx[-1]
         ]
-        assert between, f"{fn.__name__}: no Exchange between the group limits\n{plan}"
+        assert len(between) == 1, (
+            f"{name}: {len(between)} Exchanges between the group limits, want 1\n{plan}"
+        )
     spark.catalog.clearCache()
 
 

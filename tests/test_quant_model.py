@@ -8,8 +8,8 @@ What these pin beyond the oracle twins:
 - SQ: the per-vector symmetric scale (max|x|), round-half-away-from-zero
   int8 mapping (Spark round = BigDecimal HALF_UP on the SHORTEST double
   repr — modeled via Decimal(repr(x)), ADVICE r10), EXACT integer
-  dot/norm folds, and the (cosine desc, vec_id asc) tie order across the
-  two-phase rank.
+  dot/norm folds, and the (cosine desc, vec_id asc) tie order of the
+  shared top-k rank.
 - PQ: the md5-seeded deterministic codebook sample (ORDER BY
   md5(cast(id)) asc, id asc LIMIT ksub — engine-replayable), subvector
   slicing, the lexicographic (d2_ppm, cid) struct-min argmin (ties break

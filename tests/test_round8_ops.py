@@ -352,7 +352,7 @@ def test_shuffle_width_invariance_representatives(spark, sf_dir):
     """Results must not depend on shuffle width (what actually changes on
     a 1000-executor cluster). Full block-B sweep at 7-vs-32 partitions was
     35/35 identical this round (NOTES.md); this keeps three
-    representatives — a two-phase top-k, a histogram window, and a
+    representatives — a rank-limited top-k, a histogram window, and a
     decimal-fold regression — under permanent guard at two widths."""
     from cyrela_etl_spark.queries import load_all
 

@@ -37,7 +37,7 @@ def hub_corpus(spark):
 def _sum_sq_cluster_sizes(df, id_col="vec_id", vec_col="embedding"):
     cents = seed_centroids(df, N_CLUSTERS, id_col=id_col, vec_col=vec_col)
     sizes = (
-        _ivf_assign(df, cents, 1, id_col, vec_col, "vec_id", 6)
+        _ivf_assign(df, cents, 1, id_col, vec_col, "vec_id")
         .groupBy("list_id")
         .count()
     )

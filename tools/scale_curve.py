@@ -41,7 +41,7 @@ from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Column, DataFrame, Window, functions as F  # noqa: E402
+from pyspark.sql import Column, DataFrame, functions as F  # noqa: E402
 
 from bench import fingerprint  # noqa: E402
 from cyrela_etl_spark.session import get_spark  # noqa: E402
@@ -546,7 +546,7 @@ def semdedup(spark, sizes: list[int]) -> None:
     def sum_sq_sizes(df, n_clusters, id_col, vec_col) -> tuple[int, int]:
         cents = seed_centroids(df, n_clusters, id_col=id_col, vec_col=vec_col)
         agg = (
-            _ivf_assign(df, cents, 1, id_col, vec_col, "vec_id", 6)
+            _ivf_assign(df, cents, 1, id_col, vec_col, "vec_id")
             .groupBy("list_id")
             .count()
             .agg(F.sum(F.col("count") * F.col("count")).alias("ss"), F.max("count").alias("mx"))
@@ -592,11 +592,17 @@ def semdedup(spark, sizes: list[int]) -> None:
 @family([1, 10, 100])
 def wave7(spark, sizes: list[int]) -> None:
     """The late round-7 operators (containment pairs, LPA communities,
-    RAKE keywords, n-gram novelty), each run as its registry query over
-    the tagged corpus (``tagged_corpus``): disjoint per-replica
-    vocabularies keep per-gram document frequency scale-invariant (the
-    rare-gram 2<=df<=5 window keeps firing) and no cross-replica pairs
-    inflate outputs superlinearly. Timed action = ``bench.fingerprint``."""
+    RAKE keywords, n-gram novelty), each run as its registry query.
+    Containment, LPA and novelty read the tagged corpus
+    (``tagged_corpus``): disjoint per-replica vocabularies keep per-gram
+    document frequency scale-invariant (the rare-gram 2<=df<=5 window
+    keeps firing) and no cross-replica pairs inflate outputs
+    superlinearly. RAKE reads plain replicas instead: it splits phrases
+    on stopwords, which the token tag would hide, and it has no pairwise
+    term to protect. Replication multiplies each word's sum(plen) and
+    count(1) by s, so its top-20 phrases and scores are scale-invariant
+    (only n_occurrences grows s-fold). Timed action =
+    ``bench.fingerprint``."""
     from cyrela_etl_spark.queries import load_all
 
     registry = load_all()
@@ -607,11 +613,18 @@ def wave7(spark, sizes: list[int]) -> None:
         "text_ngram_novelty",
     ]
     for s in sizes:
-        path = tagged_corpus(spark, s)
-        n_docs = spark.read.parquet(f"{path}/documents.parquet").count()
+        tagged = tagged_corpus(spark, s)
+        plain = f"{WORK}/plain_docs_{s}x"
+        docs = replicate(read_table(spark, SF_DIR, "documents"), s, {"doc_id": 10_000_000})
+        write(docs, f"{plain}/documents.parquet", partitions=max(4, s))
+        n_docs = spark.read.parquet(f"{tagged}/documents.parquet").count()
         for op in ops:
-            (rows, _checksum), wall = timed(lambda: fingerprint(registry[op][0](spark, path)))
-            result(scale=f"{s}x", docs=n_docs, op=op, rows=rows, wall=f"{wall:.1f}s")
+            path = plain if op == "text_rake_keywords" else tagged
+            (rows, checksum), wall = timed(lambda: fingerprint(registry[op][0](spark, path)))
+            result(
+                scale=f"{s}x", docs=n_docs, op=op, rows=rows, checksum=checksum,
+                wall=f"{wall:.1f}s",
+            )
             spark.catalog.clearCache()
 
 
@@ -1269,174 +1282,39 @@ ANN_CENT, ANN_NPROBE = 16, 2  # queries/vectorq.py vector_ivf_topk
 ANN_M, ANN_KSUB, ANN_DIM = 8, 16, 64  # queries/vectorq.py vector_pq_adc_topk
 
 
-def _ann_two_phase_topk(scored: DataFrame, score_col: str, ascending: bool) -> DataFrame:
-    """The shared two-phase rank (similarity.py pq_adc_topk /
-    sq_int8_topk plan shape): per-partition prune to k, then the final
-    k·partitions window."""
-    order = [
-        F.col(score_col).asc() if ascending else F.col(score_col).desc(),
-        F.col("vec_id").asc(),
-    ]
-    local_w = Window.partitionBy("query_id", "__pid").orderBy(*order)
-    pruned = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrank", F.row_number().over(local_w))
-        .filter(F.col("__lrank") <= ANN_K)
-        .drop("__pid", "__lrank")
-    )
-    final_w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= ANN_K)
-        .select("query_id", "rank", "vec_id", score_col)
-    )
-
-
-def _ann_ivf_scored(data, queries, centroids, with_self: bool) -> DataFrame:
-    """ivf_topk's probe plan with pinned centroids."""
-    from cyrela_etl_spark.functions.vectors import cosine_similarity
-    from cyrela_etl_spark.operators.similarity import _ivf_assign
-
-    d = _ivf_assign(data, centroids, 1, "vec_id", "embedding", "vec_id", 6)
-    q = _ivf_assign(
-        queries, centroids, ANN_NPROBE, "query_id", "embedding", "query_id", 6
-    ).withColumnRenamed("v", "qv")
-    cond = d["list_id"] == q["list_id"]
-    if not with_self:
-        cond = cond & (F.col("vec_id") != F.col("query_id"))
-    cos = F.round(cosine_similarity(F.col("qv"), F.col("v")), 6)
-    return d.join(F.broadcast(q), cond).select("query_id", "vec_id", cos.alias("cosine"))
-
-
-def _ann_ivf_leg(data, queries, centroids) -> DataFrame:
-    from cyrela_etl_spark.operators.similarity import _rank_window
-
-    return (
-        _ann_ivf_scored(data, queries, centroids, with_self=False)
-        .withColumn("rank", F.row_number().over(_rank_window()))
-        .filter(F.col("rank") <= ANN_K)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
-
-
-def _ann_sq_scored(data, queries, with_self: bool) -> DataFrame:
-    """sq_int8_topk's quantize + integer-dot scoring."""
-    from cyrela_etl_spark.operators.similarity import _abs_max, _int_dot, quantize_int8
-
-    def quant(df, idc, qname):
-        withv = df.select(F.col(idc), F.col("embedding").alias("v")).select(
-            "*", _abs_max(F.col("v")).alias("s")
-        )
-        return withv.select(idc, quantize_int8(F.col("v"), F.col("s")).alias(qname))
-
-    d = quant(data, "vec_id", "qd").select(
-        "vec_id", "qd", _int_dot(F.col("qd"), F.col("qd")).alias("nd")
-    )
-    q = quant(queries, "query_id", "qq").select(
-        "query_id", "qq", _int_dot(F.col("qq"), F.col("qq")).alias("nq")
-    )
-    cos = F.round(
-        _int_dot(F.col("qq"), F.col("qd")) / (F.sqrt(F.col("nq")) * F.sqrt(F.col("nd"))), 6
-    )
-    cond = F.col("vec_id") != F.col("query_id") if not with_self else F.lit(True)
-    return d.join(F.broadcast(q), cond).select("query_id", "vec_id", cos.alias("cosine"))
-
-
-def _ann_dtable(queries, books) -> DataFrame:
-    """Per-query ADC distance table (query_id, j, cid, d2_ppm)."""
-    from cyrela_etl_spark.operators.similarity import _d2_ppm, _sub_explode
-
-    qsubs = _sub_explode(
-        queries.select(F.col("query_id"), F.col("embedding").alias("v")),
-        ANN_M,
-        ANN_DIM // ANN_M,
-        "query_id",
-    )
-    return qsubs.join(F.broadcast(books), "j").select(
-        "query_id", "j", "cid", _d2_ppm(F.col("sub"), F.col("cv")).alias("d2_ppm")
-    )
-
-
-def _ann_pq_scored(data, queries, books, with_self: bool) -> DataFrame:
-    """pq_adc_topk's encode + distance-table lookup with pinned codebooks."""
-    from cyrela_etl_spark.operators.similarity import pq_encode
-
-    codes = pq_encode(data, books, ANN_M, ANN_DIM // ANN_M, id_col="vec_id", vec_col="embedding")
-    dtable = _ann_dtable(queries, books)
-    joined = codes.join(
-        F.broadcast(dtable), (codes["j"] == dtable["j"]) & (codes["code"] == dtable["cid"])
-    )
-    if not with_self:
-        joined = joined.filter(F.col("id") != F.col("query_id"))
-    return joined.groupBy("query_id", F.col("id").alias("vec_id")).agg(
-        F.sum("d2_ppm").cast("long").alias("adc_ppm")
-    )
-
-
-def _ann_ivfpq_scored(data, queries, centroids, books, with_self: bool) -> DataFrame:
-    """ivf_pq_topk's candidate-restriction-first plan with pinned
-    centroids + codebooks."""
-    from cyrela_etl_spark.operators.similarity import _ivf_assign, pq_encode
-
-    lists = _ivf_assign(data, centroids, 1, "vec_id", "embedding", "vec_id", 6).select(
-        "vec_id", "list_id"
-    )
-    qlists = _ivf_assign(
-        queries, centroids, ANN_NPROBE, "query_id", "embedding", "query_id", 6
-    ).select("query_id", "list_id")
-    codes = pq_encode(data, books, ANN_M, ANN_DIM // ANN_M, id_col="vec_id", vec_col="embedding")
-    dtable = _ann_dtable(queries, books)
-    cand = codes.join(lists, codes["id"] == lists["vec_id"]).join(F.broadcast(qlists), "list_id")
-    joined = cand.join(
-        F.broadcast(dtable),
-        (cand["j"] == dtable["j"])
-        & (cand["code"] == dtable["cid"])
-        & (cand["query_id"] == dtable["query_id"]),
-    )
-    if not with_self:
-        joined = joined.filter(F.col("id") != cand["query_id"])
-    return joined.groupBy(cand["query_id"], F.col("id").alias("vec_id")).agg(
-        F.sum("d2_ppm").cast("long").alias("adc_ppm")
-    )
-
-
 def _ann_legs(queries, centroids, books: Callable[[], DataFrame]) -> list[tuple]:
-    """(op, top-k fn, scored-with-self fn, score column) per ANN op, with
-    the given pinned centroids and codebooks."""
-    return [
-        (
-            "ivf",
-            lambda d: _ann_ivf_leg(d, queries, centroids),
-            lambda d: _ann_ivf_scored(d, queries, centroids, with_self=True),
-            "cosine",
-        ),
-        (
-            "sq_int8",
-            lambda d: _ann_two_phase_topk(
-                _ann_sq_scored(d, queries, with_self=False), "cosine", ascending=False
-            ),
-            lambda d: _ann_sq_scored(d, queries, with_self=True),
-            "cosine",
-        ),
-        (
-            "pq_adc",
-            lambda d: _ann_two_phase_topk(
-                _ann_pq_scored(d, queries, books(), with_self=False), "adc_ppm", ascending=True
-            ),
-            lambda d: _ann_pq_scored(d, queries, books(), with_self=True),
-            "adc_ppm",
-        ),
+    """(op, top-k fn, scored-with-self fn, score column) per ANN op: the
+    operator's own scoring function over the given pinned centroids and
+    codebooks, ranked to ANN_K by the operators' shared ``_topk``."""
+    from cyrela_etl_spark.operators.similarity import (
+        _ivf_pq_scored,
+        _ivf_scored,
+        _pq_scored,
+        _sq_scored,
+        _topk,
+    )
+
+    dsub = ANN_DIM // ANN_M
+    scorers = [
+        ("ivf", lambda d: _ivf_scored(d, queries, centroids, ANN_NPROBE), "cosine"),
+        ("sq_int8", lambda d: _sq_scored(d, queries), "cosine"),
+        ("pq_adc", lambda d: _pq_scored(d, queries, books(), ANN_M, dsub), "adc_ppm"),
         (
             "ivf_pq",
-            lambda d: _ann_two_phase_topk(
-                _ann_ivfpq_scored(d, queries, centroids, books(), with_self=False),
-                "adc_ppm",
-                ascending=True,
-            ),
-            lambda d: _ann_ivfpq_scored(d, queries, centroids, books(), with_self=True),
+            lambda d: _ivf_pq_scored(d, queries, centroids, books(), ANN_NPROBE, ANN_M, dsub),
             "adc_ppm",
         ),
     ]
+
+    def topk(scored: Callable[[DataFrame], DataFrame], col: str):
+        return lambda d: _topk(
+            scored(d).filter(F.col("vec_id") != F.col("query_id")),
+            ANN_K,
+            col,
+            ascending=col == "adc_ppm",  # a distance ranks ascending, a cosine descending
+        )
+
+    return [(name, topk(scored, col), scored, col) for name, scored, col in scorers]
 
 
 @family([1, 10, 100, 1000], ui=True)
@@ -1453,15 +1331,15 @@ def ann(spark, sizes: list[int]) -> None:
     Training is PINNED on the 1x base (the production contract: IVF
     centroids and PQ codebooks are trained on a bounded sample, never the
     full corpus), so every replica copy of a vector gets the same list
-    assignment and PQ code at every scale. The legs therefore compose the
-    operators' own internals (seed_centroids / _ivf_assign / pq_codebooks
-    / pq_encode / the shared two-phase rank) with the pinned training
-    tables; a PARITY check at 1x asserts each composed top-k equals the
-    public operator's output row-for-row (at 1x "trained on the base" and
-    "trained on the corpus" coincide).
+    assignment and PQ code at every scale. The legs therefore call each
+    operator's own scoring function (_ivf_scored / _sq_scored /
+    _pq_scored / _ivf_pq_scored) with the pinned training tables and rank
+    with the operators' shared _topk; a PARITY check at 1x asserts each
+    leg's top-k equals the public operator's output row-for-row (at 1x
+    "trained on the base" and "trained on the corpus" coincide).
 
     Per (scale, op): top-k wall (assignment/encode + candidate join +
-    scoring + two-phase rank to k=5 per query), and a scored checksum —
+    scoring + rank to k=5 per query), and a scored checksum —
     count + integer score sum over ALL (query, candidate) pairs the op
     scores, WITHOUT the self-pair filter. On a value-identical replica
     corpus with pinned training it must be EXACTLY s-fold; a drift means
