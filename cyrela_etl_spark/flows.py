@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 
 from cyrela_etl_spark.operators.wallet import normalize_dates, wallet_features
 from cyrela_etl_spark.pipeline import Pipeline
+from cyrela_etl_spark.schemas import wallet_schema
 from cyrela_etl_spark.sources.csv import read_wallet_csv, write_csv
 from cyrela_etl_spark.sources.jdbc import write_jdbc
 from cyrela_etl_spark.sources.zones import ZoneStore
@@ -82,7 +83,10 @@ def wallet_flow(
 
     @pipe.stage("features_serving", retries=retries, retry_delay_s=retry_delay_s)
     def features_serving(ctx: dict[str, Any]):
-        curated = spark.read.parquet(ctx["parse_curated"])
+        # parse_curated wrote this parquet with wallet_schema() one stage
+        # earlier: declaring it skips the footer-inference job of a bare
+        # read (tests/test_pipeline.py pins the two schemas equal).
+        curated = spark.read.schema(wallet_schema()).parquet(ctx["parse_curated"])
         feats = wallet_features(curated)
         target = store.path("serving", "cyrela/wallet")
         write_csv(feats, target)
@@ -92,7 +96,7 @@ def wallet_flow(
 
         @pipe.stage("load_dw", retries=retries, retry_delay_s=retry_delay_s)
         def load_dw(ctx: dict[str, Any]):
-            curated = spark.read.parquet(ctx["parse_curated"])
+            curated = spark.read.schema(wallet_schema()).parquet(ctx["parse_curated"])
             write_jdbc(curated, jdbc_url, jdbc_table)
             return jdbc_table
 

@@ -23,8 +23,8 @@ assignment, so the corpus is scanned once. Empty clusters drop out of
 the next round's centroid set (mirrored by the oracle).
 
 Reference parity note: the reference repo has no clustering operator;
-this extends the engine's similarity family (IVF seeding at
-operators/similarity.py:236 cites the same sampling scheme).
+this extends the engine's similarity family (IVF seeding in
+operators/similarity.py `seed_centroids` uses the same sampling scheme).
 """
 
 from __future__ import annotations

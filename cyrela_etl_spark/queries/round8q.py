@@ -1633,8 +1633,8 @@ register("scale_partition_balance", scale_partition_balance, _partition_balance_
 
 # ---------------------------------------------------------------------------
 # corpus_quality_ablation — per-rule ablation of the Gopher filter set
-# (rule expressions verbatim from quality_gopher_rules,
-# queries/textq.py:2343 — kept in sync by the shared constants): for each
+# (rule expressions verbatim from queries/textq.py quality_gopher_rules
+# — kept in sync by the shared constants): for each
 # rule, how many documents fail it, how many fail ONLY it (the rule's
 # marginal kill count — the number a threshold change would save), and
 # its removal share. One pass over the corpus, one aggregate, 5-row

@@ -637,9 +637,9 @@ SELECT * FROM unmatched
 # stream_bus_replay — deterministic UNBOUNDED-source stand-in finally under
 # the driver oracle (VERDICT r7 item 7 / r8 item 3): the events table is
 # batch-encoded into Kafka-shaped bus envelopes (key/value bytes, topic,
-# partition, offset, timestamp — streaming/ops.py:101-127), laid out as a
-# 4-file replay log, then RE-CONSUMED as a real multi-micro-batch stream
-# (maxFilesPerTrigger=1 -> 4 batches through the DataSource-V2 path),
+# partition, offset, timestamp — streaming/ops.py to_bus_envelope), laid
+# out as a 4-file replay log, then RE-CONSUMED as a real multi-micro-batch
+# stream (maxFilesPerTrigger=1 -> 4 batches through the DataSource-V2 path),
 # JSON-decoded against an explicit schema and aggregated per event_type.
 # Unlike the rate source, every timestamp comes from the data, so the
 # drained result is deterministic and oracle-checkable. Production swaps

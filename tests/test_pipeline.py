@@ -6,7 +6,7 @@ import pytest
 
 from cyrela_etl_spark.flows import wallet_flow
 from cyrela_etl_spark.pipeline import Pipeline, PipelineError
-from cyrela_etl_spark.schemas import WALLET_COLUMNS
+from cyrela_etl_spark.schemas import WALLET_COLUMNS, wallet_schema
 from cyrela_etl_spark.sources.zones import ZoneStore
 
 # A 4-row wallet CSV (23 cols). Row 1 is the header=1 casualty in
@@ -97,8 +97,12 @@ def test_wallet_flow_end_to_end(spark, store, tmp_path):
     assert store.list_keys("landing", "cyrela/") == []
     assert store.list_keys("processing", "cyrela/") == []
 
-    # Curated: ISO dates, header=1 drop applied.
-    curated = spark.read.parquet(str(tmp_path / "curated" / "cyrela" / "wallet")).toPandas()
+    # Curated: ISO dates, header=1 drop applied. The parquet's own schema
+    # is wallet_schema(), which features_serving and load_dw declare on
+    # read instead of inferring it.
+    curated_df = spark.read.parquet(str(tmp_path / "curated" / "cyrela" / "wallet"))
+    assert curated_df.schema == wallet_schema()
+    curated = curated_df.toPandas()
     assert len(curated) == 3  # 4 rows - first data row
     assert "CLIENTE X1" not in set(curated["cliente"])
     assert set(curated["dt_venda"]) == {"2018-01-31", "2017-12-01", "2016-10-10"}
