@@ -473,74 +473,42 @@ def main() -> None:
     # first checkpoint 1.38-1.55 vs steady-state 0.88-1.18), biasing
     # the ratio and tripping the drift flag.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # Bounded retry-on-unstable (VERDICT r17 item 8): two consecutive
-    # driver rounds recorded `stable: false` artifacts, which settle
-    # nothing round-over-round. When the interleaved probe series flags
-    # the sweep non-stationary, re-run the WHOLE sweep once (default;
-    # SPARK_GRAFT_BENCH_RETRY_UNSTABLE=0 disables) so the artifact of
-    # record has a chance of being weather-comparable. Additions only:
-    # the timed action, HEADLINE, per-query median_of_{runs} and the
-    # contract line are untouched — a retried run is simply the same
-    # sweep again, and the superseded attempt's totals/probe series are
-    # preserved in BENCH_DIAG under "superseded_attempts".
-    max_attempts = 1 + max(0, int(os.environ.get("SPARK_GRAFT_BENCH_RETRY_UNSTABLE", "1")))
-    superseded_attempts: list[dict] = []
-    # uptime is measured from the first attempt, so a retried sweep's
-    # session_uptime_at_query_start_sec includes the superseded sweep
     bench_t0 = time.perf_counter()
-    for attempt in range(1, max_attempts + 1):
-        probe_once(spark)
-        probe_samples: list[tuple[float, float]] = [probe_once(spark)]
+    probe_once(spark)
+    probe_samples: list[tuple[float, float]] = [probe_once(spark)]
 
-        timings: dict[str, float] = {}
-        # Diagnostics embedded in the artifact (VERDICT r5 item 3: the r4
-        # "stream_tumbling 21.7 s in-bench vs 1.7 s standalone" session-
-        # degradation question was unanswerable because only medians were
-        # recorded). Per-query raw samples + session uptime at query start +
-        # host loadavg make any future in-bench anomaly diagnosable from the
-        # BENCH_r{N}.json alone.
-        samples_by_query: dict[str, list[float]] = {}
-        uptime_at_start: dict[str, float] = {}
-        load_start = os.getloadavg()
-        for name in headline:
-            fn, _oracle = registry[name]
-            uptime_at_start[name] = round(time.perf_counter() - bench_t0, 1)
-            samples: list[float] = []
-            for r in range(runs):
-                t0 = time.perf_counter()
-                n, _checksum = fingerprint(fn(spark, sf_dir))
-                samples.append(time.perf_counter() - t0)
-                print(f"# {name} run {r + 1}/{runs}: {n} rows in {samples[-1]:.2f}s", file=sys.stderr)
-                # Queries that persist() internally (the LSH family) would
-                # otherwise accumulate stale cached relations across runs.
-                spark.catalog.clearCache()
-            # 2 decimals: 61 queries x 1 char = real bytes against the
-            # driver capture budget; 3-decimal raw samples live in BENCH_DIAG
-            timings[name] = round(statistics.median(samples), 2)
-            samples_by_query[name] = [round(s, 3) for s in samples]
-            if len(timings) % PROBE_EVERY == 0:
-                probe_samples.append(probe_once(spark))
+    timings: dict[str, float] = {}
+    # Diagnostics embedded in the artifact (VERDICT r5 item 3: the r4
+    # "stream_tumbling 21.7 s in-bench vs 1.7 s standalone" session-
+    # degradation question was unanswerable because only medians were
+    # recorded). Per-query raw samples + session uptime at query start +
+    # host loadavg make any future in-bench anomaly diagnosable from the
+    # BENCH_r{N}.json alone.
+    samples_by_query: dict[str, list[float]] = {}
+    uptime_at_start: dict[str, float] = {}
+    load_start = os.getloadavg()
+    for name in headline:
+        fn, _oracle = registry[name]
+        uptime_at_start[name] = round(time.perf_counter() - bench_t0, 1)
+        samples: list[float] = []
+        for r in range(runs):
+            t0 = time.perf_counter()
+            n, _checksum = fingerprint(fn(spark, sf_dir))
+            samples.append(time.perf_counter() - t0)
+            print(f"# {name} run {r + 1}/{runs}: {n} rows in {samples[-1]:.2f}s", file=sys.stderr)
+            # Queries that persist() internally (the LSH family) would
+            # otherwise accumulate stale cached relations across runs.
+            spark.catalog.clearCache()
+        # 2 decimals: 61 queries x 1 char = real bytes against the
+        # contract line's ~2 KB budget; 3-decimal raw samples live in BENCH_DIAG
+        timings[name] = round(statistics.median(samples), 2)
+        samples_by_query[name] = [round(s, 3) for s in samples]
+        if len(timings) % PROBE_EVERY == 0:
+            probe_samples.append(probe_once(spark))
 
-        total = round(sum(timings.values()), 3)
-        probe_samples.append(probe_once(spark))
-        end_cal = calibrate(probe_samples)
-        if end_cal["stable"] or attempt == max_attempts:
-            break
-        superseded_attempts.append({
-            "attempt": attempt,
-            "total_wall_sec": total,
-            "host_ratio": round(end_cal["host_ratio"], 3),
-            "normalized_total": round(total / end_cal["host_ratio"], 3),
-            "mode": end_cal["mode"],
-            "stable": False,
-            "queries": dict(timings),
-            "probe_checkpoints": [[round(x, 3) for x in s] for s in probe_samples],
-        })
-        print(
-            f"# probe series unstable on attempt {attempt}/{max_attempts}; "
-            "re-running the sweep (superseded attempt recorded in BENCH_DIAG)",
-            file=sys.stderr,
-        )
+    total = round(sum(timings.values()), 3)
+    probe_samples.append(probe_once(spark))
+    cal = calibrate(probe_samples)
 
     # Final checkpoint, then the normalization. host_ratio is the MEAN
     # over all checkpoints of (spark kernel / pinned ref): ratio 1.0 =
@@ -594,7 +562,6 @@ def main() -> None:
     # A flagged run still emits normalized_total, but the honest read is
     # "calibration unreliable this run — re-run"; raw remains an upper
     # bound either way.
-    cal = end_cal  # calibrated on the kept attempt's full probe series
     sp_samples, py_samples, bw_samples = cal["sp"], cal["py"], cal["bw"]
     ratio_spark, ratio_py = cal["ratio_spark"], cal["ratio_py"]
     spark_drift = cal["spark_drift"]
@@ -661,11 +628,6 @@ def main() -> None:
             # their deltas as weather, not engine, unless the plan
             # changed. Self-identifying, no judge archaeology needed.
             "weather": attribute_weather(list(timings), probe_samples),
-            # retry-on-unstable bookkeeping (VERDICT r17 item 8): the
-            # kept artifact is always the LAST attempt; earlier unstable
-            # sweeps are preserved here in full for the audit trail
-            "attempts": attempt,
-            "superseded_attempts": superseded_attempts,
         }, fh, indent=1)
     # `load_ok` in the contract line self-certifies the run: False means
     # the host never went idle within the bounded wait and the numbers

@@ -89,29 +89,39 @@ GROUP BY c_mktsegment
 
 
 # ---------------------------------------------------------------------------
-# storage_table_roundtrip — the lakehouse TABLE layer (Delta-style managed
-# tables over zone parquet; sources/zones.py promote_table): overwrite a
-# catalog table with half of supplier, append the other half, then read
-# BACK through the catalog (spark.table, not the path) and aggregate.
-# A stale file listing (missing REFRESH), a stale location (re-bound
-# tempdir), or append writing over overwrite all break the totals.
+# storage_table_roundtrip — the lakehouse TABLE layer (sources/txn.py):
+# half of supplier (even s_suppkey) is committed as version 1 of a txn
+# table, the other half is APPENDED as version 2 against that read
+# version, and the latest version is read BACK through the manifest log
+# (txn_read, not the path) and aggregated. A stale manifest read, a
+# dropped chain directory, or an append that rewrote the base all break
+# the totals. Nothing is registered in the session catalog.
 # ---------------------------------------------------------------------------
 def storage_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+
+    from cyrela_etl_spark.sources.txn import txn_append, txn_init, txn_read
+
     root = tempfile.mkdtemp(prefix="zone_tbl_")
-    store = ZoneStore(spark, root)
-    supp = read_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey", "s_acctbal"
-    )
-    store.promote_table(supp.filter(F.col("s_suppkey") % 2 == 0), "curated", "supp", "zone_supplier")
-    store.promote_table(
-        supp.filter(F.col("s_suppkey") % 2 == 1), "curated", "supp", "zone_supplier", mode="append"
-    )
-    return store.table("zone_supplier").groupBy("s_nationkey").agg(
-        F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum(F.col("s_acctbal").cast("decimal(12,2)")).cast("double").alias("total_balance"),
-        F.min("s_suppkey").alias("min_key"),
-        F.max("s_suppkey").alias("max_key"),
-    )
+    try:
+        store = ZoneStore(spark, root)
+        supp = read_table(spark, sf_dir, "supplier").select(
+            "s_suppkey", "s_nationkey", "s_acctbal"
+        )
+        v = txn_init(store, "curated", "supp", supp.filter(F.col("s_suppkey") % 2 == 0))
+        txn_append(
+            store, "curated", "supp", supp.filter(F.col("s_suppkey") % 2 == 1), read_version=v
+        )
+        out = txn_read(store, "curated", "supp").groupBy("s_nationkey").agg(
+            F.count(F.lit(1)).alias("n_suppliers"),
+            F.sum(F.col("s_acctbal").cast("decimal(12,2)")).cast("double").alias("total_balance"),
+            F.min("s_suppkey").alias("min_key"),
+            F.max("s_suppkey").alias("max_key"),
+        )
+        # detach from the temp-rooted snapshots before they are removed
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 register(

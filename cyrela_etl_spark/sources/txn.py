@@ -1,9 +1,11 @@
-"""Optimistic-concurrency commit protocol over the zone catalog — the
-ACID layer the reference ships only as latent capability (it bundles
-delta-core_2.12-0.7.0.jar in both images, reference Dockerfile:14 and
-spark/Dockerfile:12, but never loads it; the sandbox cannot install
-delta-spark either — NOTES.md rounds 5/6). This module implements the
-same commit discipline Delta's PROTOCOL.md describes, over plain parquet:
+"""Optimistic-concurrency commit protocol over zone parquet — the
+engine's one table layer, and the ACID layer the reference ships only as
+latent capability (it bundles delta-core_2.12-0.7.0.jar in both images,
+reference Dockerfile:14 and spark/Dockerfile:12, but never loads it;
+delta-spark is not a dependency of this engine either — NOTES.md rounds
+5/6). Tables are addressed by (zone, key) under a ``ZoneStore`` root,
+never through the session catalog. This module implements the same
+commit discipline Delta's PROTOCOL.md describes, over plain parquet:
 
 - A table is a **manifest log**: ``<table>/_txn/<version 20-digit>.json``
   files, one per committed version, each naming the immutable parquet
@@ -385,10 +387,9 @@ def txn_append(
     **Compaction cadence as code** (VERDICT r14 item 4): each append
     manifest lists the whole chain, so an unbounded run of appends writes
     O(chain) manifest bytes per commit — O(N^2) cumulative. The bound is
-    the cadence: with ``auto_compact_every=K`` (opt-in; resolution order
-    is this argument, else a ``store.auto_compact_every`` attribute, else
-    off), a winning append whose chain now exceeds K directories is
-    followed immediately by ``txn_compact``, so every manifest stays
+    the cadence: with ``auto_compact_every=K`` (opt-in; off by default),
+    a winning append whose chain now exceeds K directories is followed
+    immediately by ``txn_compact``, so every manifest stays
     O(K) paths and an N-append run writes O(N·K) cumulative manifest
     bytes (measured: `tools/scale_curve.py txn_vacuum`, build_auto leg).
     The return value is then the COMPACT's version — callers must (and
@@ -418,12 +419,7 @@ def txn_append(
     every directory in the chain shares one physical layout."""
     if read_version < 1:
         raise ValueError("txn_append requires an initialized table (read_version >= 1)")
-    k = (
-        auto_compact_every
-        if auto_compact_every is not None
-        else getattr(store, "auto_compact_every", None)
-    )
-    if k is not None and k < 1:
+    if auto_compact_every is not None and auto_compact_every < 1:
         raise ValueError("auto_compact_every must be >= 1")
     target = read_version + 1
     _fresh_view_check(store, zone, key, read_version)
@@ -467,8 +463,8 @@ def txn_append(
         fs.delete(_jpath(store, delta), True)
         raise TxnConflictError(store.path(zone, key), target)
     chain_len = len(manifest["snapshots"])
-    if k is not None:
-        if chain_len > k:
+    if auto_compact_every is not None:
+        if chain_len > auto_compact_every:
             try:
                 return txn_compact(store, zone, key)
             except TxnConflictError:
@@ -501,7 +497,7 @@ def txn_append(
             f"append chain of {store.path(zone, key)!r} is {chain_len} "
             f"directories long: manifest writes are O(chain) per append and "
             f"reads scan {chain_len} paths; set auto_compact_every=K on the "
-            "append (or the store) or run txn_compact",
+            "append or run txn_compact",
             RuntimeWarning,
             stacklevel=2,
         )

@@ -11,7 +11,7 @@ byte-copy operator exists because a distributed write IS the copy.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -58,11 +58,10 @@ class ZoneStore:
 
     spark: SparkSession
     root: str
-    zones: list[str] = field(default_factory=lambda: list(ZONE_ORDER))
 
     def path(self, zone: str, key: str = "") -> str:
-        if zone not in self.zones:
-            raise ValueError(f"unknown zone {zone!r}; have {self.zones}")
+        if zone not in ZONE_ORDER:
+            raise ValueError(f"unknown zone {zone!r}; have {ZONE_ORDER}")
         return f"{self.root}/{zone}/{key}".rstrip("/")
 
     # -- listing / cleanup (reference S9, S11/S12) --------------------------
@@ -98,8 +97,6 @@ class ZoneStore:
         to_zone: str,
         key: str,
         fmt: str = "parquet",
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
     ) -> str:
         """Write a DataFrame into the next zone; returns the target path.
 
@@ -107,9 +104,7 @@ class ZoneStore:
         (ingest from landing, egress to serving consumers).
         """
         target = self.path(to_zone, key)
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        writer = df.write.mode("overwrite")
         if fmt == "parquet":
             writer.parquet(target)
         elif fmt == "csv":
@@ -117,133 +112,6 @@ class ZoneStore:
         else:
             raise ValueError(f"unsupported zone format {fmt!r}")
         return target
-
-    # -- catalog tables (lakehouse table layer) -----------------------------
-    # The reference ships delta-core_2.12-0.7.0.jar in both images as latent
-    # capability (reference Dockerfile:14, spark/Dockerfile:12) but never
-    # uses it; delta-spark is not installable in this sandbox either. The
-    # zone-table layer therefore uses Spark's session catalog over the zone
-    # parquet: named tables, append/overwrite lifecycle, catalog-driven
-    # reads (`spark.table`) — the Delta API surface minus the transaction
-    # log. On a delta-enabled cluster, swap `USING PARQUET` for
-    # `USING DELTA` and drop the REFRESH (Delta self-invalidates).
-    def promote_table(
-        self,
-        df: DataFrame,
-        to_zone: str,
-        key: str,
-        table: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> str:
-        """Write into a zone AND register/refresh the session-catalog table
-        over it. ``overwrite`` rebinds the table (write first, THEN drop +
-        recreate — a failed write leaves the previous registration intact
-        and readers unbroken); ``append`` adds files under the table's
-        existing location and refreshes the catalog's file listing.
-        Appending through a store whose path differs from the table's
-        registered location is refused — the files would land outside the
-        table and silently vanish from every catalog read."""
-        if mode not in ("overwrite", "append"):
-            raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-        target = self.path(to_zone, key)
-        if mode == "append":
-            registered = self._table_location(table)
-            if registered is not None and registered != _norm_loc(target):
-                raise ValueError(
-                    f"append target {target!r} does not match table {table!r}'s "
-                    f"registered location {registered!r}; appended files would be "
-                    "invisible to catalog readers (use the store/key the table "
-                    "was created with, or overwrite to rebind)"
-                )
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-        if mode == "overwrite":
-            self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        self.spark.sql(f"CREATE TABLE IF NOT EXISTS {table} USING PARQUET LOCATION '{target}'")
-        # Spark caches a table's file listing; appended files are invisible
-        # until refresh (Delta's transaction log makes this automatic).
-        self.spark.sql(f"REFRESH TABLE {table}")
-        return target
-
-    def _table_location(self, table: str) -> str | None:
-        """Registered storage location of a catalog table, normalized;
-        None if the table doesn't exist."""
-        if not self.spark.catalog.tableExists(table):
-            return None
-        rows = self.spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-        for r in rows:
-            if r["col_name"] == "Location":
-                return _norm_loc(r["data_type"])
-        return None
-
-    def table(self, table: str) -> DataFrame:
-        """Catalog-driven read — consumers address the TABLE, not the path."""
-        return self.spark.table(table)
-
-
-def _norm_loc(path: str) -> str:
-    """Normalize a storage location for equality (strip scheme prefix for
-    local files and any trailing slash)."""
-    return path.removeprefix("file:").rstrip("/")
-
-
-def compact_zone(
-    store: ZoneStore,
-    zone: str,
-    key: str,
-    target_file_mb: int = 128,
-) -> tuple[str, int, int]:
-    """Small-file compaction (the OPTIMIZE half of a table format): rewrite
-    a zone parquet dataset into ~``target_file_mb`` files. Streaming sinks
-    and per-batch appends leave thousands of tiny files; at 100 TB the
-    scan's task-per-file overhead and the NameNode/S3 LIST cost dominate
-    long before bytes do. Returns (path, files_before, files_after).
-
-    Sizing uses the on-disk byte sum (cheap driver-side listing), not row
-    counts — compressed bytes are what file targets mean. The swap is a
-    three-step rename dance: the LIVE dataset is first renamed ASIDE
-    (``path__compact_old``), the staging rewrite renamed into place, and
-    only then the old copy deleted. A failure at any step leaves a full
-    recoverable copy (old at the aside path, or new at the staging path —
-    the raised error names which); the no-data window is one rename pair,
-    not a delete-then-rename. Still NOT atomic (a reader listing between
-    the two renames can miss the dataset, and on object stores rename is
-    a copy) — run compaction in the maintenance window, or use a
-    transactional table format where true atomic swap matters.
-    """
-    path = store.path(zone, key)
-    fs, jvm = store._fs()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    files = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            files.append((f.getPath().toString(), f.getLen()))
-    n_before = len(files)
-    total_bytes = sum(sz for _, sz in files)
-    n_target = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = store.spark.read.parquet(path)
-    staging = path + "__compact_staging"
-    df.repartition(n_target).write.mode("overwrite").parquet(staging)
-    old = path + "__compact_old"
-    fs.delete(hpath(old), True)  # leftover from a crashed prior run
-    if not fs.rename(p, hpath(old)):
-        raise IOError(
-            f"compaction swap failed: rename({path!r} -> {old!r}) returned "
-            f"false; live data untouched, compacted copy at {staging!r}"
-        )
-    if not fs.rename(hpath(staging), p):
-        raise IOError(
-            f"compaction swap failed: rename({staging!r} -> {path!r}) returned "
-            f"false; previous data intact at {old!r}, compacted copy at {staging!r}"
-        )
-    fs.delete(hpath(old), True)
-    return path, n_before, n_target
 
 
 def snapshot_diff(

@@ -141,51 +141,6 @@ def test_wallet_flow_default_with_multi_file_processing_zone(spark, store, tmp_p
     assert sorted(curated["cliente"]) == ["CLIENTE X2", "CLIENTE X3", "CLIENTE X4"]
 
 
-def test_zone_table_overwrite_append_lifecycle(spark, sf_dir, tmp_path):
-    """Catalog-table layer: overwrite rebinds (even across a NEW root),
-    append extends and is visible without re-registration."""
-    from pyspark.sql import functions as F
-
-    from cyrela_etl_spark.sources.zones import ZoneStore
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
-    s1 = ZoneStore(spark, str(tmp_path / "r1"))
-    s1.promote_table(nation.filter("n_nationkey < 10"), "curated", "nat", "t_zone_nation")
-    assert spark.table("t_zone_nation").count() == 10
-    s1.promote_table(
-        nation.filter("n_nationkey >= 10"), "curated", "nat", "t_zone_nation", mode="append"
-    )
-    assert spark.table("t_zone_nation").count() == nation.count()
-    # overwrite from a DIFFERENT root must rebind the location, not append
-    s2 = ZoneStore(spark, str(tmp_path / "r2"))
-    s2.promote_table(nation.filter("n_nationkey = 0"), "curated", "nat", "t_zone_nation")
-    assert spark.table("t_zone_nation").count() == 1
-    assert s2.table("t_zone_nation").collect()[0]["n_nationkey"] == 0
-    with pytest.raises(ValueError, match="overwrite|append"):
-        s2.promote_table(nation, "curated", "nat", "t_zone_nation", mode="errorifexists")
-    spark.sql("DROP TABLE IF EXISTS t_zone_nation")
-
-
-def test_compact_zone_reduces_files_preserves_data(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from cyrela_etl_spark.sources.zones import ZoneStore, compact_zone
-
-    store = ZoneStore(spark, str(tmp_path))
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # simulate a streaming sink's small-file mess: 40 tiny files
-    store.promote(orders.repartition(40), "curated", "orders")
-    before_sum = orders.agg(F.sum("o_orderkey")).collect()[0][0]
-    path, n_before, n_after = compact_zone(store, "curated", "orders", target_file_mb=128)
-    assert n_before == 40 and n_after < 40
-    back = spark.read.parquet(path)
-    assert back.count() == orders.count()
-    assert back.agg(F.sum("o_orderkey")).collect()[0][0] == before_sum
-    import glob
-
-    assert len(glob.glob(f"{path}/*.parquet")) == n_after
-
-
 def test_snapshot_diff_classifies_changes(spark):
     from cyrela_etl_spark.sources.zones import snapshot_diff
 
@@ -246,20 +201,3 @@ def test_observed_metrics_single_pass(spark, sf_dir, tmp_path):
     assert m["n_rows"] == orders.count()
     assert m["n_null_price"] == 0
     assert m["max_price"] > 0
-
-
-def test_promote_table_append_refuses_foreign_location(spark, sf_dir, tmp_path):
-    """Appending through a store whose path differs from the table's
-    registered location must raise — the files would be invisible to
-    catalog readers."""
-    from cyrela_etl_spark.sources.zones import ZoneStore
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey")
-    s1 = ZoneStore(spark, str(tmp_path / "rootA"))
-    s1.promote_table(nation, "curated", "nat", "t_append_guard")
-    s2 = ZoneStore(spark, str(tmp_path / "rootB"))
-    with pytest.raises(ValueError, match="registered location"):
-        s2.promote_table(nation, "curated", "nat", "t_append_guard", mode="append")
-    # the table still reads fine from its original location
-    assert spark.table("t_append_guard").count() == nation.count()
-    spark.sql("DROP TABLE IF EXISTS t_append_guard")

@@ -303,10 +303,15 @@ def test_lockfile_publisher_two_thread_race(spark, store):
     assert latest_version(store, "curated", "accounts") == 7
 
 
-def test_storage_forget_user_leaves_session_catalog_unchanged(spark, sf_dir):
-    """The registry's right-to-be-forgotten query keeps its txn table in a
-    temp root: the session catalog gains no table (a catalog-bound table
-    would outlive the temp dir it points at) and the root is removed."""
+@pytest.mark.parametrize(
+    "query, prefix",
+    [("storage_forget_user", "zone_forget_"), ("storage_table_roundtrip", "zone_tbl_")],
+    ids=["storage_forget_user", "storage_table_roundtrip"],
+)
+def test_storage_query_leaves_session_catalog_unchanged(spark, sf_dir, query, prefix):
+    """The registry's txn-table queries keep their table in a temp root:
+    the session catalog gains no table (a catalog-bound table would
+    outlive the temp dir it points at) and the root is removed."""
     import glob
     import os
     import sys
@@ -314,13 +319,15 @@ def test_storage_forget_user_leaves_session_catalog_unchanged(spark, sf_dir):
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
-    from cyrela_etl_spark.queries.storageq import storage_forget_user
+    from cyrela_etl_spark.queries import storageq
 
+    # drop what a catalog-bound run could have left, so a re-registration shows
     spark.sql("DROP TABLE IF EXISTS zone_events")
+    spark.sql("DROP TABLE IF EXISTS zone_supplier")
     tables = {t.name for t in spark.catalog.listTables()}
-    roots = os.path.join(tempfile.gettempdir(), "zone_forget_*")
+    roots = os.path.join(tempfile.gettempdir(), f"{prefix}*")
     before = set(glob.glob(roots))
-    n_rows, _ = bench.fingerprint(storage_forget_user(spark, sf_dir))
+    n_rows, _ = bench.fingerprint(getattr(storageq, query)(spark, sf_dir))
     assert n_rows > 0
     assert {t.name for t in spark.catalog.listTables()} == tables
     assert set(glob.glob(roots)) <= before
@@ -633,18 +640,6 @@ def test_append_auto_compact_bounds_chain_and_returns_head(spark, store):
         (k, k * 100) for k in range(1, 8)
     }
 
-    # the store-attribute spelling sets the policy once for every append
-    store.auto_compact_every = 2
-    try:
-        v = txn_append(
-            store, "curated", "accounts", _accounts(spark, [(8, 800)]), read_version=v
-        )
-        v = txn_append(
-            store, "curated", "accounts", _accounts(spark, [(9, 900)]), read_version=v
-        )
-        assert read_manifest(store, "curated", "accounts", v)["op"] == "compact"
-    finally:
-        del store.auto_compact_every
     with pytest.raises(ValueError):
         txn_append(
             store, "curated", "accounts", _accounts(spark, [(10, 1000)]),
