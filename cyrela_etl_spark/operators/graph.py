@@ -1,6 +1,10 @@
 """Graph statistics over pair/edge relations (the similarity and dedup
 operators emit edge lists; connected components lives in
-operators/dedup.py next to its consumers).
+operators/dedup.py next to its consumers): triangle census, integer
+PageRank, label propagation, link prediction, degree assortativity and
+the k-core peel. Every operator takes an undirected (id_a, id_b) pair
+relation; PageRank, LPA, link prediction and assortativity derive their
+edge set, directed list and degree table through one ``_edge_tables``.
 
 Triangle counting is the classic "needs care at scale" graph op: the
 naive wedge join explodes on hub nodes. The standard fix (node-iterator++
@@ -22,6 +26,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _edge_tables(
+    edges: DataFrame, id_a: str, id_b: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The distinct undirected edge set ``e(a, b)``, its symmetrized
+    directed list ``(src, dst)`` and the degree table ``(src, deg)``, all
+    lazy. Callers retain what they reuse, in that order (e, directed,
+    deg): caching matches by plan, so a relation derived here reads its
+    parent's cache once the parent is persisted first."""
+    e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct()
+    directed = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    deg = directed.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    return e, directed, deg
 
 
 def triangle_stats(
@@ -133,16 +153,13 @@ def integer_pagerank(
     rides a 1-row broadcast. Undirected input means no dangling nodes
     (every vertex in the edge set has degree ≥ 1).
     """
+    e, directed, deg = _edge_tables(edges, id_a, id_b)
     # persist the undirected edge set FIRST: the symmetrizing union reads
     # it twice, and with pair-graph inputs each read would otherwise
     # recompute the corpus self-joins that produced the edges
-    e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct().persist()  # release: caller (cache contract, queries/__init__)
-    directed = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .persist()  # release: caller (cache contract, queries/__init__)
-    )
-    deg = directed.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg")).persist()  # release: caller (cache contract, queries/__init__)
+    e.persist()  # release: caller (cache contract, queries/__init__)
+    directed.persist()  # release: caller (cache contract, queries/__init__)
+    deg.persist()  # release: caller (cache contract, queries/__init__)
     n_row = deg.agg(F.count(F.lit(1)).cast("long").alias("n"))
     base = F.expr(f"({100 - damping_pct} * ({scale} div n)) div 100")
     ranks = deg.crossJoin(F.broadcast(n_row)).select(
@@ -194,7 +211,7 @@ def label_propagation(
     map-side partial aggregation and no per-node sort. No driver-side
     data, no broadcast of anything node-sized.
     """
-    e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct()
+    _e, directed, _deg = _edge_tables(edges, id_a, id_b)
     # localCheckpoint, not persist (r18): the unrolled-round plan
     # references `directed` once per round plus the label init — with a
     # persist the optimizer still plans (and AQE re-optimizes) the full
@@ -206,11 +223,7 @@ def label_propagation(
     # per-round checkpoints: lineage is gone, so a lost executor fails
     # the job instead of recomputing — on a cluster swap for reliable
     # checkpointing; the table is edge-sized either way.
-    directed = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    directed = directed.localCheckpoint(eager=True)
     labels = directed.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("lab")
     )
@@ -271,13 +284,9 @@ def link_prediction(
     Σ deg(z)² — the documented hub knob; for hub-skewed graphs cap or
     re-orient as triangle_stats does.
     """
-    e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct().persist()  # release: caller (cache contract, queries/__init__)
-    directed = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .persist()  # release: caller (cache contract, queries/__init__)
-    )
-    deg = directed.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    e, directed, deg = _edge_tables(edges, id_a, id_b)
+    e.persist()  # release: caller (cache contract, queries/__init__)
+    directed.persist()  # release: caller (cache contract, queries/__init__)
     # r14 tail diet: both wedge sides consume mid — persist or the degree
     # join re-plans per side (the copies diverge under pruning: only the
     # left side keeps deg). release: caller (cache contract). Size note
@@ -338,17 +347,13 @@ def degree_assortativity(
     # the degree agg AND the (dx, dy) join — with pair-graph inputs each
     # re-read would otherwise recompute the corpus self-join (measured
     # 4.2 s → ~1.4 s at sf0.1 on the dup-graph input).
-    e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct().persist()  # release: caller (cache contract, queries/__init__)
-    directed = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .persist()  # release: caller (cache contract, queries/__init__)
-    )
+    e, directed, deg = _edge_tables(edges, id_a, id_b)
+    e.persist()  # release: caller (cache contract, queries/__init__)
+    directed.persist()  # release: caller (cache contract, queries/__init__)
     # r14 tail diet: deg feeds both endpoint joins — persist or the degree
     # agg over the full directed list runs twice (the renamed copies
     # diverge canonically, so runtime reuse cannot merge them).
-    # release: caller (cache contract)
-    deg = directed.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg")).persist()
+    deg.persist()  # release: caller (cache contract)
     dx = deg.select(F.col("src"), F.col("deg").alias("dx"))
     dy = deg.select(F.col("src").alias("dst"), F.col("deg").alias("dy"))
     j = directed.join(dx, "src").join(dy, "dst")
@@ -376,3 +381,58 @@ def degree_assortativity(
     return counts.crossJoin(F.broadcast(sums)).select(
         "n_nodes", "n_edges", r.alias("assortativity")
     )
+
+
+KCORE_K = 2
+
+
+def kcore_peel(edges: DataFrame) -> DataFrame:
+    """Two deterministic rounds of k-core peeling (k = ``KCORE_K``) over
+    DISTINCT ``id_a < id_b`` pairs: drop vertices with degree < k,
+    recompute degrees on the induced subgraph, drop again. One
+    ``(round, n_nodes, n_edges)`` row per round 0..2 — the standard
+    coreness-style density probe as degree aggregates + semi-joins (no
+    iteration state on the driver; rounds are unrolled).
+
+    r13 plan diet: the per-round DEGREE table is the only aggregate — it
+    yields the stats row directly (n_nodes = its row count; n_edges =
+    sum(deg) div 2, exact because every distinct edge contributes exactly
+    two endpoint degrees) AND the keep-set for the next peel. The older
+    plan built a separate distinct-node shuffle plus a 1-row edge-count
+    broadcast join per round (the sweep's last BNLJ allowlist entry).
+
+    r14: degrees come from one ``explode`` of both endpoints, not a union
+    of two selects — the union consumed the edges TWICE, and for the last
+    (un-persisted) peel the two copies of the induce join diverged under
+    pruning and were planned twice. One pass also halves the map-side
+    work at any scale. The edge count is an integral ``div``: a float
+    ``/`` before the cast would route an exact count through a double.
+    """
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
+            e.select(F.explode(F.array("id_a", "id_b")).alias("v"))
+            .groupBy("v")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+
+    def stats(deg: DataFrame, rnd: int) -> DataFrame:
+        return deg.agg(
+            F.lit(rnd).cast("long").alias("round"),
+            F.count(F.lit(1)).cast("long").alias("n_nodes"),
+            F.expr("CAST(coalesce(sum(deg), 0) AS BIGINT) div 2").alias("n_edges"),
+        )
+
+    def induce(e: DataFrame, keep: DataFrame) -> DataFrame:
+        return (
+            e.join(keep.withColumnRenamed("v", "id_a"), "id_a", "left_semi")
+            .join(keep.withColumnRenamed("v", "id_b"), "id_b", "left_semi")
+            .select("id_a", "id_b")
+        )
+
+    e0 = edges.persist()  # release: caller (cache contract, queries/__init__)
+    deg0 = degrees(e0).persist()  # release: caller — feeds stats(0) AND keep1
+    e1 = induce(e0, deg0.filter(F.col("deg") >= KCORE_K).select("v")).persist()  # release: caller
+    deg1 = degrees(e1).persist()  # release: caller — feeds stats(1) AND keep2
+    e2 = induce(e1, deg1.filter(F.col("deg") >= KCORE_K).select("v"))
+    return stats(deg0, 0).unionByName(stats(deg1, 1)).unionByName(stats(degrees(e2), 2))

@@ -16,6 +16,8 @@ surface its Spark dependency implies.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -955,16 +957,13 @@ FROM j
 # would emit phantom variants where DuckDB's generate_series(1, 0) is
 # empty (engine divergence).
 # --------------------------------------------------------------------------
-def fuzzy_name_pair_candidates(names: DataFrame, name_col: str = "c_name") -> DataFrame:
-    """Distinct-name pairs within substitution distance 1, via the masked-
-    variant equi-join. Input must be a DISTINCT-name relation — candidate
-    volume then scales with distinct names (each pair agrees on exactly
-    one masked variant, so no dedup pass is needed), never with record
-    multiplicity. Output: (name_a, name_b, edit_distance) with
-    name_a < name_b."""
-    variants = names.filter(F.length(name_col) >= 1).select(
-        F.col(name_col).alias("c_name"),
-        F.explode(F.sequence(F.lit(1), F.length(name_col))).alias("pos"),
+def fuzzy_substitution_variants(names: DataFrame) -> DataFrame:
+    """(c_name, pos, masked): every non-empty ``c_name`` once per position,
+    with that position masked — the substitution blocking key is
+    (pos, masked)."""
+    return names.filter(F.length("c_name") >= 1).select(
+        "c_name",
+        F.explode(F.sequence(F.lit(1), F.length("c_name"))).alias("pos"),
     ).select(
         "c_name",
         "pos",
@@ -974,6 +973,16 @@ def fuzzy_name_pair_candidates(names: DataFrame, name_col: str = "c_name") -> Da
             F.expr("substring(c_name, pos + 1, length(c_name))"),
         ).alias("masked"),
     )
+
+
+def fuzzy_name_pair_candidates(names: DataFrame) -> DataFrame:
+    """Distinct-name pairs within substitution distance 1, via the masked-
+    variant equi-join. Input must be a DISTINCT-name relation — candidate
+    volume then scales with distinct names (each pair agrees on exactly
+    one masked variant, so no dedup pass is needed), never with record
+    multiplicity. Output: (name_a, name_b, edit_distance) with
+    name_a < name_b."""
+    variants = fuzzy_substitution_variants(names)
     a, b = variants.alias("a"), variants.alias("b")
     name_pairs = a.join(
         b,
@@ -987,13 +996,18 @@ def fuzzy_name_pair_candidates(names: DataFrame, name_col: str = "c_name") -> Da
     )
 
 
-def fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _fuzzy_record_pairs(
+    spark: SparkSession, sf_dir: str, candidates: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Customer record pairs (id_a < id_b, edit_distance) from a distinct-
+    name candidate function: the variant join runs on distinct names, then
+    matched name pairs and identical-name groups expand to records."""
     cust = (
         read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name")
         .filter(F.length("c_name") >= 1)
     )
-    verified = fuzzy_name_pair_candidates(cust.select("c_name").distinct())
+    verified = candidates(cust.select("c_name").distinct())
     # Re-expand matched name pairs to record pairs (equi-joins on name).
     ia = cust.select(F.col("c_name").alias("name_a"), F.col("c_custkey").alias("ka"))
     ib = cust.select(F.col("c_name").alias("name_b"), F.col("c_custkey").alias("kb"))
@@ -1019,6 +1033,10 @@ def fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return cross_pairs.unionByName(same_pairs)
+
+
+def fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _fuzzy_record_pairs(spark, sf_dir, fuzzy_name_pair_candidates)
 
 
 register(
@@ -1583,7 +1601,10 @@ GROUP BY o_orderstatus
 # via both 'a' and 'b'), hence the distinct before the levenshtein
 # verify.
 # --------------------------------------------------------------------------
-def fuzzy_name_pair_candidates_indel(names: DataFrame, name_col: str = "c_name") -> DataFrame:
+def fuzzy_deletion_variants(names: DataFrame) -> DataFrame:
+    """(c_name, variant): every non-empty ``c_name`` with itself and each of
+    its distinct single-character deletions — the indel blocking key is
+    variant."""
     del_variants = F.transform(
         F.sequence(F.lit(1), F.length("c_name")),
         lambda p: F.concat(
@@ -1591,16 +1612,16 @@ def fuzzy_name_pair_candidates_indel(names: DataFrame, name_col: str = "c_name")
             F.col("c_name").substr(p + 1, F.length("c_name")),
         ),
     )
-    variants = (
-        names.filter(F.length(name_col) >= 1)
-        .select(F.col(name_col).alias("c_name"))
-        .select(
-            "c_name",
-            F.explode(
-                F.array_distinct(F.concat(F.array(F.col("c_name")), del_variants))
-            ).alias("variant"),
-        )
+    return names.filter(F.length("c_name") >= 1).select(
+        "c_name",
+        F.explode(
+            F.array_distinct(F.concat(F.array(F.col("c_name")), del_variants))
+        ).alias("variant"),
     )
+
+
+def fuzzy_name_pair_candidates_indel(names: DataFrame) -> DataFrame:
+    variants = fuzzy_deletion_variants(names)
     a, b = variants.alias("a"), variants.alias("b")
     cand = (
         a.join(
@@ -1618,35 +1639,7 @@ def fuzzy_name_pair_candidates_indel(names: DataFrame, name_col: str = "c_name")
 
 
 def fuzzy_match_names_indel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = (
-        read_table(spark, sf_dir, "customer")
-        .select("c_custkey", "c_name")
-        .filter(F.length("c_name") >= 1)
-    )
-    verified = fuzzy_name_pair_candidates_indel(cust.select("c_name").distinct())
-    ia = cust.select(F.col("c_name").alias("name_a"), F.col("c_custkey").alias("ka"))
-    ib = cust.select(F.col("c_name").alias("name_b"), F.col("c_custkey").alias("kb"))
-    cross_pairs = (
-        verified.join(ia, "name_a")
-        .join(ib, "name_b")
-        .select(
-            F.least("ka", "kb").alias("id_a"),
-            F.greatest("ka", "kb").alias("id_b"),
-            "edit_distance",
-        )
-    )
-    x = cust.select(F.col("c_name"), F.col("c_custkey").alias("ka"))
-    y = cust.select(F.col("c_name"), F.col("c_custkey").alias("kb"))
-    same_pairs = (
-        x.join(y, "c_name")
-        .filter(F.col("ka") < F.col("kb"))
-        .select(
-            F.col("ka").alias("id_a"),
-            F.col("kb").alias("id_b"),
-            F.lit(0).cast("long").alias("edit_distance"),
-        )
-    )
-    return cross_pairs.unionByName(same_pairs)
+    return _fuzzy_record_pairs(spark, sf_dir, fuzzy_name_pair_candidates_indel)
 
 
 register(

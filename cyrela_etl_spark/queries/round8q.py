@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cyrela_etl_spark.operators import text as X
+from cyrela_etl_spark.operators.graph import KCORE_K, kcore_peel
 from cyrela_etl_spark.queries import register
 from cyrela_etl_spark.sources.parquet import fan_out, read_table
 from cyrela_etl_spark.queries.textq import CORPUS_SQL, _docs, corpus, dup_pairs, sql_tokens
@@ -877,58 +878,14 @@ register("graph_bfs_frontier", graph_bfs_frontier, _bfs_oracle())
 
 # ---------------------------------------------------------------------------
 # graph_kcore_peel — two deterministic rounds of k-core peeling (k=2) on
-# the duplicate-pair graph: drop vertices with degree < k, recompute
-# degrees on the induced subgraph, drop again. Reports surviving node and
-# edge counts per round — the standard coreness-style density probe,
-# expressed as degree aggregates + semi-joins (no iteration state on the
-# driver; rounds are unrolled).
-#
-# r13 plan diet (VERDICT r12 item 4): the single per-round DEGREE table is
-# the only aggregate — it yields the stats row directly (n_nodes = its row
-# count; n_edges = sum(deg)/2, exact because _dup_edges emits DISTINCT
-# id_a < id_b pairs, so every edge contributes exactly two endpoint
-# degrees) AND the keep-set for the next peel. The old plan built a
-# separate distinct-node shuffle plus a 1-row edge-count broadcast join
-# per round (the sweep's last BNLJ allowlist entry); both are gone.
+# the duplicate-pair graph (operators/graph.py kcore_peel, which carries
+# the r13/r14 plan notes): drop vertices with degree < k, recompute
+# degrees on the induced subgraph, drop again; surviving node and edge
+# counts per round. _dup_edges emits DISTINCT id_a < id_b pairs, which
+# the peel's exact n_edges = sum(deg) div 2 relies on.
 # ---------------------------------------------------------------------------
-_KCORE_K = 2
-
-
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def degrees(e: DataFrame) -> DataFrame:
-        # explode, not a union of two selects: the union consumed e TWICE,
-        # and for the last (un-persisted) peel the two copies of the
-        # induce join diverged under pruning and were genuinely planned
-        # twice (r14 tail detector). One pass also halves the map-side
-        # work at any scale.
-        return (
-            e.select(F.explode(F.array("id_a", "id_b")).alias("v"))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-
-    def stats(deg: DataFrame, rnd: int) -> DataFrame:
-        return deg.agg(
-            F.lit(rnd).cast("long").alias("round"),
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            # integral `div`, not `/`: float division before the cast
-            # would route an exact count through a double (ADVICE r13)
-            F.expr("CAST(coalesce(sum(deg), 0) AS BIGINT) div 2").alias("n_edges"),
-        )
-
-    def induce(e: DataFrame, keep: DataFrame) -> DataFrame:
-        return (
-            e.join(keep.withColumnRenamed("v", "id_a"), "id_a", "left_semi")
-            .join(keep.withColumnRenamed("v", "id_b"), "id_b", "left_semi")
-            .select("id_a", "id_b")
-        )
-
-    e0 = _dup_edges(spark, sf_dir).persist()  # release: caller (cache contract, queries/__init__)
-    deg0 = degrees(e0).persist()  # release: caller — feeds stats(0) AND keep1
-    e1 = induce(e0, deg0.filter(F.col("deg") >= _KCORE_K).select("v")).persist()  # release: caller
-    deg1 = degrees(e1).persist()  # release: caller — feeds stats(1) AND keep2
-    e2 = induce(e1, deg1.filter(F.col("deg") >= _KCORE_K).select("v"))
-    return stats(deg0, 0).unionByName(stats(deg1, 1)).unionByName(stats(degrees(e2), 2))
+    return kcore_peel(_dup_edges(spark, sf_dir))
 
 
 def _kcore_oracle() -> str:
@@ -940,14 +897,14 @@ WITH corpus AS ({CORPUS_SQL}),
 e0 AS (SELECT DISTINCT id_a, id_b FROM pairs),
 d0 AS (SELECT id_a AS v FROM e0 UNION ALL SELECT id_b FROM e0),
 deg0 AS (SELECT v, count(*) AS deg FROM d0 GROUP BY v),
-keep1 AS (SELECT v FROM deg0 WHERE deg >= {_KCORE_K}),
+keep1 AS (SELECT v FROM deg0 WHERE deg >= {KCORE_K}),
 e1 AS (
   SELECT id_a, id_b FROM e0
   WHERE id_a IN (SELECT v FROM keep1) AND id_b IN (SELECT v FROM keep1)
 ),
 d1 AS (SELECT id_a AS v FROM e1 UNION ALL SELECT id_b FROM e1),
 deg1 AS (SELECT v, count(*) AS deg FROM d1 GROUP BY v),
-keep2 AS (SELECT v FROM deg1 WHERE deg >= {_KCORE_K}),
+keep2 AS (SELECT v FROM deg1 WHERE deg >= {KCORE_K}),
 e2 AS (
   SELECT id_a, id_b FROM e1
   WHERE id_a IN (SELECT v FROM keep2) AND id_b IN (SELECT v FROM keep2)

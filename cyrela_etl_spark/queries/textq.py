@@ -284,34 +284,53 @@ WHERE len(list_intersect(a.shingles, b.shingles)) / len(list_distinct(list_conca
 
 
 # ---------------------------------------------------------------------------
-# dedup_containment_pairs — asymmetric shingle containment (operators/
-# dedup.py containment_pairs; Broder 1997's containment measure):
-# C(A→B) = |S(A)∩S(B)|/|S(A)| catches quote/subset/boilerplate-inclusion
-# duplicates that the Jaccard family structurally misses (short-in-long
-# pairs have high containment, low Jaccard). Candidates come from rare-
-# shingle co-occurrence (2 ≤ df ≤ 5 — the link-prediction generator:
-# position-independent, unlike prefix blocks, so mid-document quotes
-# still pair); containment is exact for every candidate.
+# rare_shingle_pairs — the rare-shingle co-occurrence pair graph that
+# containment dedup, link prediction, LPA and assortativity all read:
+# documents sharing any 3-word shingle whose document frequency is
+# 2 ≤ df ≤ 5 (graph_link_prediction below says why that window).
+# Position-independent, unlike prefix blocks, so mid-document quotes
+# still pair. One (id_a, id_b) row per shared rare shingle, id_a < id_b —
+# NOT distinct; containment dedups it, the operators/graph.py operators
+# take its distinct edge set.
 # ---------------------------------------------------------------------------
-_CONT_DF_MIN, _CONT_DF_MAX, _CONT_N, _CONT_THRESHOLD = 2, 5, 3, 0.5
+_RARE_DF_MIN, _RARE_DF_MAX, _RARE_N = 2, 5, 3
 
 
-def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+def rare_shingle_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b) per shared rare shingle over a (doc_id, text) frame."""
     posting = docs.select(
-        F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=_CONT_N)).alias("g")
+        F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=_RARE_N)).alias("g")
     )
     df_ok = (
         posting.groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= _CONT_DF_MIN) & (F.col("df") <= _CONT_DF_MAX))
+        .filter((F.col("df") >= _RARE_DF_MIN) & (F.col("df") <= _RARE_DF_MAX))
         .select("g")
     )
     # kept is self-joined (a × b) and its lineage re-runs the full
-    # posting explode per branch — persist it once (same rationale and
-    # measurement as dedup_dup_ngram_fraction above).
+    # posting explode + df agg per branch — persist it once (same
+    # rationale and measurement as dedup_dup_ngram_fraction).
     kept = posting.join(df_ok, "g").persist()  # release: caller (cache contract, queries/__init__)
     a, b = kept.alias("a"), kept.alias("b")
+    return a.join(
+        b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+
+
+# ---------------------------------------------------------------------------
+# dedup_containment_pairs — asymmetric shingle containment (operators/
+# dedup.py containment_pairs; Broder 1997's containment measure):
+# C(A→B) = |S(A)∩S(B)|/|S(A)| catches quote/subset/boilerplate-inclusion
+# duplicates that the Jaccard family structurally misses (short-in-long
+# pairs have high containment, low Jaccard). Candidates are the distinct
+# rare-shingle pairs (rare_shingle_pairs above); containment is exact for
+# every candidate.
+# ---------------------------------------------------------------------------
+_CONT_THRESHOLD = 0.5
+
+
+def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     # r18 note — the grouped-map treatment (explicit hash repartition
     # before this distinct, to undo AQE's byte-based coalescing of the
     # ~831 KB candidate payload to one task, profiled as a 0.83 s
@@ -319,14 +338,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (5 reps, identical checksums) read 2.408 s with the
     # repartition vs 2.390 s shipped — the added exchange costs what the
     # extra parallelism buys back. The single-task distinct stands.
-    cand = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    return D.containment_pairs(
-        docs, cand, n=_CONT_N, threshold=_CONT_THRESHOLD
-    )
+    cand = rare_shingle_pairs(docs).distinct()
+    return D.containment_pairs(docs, cand, n=_RARE_N, threshold=_CONT_THRESHOLD)
 
 
 register(
@@ -335,13 +348,13 @@ register(
     f"""
 WITH toks AS (SELECT doc_id, {sql_tokens('text')} AS t FROM documents),
 sh AS (
-  SELECT doc_id AS id, {sql_shingles('t', _CONT_N)} AS shingles
+  SELECT doc_id AS id, {sql_shingles('t', _RARE_N)} AS shingles
   FROM toks WHERE len(t) > 0
 ),
 posting AS (SELECT id, unnest(shingles) AS g FROM sh),
 df_ok AS (
   SELECT g FROM posting GROUP BY g
-  HAVING count(*) BETWEEN {_CONT_DF_MIN} AND {_CONT_DF_MAX}
+  HAVING count(*) BETWEEN {_RARE_DF_MIN} AND {_RARE_DF_MAX}
 ),
 kept AS (SELECT p.id, p.g FROM posting p JOIN df_ok USING (g)),
 cand AS (
@@ -2516,8 +2529,9 @@ GROUP BY host
 
 
 # graph_link_prediction — Resource-Allocation link prediction (Zhou, Lü &
-# Zhang 2009) over a rare-shingle co-occurrence graph: documents are
-# linked when they share a RARE 3-gram shingle (2 ≤ df ≤ 5 — the df
+# Zhang 2009) over the rare-shingle co-occurrence graph
+# (rare_shingle_pairs): documents are linked when they share a RARE
+# 3-gram shingle (2 ≤ df ≤ 5 — the df
 # window both bounds the per-gram clique at 10 pairs and drops hapax
 # noise, the same fan-out discipline as text_tfidf_doc_pairs' df cap).
 # Unlike the dedup pair graph (a union of per-key cliques — transitively
@@ -2530,30 +2544,10 @@ GROUP BY host
 # transitively-related documents the pairwise keys missed — candidates
 # for a second verification pass before clustering.
 # ---------------------------------------------------------------------------
-_LP_DF_MIN, _LP_DF_MAX = 2, 5
-
-
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.graph import link_prediction
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    posting = docs.select(
-        F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=3)).alias("g")
-    )
-    df_ok = (
-        posting.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= _LP_DF_MIN) & (F.col("df") <= _LP_DF_MAX))
-        .select("g")
-    )
-    # persist the df-filtered postings before the self-join (the tfidf
-    # precedent): both join sides read `kept`, and without the persist
-    # each side would re-run the shingle explode + df agg over the corpus
-    kept = posting.join(df_ok, "g").persist()  # release: caller (cache contract, queries/__init__)
-    a, b = kept.alias("a"), kept.alias("b")
-    edges = a.join(
-        b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    edges = rare_shingle_pairs(_docs(spark, sf_dir).select("doc_id", "text"))
     return link_prediction(edges, top_n=20)
 
 
@@ -2563,11 +2557,11 @@ register(
     f"""
 WITH toks AS (SELECT doc_id, {sql_tokens('text')} AS t FROM documents),
 posting AS (
-  SELECT doc_id, unnest({sql_shingles('t', 3)}) AS g FROM toks
+  SELECT doc_id, unnest({sql_shingles('t', _RARE_N)}) AS g FROM toks
 ),
 df_ok AS (
   SELECT g FROM posting GROUP BY g
-  HAVING count(*) BETWEEN {_LP_DF_MIN} AND {_LP_DF_MAX}
+  HAVING count(*) BETWEEN {_RARE_DF_MIN} AND {_RARE_DF_MAX}
 ),
 kept AS (SELECT p.g, p.doc_id FROM posting p JOIN df_ok USING (g)),
 e AS (
@@ -2611,21 +2605,7 @@ LIMIT 20
 def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.graph import label_propagation
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    posting = docs.select(
-        F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=3)).alias("g")
-    )
-    df_ok = (
-        posting.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= _LP_DF_MIN) & (F.col("df") <= _LP_DF_MAX))
-        .select("g")
-    )
-    kept = posting.join(df_ok, "g").persist()  # release: caller (cache contract, queries/__init__)
-    a, b = kept.alias("a"), kept.alias("b")
-    edges = a.join(
-        b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    edges = rare_shingle_pairs(_docs(spark, sf_dir).select("doc_id", "text"))
     return label_propagation(edges, iterations=2)
 
 
@@ -2635,11 +2615,11 @@ register(
     f"""
 WITH toks AS (SELECT doc_id, {sql_tokens('text')} AS t FROM documents),
 posting AS (
-  SELECT doc_id, unnest({sql_shingles('t', 3)}) AS g FROM toks
+  SELECT doc_id, unnest({sql_shingles('t', _RARE_N)}) AS g FROM toks
 ),
 df_ok AS (
   SELECT g FROM posting GROUP BY g
-  HAVING count(*) BETWEEN {_LP_DF_MIN} AND {_LP_DF_MAX}
+  HAVING count(*) BETWEEN {_RARE_DF_MIN} AND {_RARE_DF_MAX}
 ),
 kept AS (SELECT p.g, p.doc_id FROM posting p JOIN df_ok USING (g)),
 e AS (
@@ -2878,21 +2858,7 @@ LIMIT {_RAKE_TOP}
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cyrela_etl_spark.operators.graph import degree_assortativity
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    posting = docs.select(
-        F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=3)).alias("g")
-    )
-    df_ok = (
-        posting.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= _LP_DF_MIN) & (F.col("df") <= _LP_DF_MAX))
-        .select("g")
-    )
-    kept = posting.join(df_ok, "g").persist()  # release: caller (cache contract, queries/__init__)
-    a, b = kept.alias("a"), kept.alias("b")
-    edges = a.join(
-        b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    edges = rare_shingle_pairs(_docs(spark, sf_dir).select("doc_id", "text"))
     return degree_assortativity(edges)
 
 
@@ -2902,11 +2868,11 @@ register(
     f"""
 WITH toks AS (SELECT doc_id, {sql_tokens('text')} AS t FROM documents),
 posting AS (
-  SELECT doc_id, unnest({sql_shingles('t', 3)}) AS g FROM toks
+  SELECT doc_id, unnest({sql_shingles('t', _RARE_N)}) AS g FROM toks
 ),
 df_ok AS (
   SELECT g FROM posting GROUP BY g
-  HAVING count(*) BETWEEN {_LP_DF_MIN} AND {_LP_DF_MAX}
+  HAVING count(*) BETWEEN {_RARE_DF_MIN} AND {_RARE_DF_MAX}
 ),
 kept AS (SELECT p.id, p.g FROM (SELECT doc_id AS id, g FROM posting) p JOIN df_ok USING (g)),
 e AS (

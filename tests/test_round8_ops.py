@@ -129,30 +129,13 @@ def test_ivf_pq_subset_of_pq_candidates(spark, sf_dir):
 # -- k-core ------------------------------------------------------------------
 def test_kcore_peel_hand_graph(spark):
     """Triangle + pendant: round 1 removes the pendant, round 2 is stable."""
-    from cyrela_etl_spark.queries import round8q  # noqa: F401
+    from cyrela_etl_spark.operators.graph import kcore_peel
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], ["id_a", "id_b"]
     )
-
-    # replicate the peel helper inline (operator is module-internal)
-    def peel(edges):
-        deg = (
-            edges.select(F.col("id_a").alias("v"))
-            .unionByName(edges.select(F.col("id_b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= 2).select("v")
-        return (
-            edges.join(keep.withColumnRenamed("v", "id_a"), "id_a", "left_semi")
-            .join(keep.withColumnRenamed("v", "id_b"), "id_b", "left_semi")
-        )
-
-    e1 = peel(e)
-    assert sorted(map(tuple, e1.select("id_a", "id_b").collect())) == [(1, 2), (1, 3), (2, 3)]
-    e2 = peel(e1)
-    assert e2.count() == 3  # 2-core (the triangle) is stable
+    rows = sorted(tuple(r) for r in kcore_peel(e).select("round", "n_nodes", "n_edges").collect())
+    assert rows == [(0, 4, 4), (1, 3, 3), (2, 3, 3)]
 
 
 # -- BFS frontier ------------------------------------------------------------

@@ -97,14 +97,13 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     assert files_read < all_files / (n_days / 3), (files_read, all_files)
 
 
-def test_stateful_running_totals_resume_across_batches(spark, sf_dir):
+def test_stateful_running_totals_resume_across_batches(spark, sf_dir, tmp_path):
     """applyInPandasWithState must carry state across micro-batches: feed
     the same events in 2 file-batches (maxFilesPerTrigger=1) and the final
     running totals must equal the single-batch run."""
     import glob
     import os
     import shutil
-    import tempfile
 
     from cyrela_etl_spark.sources.parquet import read_table
     from cyrela_etl_spark.streaming import read_file_stream, run_available_now
@@ -114,7 +113,7 @@ def test_stateful_running_totals_resume_across_batches(spark, sf_dir):
     # not guaranteed for one key, so keep each key's rows in one file while
     # the OPERATOR still runs across 2 sequential micro-batches.
     ev = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="ev_split_")
+    tmp = str(tmp_path)
     ev.filter("user_id < 75").coalesce(1).write.parquet(f"{tmp}/f1")
     ev.filter("user_id >= 75").coalesce(1).write.parquet(f"{tmp}/f2")
     os.makedirs(f"{tmp}/in")

@@ -55,7 +55,7 @@ def test_patch_rebinds_every_module_copy_and_restores(spark):
 def test_scale_curve_families_and_replicate(spark):
     assert set(scale_curve.FAMILIES) == {
         "curriculum", "asof", "txn", "txn_vacuum", "semdedup", "wave7", "fuzzy",
-        "lsh", "lsh_phases", "stream", "graph", "multimodal", "ann",
+        "lsh", "stream", "graph", "multimodal", "ann",
     }
     base = spark.range(5).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
     rows = scale_curve.replicate(base, 3, {"k": 100}).collect()

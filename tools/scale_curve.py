@@ -632,53 +632,6 @@ def wave7(spark, sizes: list[int]) -> None:
 FUZZY_BASE_NAMES = 15_000  # ~sf0.1 customer cardinality
 
 
-def _fuzzy_bucket_profile(spark, sf_dir: str) -> dict:
-    """max/mean variant-bucket width for both blockings (substitution
-    masks and deletion neighborhoods) over the customer names."""
-    names = (
-        read_table(spark, sf_dir, "customer")
-        .select("c_name")
-        .filter(F.length("c_name") >= 1)
-        .distinct()
-    )
-    masked = names.select(
-        F.explode(F.sequence(F.lit(1), F.length("c_name"))).alias("pos"), F.col("c_name")
-    ).select(
-        F.concat(
-            F.expr("substring(c_name, 1, pos - 1)"),
-            F.lit("*"),
-            F.expr("substring(c_name, pos + 1, length(c_name))"),
-        ).alias("k"),
-        "pos",
-    )
-    dels = names.select(
-        F.explode(
-            F.array_distinct(
-                F.concat(
-                    F.array(F.col("c_name")),
-                    F.transform(
-                        F.sequence(F.lit(1), F.length("c_name")),
-                        lambda p: F.concat(
-                            F.col("c_name").substr(F.lit(1), p - 1),
-                            F.col("c_name").substr(p + 1, F.length("c_name")),
-                        ),
-                    ),
-                )
-            )
-        ).alias("k")
-    )
-    out = {}
-    for tag, keyed, keys in (("sub", masked, ["pos", "k"]), ("indel", dels, ["k"])):
-        row = (
-            keyed.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"), F.avg("n").alias("avg"))
-            .collect()[0]
-        )
-        out[f"{tag}_max"], out[f"{tag}_avg"] = row["mx"], round(float(row["avg"]), 3)
-    return out
-
-
 @family([1, 10, 100])
 def fuzzy(spark, sizes: list[int]) -> None:
     """Fuzzy-match (edit-distance-1 blocking) curves — VERDICT r13 item
@@ -701,7 +654,31 @@ def fuzzy(spark, sizes: list[int]) -> None:
     Per scale: bucket_profile (max/mean bucket width for BOTH blockings —
     must stay flat in s, the quadratic-candidate guard), then the sub
     and indel registry queries end-to-end (wall + output rows, s-fold)."""
-    from cyrela_etl_spark.queries.relational import fuzzy_match_names, fuzzy_match_names_indel
+    from cyrela_etl_spark.queries.relational import (
+        fuzzy_deletion_variants,
+        fuzzy_match_names,
+        fuzzy_match_names_indel,
+        fuzzy_substitution_variants,
+    )
+
+    def bucket_profile(root: str) -> dict:
+        """max/mean variant-bucket width for both blockings, keyed as the
+        registry queries' variant joins key them."""
+        names = read_table(spark, root, "customer").select("c_name").distinct()
+        out = {}
+        for tag, variants, keys in (
+            ("sub", fuzzy_substitution_variants, ["pos", "masked"]),
+            ("indel", fuzzy_deletion_variants, ["variant"]),
+        ):
+            row = (
+                variants(names)
+                .groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("n"))
+                .agg(F.max("n").alias("mx"), F.avg("n").alias("avg"))
+                .collect()[0]
+            )
+            out[f"{tag}_max"], out[f"{tag}_avg"] = row["mx"], round(float(row["avg"]), 3)
+        return out
 
     names = spark.range(1, FUZZY_BASE_NAMES + 1).select(
         F.col("id").alias("c_custkey"),
@@ -722,7 +699,7 @@ def fuzzy(spark, sizes: list[int]) -> None:
         root = f"{WORK}/fuzzy_{s}x"
         scaled = replicate(names, s, {"c_custkey": FUZZY_BASE_NAMES}, {"c_name": tag})
         write(scaled, f"{root}/customer.parquet")
-        result(scale=s, leg="bucket_profile", **_fuzzy_bucket_profile(spark, root))
+        result(scale=s, leg="bucket_profile", **bucket_profile(root))
         for leg, fn in (("sub", fuzzy_match_names), ("indel", fuzzy_match_names_indel)):
             rows, wall = timed(lambda: fn(spark, root).count())
             spark.catalog.clearCache()
@@ -733,7 +710,7 @@ def fuzzy(spark, sizes: list[int]) -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
-# --- lsh / lsh_phases --------------------------------------------------------
+# --- lsh ---------------------------------------------------------------------
 @family([1, 10, 100])
 def lsh(spark, sizes: list[int]) -> None:
     """The banded LSH dedup family (operators/dedup.py): MinHash-LSH pair
@@ -767,107 +744,6 @@ def lsh(spark, sizes: list[int]) -> None:
         for name, fn in legs:
             pairs, wall = timed(lambda: fn(docs).count())
             result(scale=f"{s}x", docs=n_docs, op=name, pairs=pairs, wall=f"{wall:.1f}s")
-            spark.catalog.clearCache()
-
-
-@family([1000])
-def lsh_phases(spark, sizes: list[int]) -> None:
-    """Phase-timed MinHash-LSH with a swappable storage strategy for the
-    base relation (VERDICT r11 item 6), over the tagged corpus. Mirrors
-    the shipped plan of operators/dedup.py:minhash_lsh_pairs (same
-    params, same joins, same hints) with ONE knob — how the (id,
-    shingles, signature) relation is retained between the candidate and
-    verify phases:
-
-      deser     — shipped: persist() default = MEMORY_AND_DISK_DESER
-      ser       — MEMORY_AND_DISK (PySpark naming: serialized): smaller
-                  cache footprint for the fat shingle arrays, CPU to
-                  re-inflate on every read
-      localckpt — localCheckpoint (lazy; materialized by the p1 count,
-                  same as the persists): cuts lineage and stores
-                  serialized blocks via the block manager
-      slim      — persist only (id, signature); the verify phase
-                  RE-DERIVES shingles from the input (drops the fat array
-                  from the cache at the price of re-scanning + re-hashing
-                  the corpus twice, once per join side)
-
-    Phases: p1 = build+materialize base (count), p2 = banded self-join
-    candidate generation (count; candidates then persisted so p3 is pure
-    verification), p3 = exact-Jaccard verify (final pair count). The
-    verdict in NOTES stands: keep the shipped deserialized persist. The
-    ser variant heap-OOMs the JVM at 1000x, so it runs last."""
-    from pyspark.storagelevel import StorageLevel
-
-    from cyrela_etl_spark.operators.dedup import (
-        _cap_buckets,
-        _minhash_banded,
-        minhash_signature_expr,
-        word_shingles,
-    )
-
-    num_hashes, bands, shingle_n, threshold, cap = 16, 4, 3, 0.5, 1000
-    deser = StorageLevel.MEMORY_AND_DISK_DESER
-
-    def shingled(docs: DataFrame) -> DataFrame:
-        return docs.select(
-            F.col("doc_id").alias("id"), word_shingles(F.col("text"), shingle_n).alias("shingles")
-        ).filter(F.size("shingles") > 0)
-
-    def p1(docs: DataFrame, variant: str) -> tuple[DataFrame, DataFrame, int]:
-        full = shingled(docs).withColumn(
-            "signature", minhash_signature_expr(F.col("shingles"), num_hashes, "xxhash64")
-        )
-        if variant == "slim":
-            base = full.select("id", "signature").persist(deser)
-            return base, shingled(docs), base.count()
-        if variant == "localckpt":
-            base = full.localCheckpoint(eager=False)
-        else:
-            base = full.persist(deser if variant == "deser" else StorageLevel.MEMORY_AND_DISK)
-        return base, base.select("id", "shingles"), base.count()
-
-    def p2(base: DataFrame) -> tuple[DataFrame, int]:
-        banded = _cap_buckets(
-            _minhash_banded(base.select("id", "signature"), bands, num_hashes // bands),
-            ["band", "bucket"],
-            cap,
-        )
-        a, b = banded.alias("a"), banded.alias("b")
-        candidates = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-            .persist(deser)
-        )
-        return candidates, candidates.count()
-
-    def p3(candidates: DataFrame, sh: DataFrame) -> int:
-        inter = F.size(F.array_intersect(F.col("sa.shingles"), F.col("sb.shingles")))
-        union = F.size(F.array_union(F.col("sa.shingles"), F.col("sb.shingles")))
-        half = candidates.hint("shuffle_hash").join(sh.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        return (
-            half.join(sh.alias("sb"), F.col("id_b") == F.col("sb.id"))
-            .select("id_a", "id_b", (inter / union).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-            .count()
-        )
-
-    for s in sizes:
-        docs = spark.read.parquet(f"{tagged_corpus(spark, s)}/documents.parquet")
-        for variant in ("deser", "localckpt", "slim", "ser"):
-            (base, sh, n_docs), t1 = timed(lambda: p1(docs, variant))
-            (candidates, n_cand), t2 = timed(lambda: p2(base))
-            pairs, t3 = timed(lambda: p3(candidates, sh))
-            result(
-                scale=f"{s}x", variant=variant, docs=n_docs, candidates=n_cand, pairs=pairs,
-                p1_signature=f"{t1:.1f}s", p2_candidates=f"{t2:.1f}s", p3_verify=f"{t3:.1f}s",
-                total=f"{t1 + t2 + t3:.1f}s",
-            )
             spark.catalog.clearCache()
 
 
@@ -986,86 +862,20 @@ def stream(spark, sizes: list[int]) -> None:
 
 
 # --- graph -------------------------------------------------------------------
-_LP_DF_MIN, _LP_DF_MAX = 2, 5  # queries/textq.py — the registry's LPA blocking
-_KCORE_K = 2  # queries/round8q.py graph_kcore_peel
-
-
-def _graph_base_edges(spark) -> str:
-    """Materialize the registry LPA edge graph at sf to parquet."""
-    from cyrela_etl_spark.operators import dedup as D
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    posting = docs.select(
-        F.col("doc_id"), F.explode(D.word_shingles(F.col("text"), n=3)).alias("g")
-    )
-    df_ok = (
-        posting.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= _LP_DF_MIN) & (F.col("df") <= _LP_DF_MAX))
-        .select("g")
-    )
-    kept = posting.join(df_ok, "g").persist()
-    a, b = kept.alias("a"), kept.alias("b")
-    edges = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    path = write(edges, f"{WORK}/graph_1x/edges.parquet", partitions=8)
-    kept.unpersist()
-    return path
-
-
-def _kcore_rounds(e0: DataFrame) -> DataFrame:
-    """Two unrolled k=2 peel rounds — the graph_kcore_peel plan shape
-    (queries/round8q.py, r13 degree-table diet: one deg agg per round
-    feeds both the stats row and the keep-set; n_edges = sum(deg)/2 is
-    exact on distinct id_a < id_b edges), parameterized on an edge
-    DataFrame."""
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("id_a").alias("v"))
-            .unionByName(e.select(F.col("id_b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-
-    def stats(deg: DataFrame, rnd: int) -> DataFrame:
-        return deg.agg(
-            F.lit(rnd).cast("long").alias("round"),
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            (F.coalesce(F.sum("deg"), F.lit(0)) / 2).cast("long").alias("n_edges"),
-        )
-
-    def induce(e: DataFrame, keep: DataFrame) -> DataFrame:
-        return (
-            e.join(keep.withColumnRenamed("v", "id_a"), "id_a", "left_semi")
-            .join(keep.withColumnRenamed("v", "id_b"), "id_b", "left_semi")
-            .select("id_a", "id_b")
-        )
-
-    e0 = e0.persist()
-    deg0 = degrees(e0).persist()
-    e1 = induce(e0, deg0.filter(F.col("deg") >= _KCORE_K).select("v")).persist()
-    deg1 = degrees(e1).persist()
-    e2 = induce(e1, deg1.filter(F.col("deg") >= _KCORE_K).select("v"))
-    return stats(deg0, 0).unionByName(stats(deg1, 1)).unionByName(stats(degrees(e2), 2))
-
-
 @family([1, 10, 100], ui=True)
 def graph(spark, sizes: list[int]) -> None:
-    """The graph family (operators/graph.py + the k-core peel from
-    queries/round8q.py) — the heaviest shuffle-site plans in PLAN_REPORT
-    (k-core 20, LPA 17, PageRank 10; VERDICT r11 item 4).
+    """The graph family: the operators/graph.py triangle census, PageRank,
+    LPA and k-core peel, called as shipped — the heaviest shuffle-site
+    plans in PLAN_REPORT (k-core 12, PageRank 10, LPA 8; VERDICT r11
+    item 4).
 
-    The BASE edge list is the registry's own LPA input — the
-    shingle-blocked document pair graph of
-    queries/textq.py:graph_lpa_communities — materialized to parquet ONCE
-    so every timed leg measures the graph operator, not edge generation.
-    Replica k offsets BOTH vertex ids by k * 10_000_000, so replicas are
-    vertex-DISJOINT: s identical component families side by side,
-    per-vertex degree distribution unchanged, true triangle/wedge/
+    The BASE edge list is the registry's own rare-shingle pair graph
+    (queries/textq.py rare_shingle_pairs, the input of link prediction,
+    LPA and assortativity) as distinct pairs, materialized to parquet
+    ONCE so every timed leg measures the graph operator, not edge
+    generation. Replica k offsets BOTH vertex ids by k * 10_000_000, so
+    replicas are vertex-DISJOINT: s identical component families side by
+    side, per-vertex degree distribution unchanged, true triangle/wedge/
     community structure exactly s-fold. Every operator here does
     per-round work proportional to sum-over-vertices of local quantities,
     so the TRUE work scales linearly — a superlinear WALL curve exposes a
@@ -1081,9 +891,11 @@ def graph(spark, sizes: list[int]) -> None:
     counts)."""
     from cyrela_etl_spark.operators.graph import (
         integer_pagerank,
+        kcore_peel,
         label_propagation,
         triangle_stats,
     )
+    from cyrela_etl_spark.queries.textq import rare_shingle_pairs
 
     legs = [
         (
@@ -1107,14 +919,16 @@ def graph(spark, sizes: list[int]) -> None:
         ),
         (
             "kcore_2rounds",
-            _kcore_rounds,
+            kcore_peel,
             lambda rows: {
                 f"r{r['round']}": f"({r['n_nodes']}n,{r['n_edges']}e)"
                 for r in sorted(rows, key=lambda x: x["round"])
             },
         ),
     ]
-    base_path = _graph_base_edges(spark)
+    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    pairs = rare_shingle_pairs(docs).distinct()
+    base_path = write(pairs, f"{WORK}/graph_1x/edges.parquet", partitions=8)
     spark.catalog.clearCache()
     base = spark.read.parquet(base_path)
     for s in sizes:
