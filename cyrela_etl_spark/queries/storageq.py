@@ -12,6 +12,7 @@ and decimal-exact re-aggregation after a write/read cycle).
 from __future__ import annotations
 
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +21,19 @@ from cyrela_etl_spark.queries import register
 from cyrela_etl_spark.sources.parquet import read_table
 from cyrela_etl_spark.sources.csv import read_csv, write_csv
 from cyrela_etl_spark.sources.zones import ZoneStore
+
+
+def _on_scratch_store(
+    spark: SparkSession, prefix: str, build: Callable[[ZoneStore], DataFrame]
+) -> DataFrame:
+    """Run ``build`` against a ``ZoneStore`` rooted in a fresh
+    ``$TMPDIR/<prefix>*`` dir and return its result detached from that
+    dir (collected into a local relation), so the dir is removed before
+    the caller sees the rows. Nothing is registered in the session
+    catalog."""
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as root:
+        out = build(ZoneStore(spark, root))
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -61,19 +75,20 @@ GROUP BY o_orderstatus
 # as one verified relation).
 # ---------------------------------------------------------------------------
 def storage_zone_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = tempfile.mkdtemp(prefix="zones_rt_")
-    store = ZoneStore(spark, root)
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-    store.promote(cust, "landing", "cust", fmt="csv")
-    landed = read_csv(spark, store.path("landing", "cust"), schema=cust.schema, header=True)
-    curated_path = store.promote(landed, "curated", "cust", fmt="parquet")
-    curated = spark.read.parquet(curated_path)
-    return curated.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.col("c_acctbal").cast("decimal(12,2)")).cast("double").alias("total_balance"),
-    )
+    def build(store: ZoneStore) -> DataFrame:
+        cust = read_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment", "c_acctbal"
+        )
+        store.promote(cust, "landing", "cust", fmt="csv")
+        landed = read_csv(spark, store.path("landing", "cust"), schema=cust.schema, header=True)
+        curated_path = store.promote(landed, "curated", "cust", fmt="parquet")
+        curated = spark.read.parquet(curated_path)
+        return curated.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum(F.col("c_acctbal").cast("decimal(12,2)")).cast("double").alias("total_balance"),
+        )
+
+    return _on_scratch_store(spark, "zones_rt_", build)
 
 
 register(
@@ -98,13 +113,9 @@ GROUP BY c_mktsegment
 # the totals. Nothing is registered in the session catalog.
 # ---------------------------------------------------------------------------
 def storage_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from cyrela_etl_spark.sources.txn import txn_append, txn_init, txn_read
 
-    root = tempfile.mkdtemp(prefix="zone_tbl_")
-    try:
-        store = ZoneStore(spark, root)
+    def build(store: ZoneStore) -> DataFrame:
         supp = read_table(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_nationkey", "s_acctbal"
         )
@@ -112,16 +123,14 @@ def storage_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_append(
             store, "curated", "supp", supp.filter(F.col("s_suppkey") % 2 == 1), read_version=v
         )
-        out = txn_read(store, "curated", "supp").groupBy("s_nationkey").agg(
+        return txn_read(store, "curated", "supp").groupBy("s_nationkey").agg(
             F.count(F.lit(1)).alias("n_suppliers"),
             F.sum(F.col("s_acctbal").cast("decimal(12,2)")).cast("double").alias("total_balance"),
             F.min("s_suppkey").alias("min_key"),
             F.max("s_suppkey").alias("max_key"),
         )
-        # detach from the temp-rooted snapshots before they are removed
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _on_scratch_store(spark, "zone_tbl_", build)
 
 
 register(
@@ -546,14 +555,10 @@ FROM binned GROUP BY 1, 2
 # arithmetic). Nothing is registered in the session catalog.
 # ---------------------------------------------------------------------------
 def storage_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from cyrela_etl_spark.sources.txn import txn_delete_rows, txn_init, txn_read
     from cyrela_etl_spark.sources.zones import snapshot_diff
 
-    root = tempfile.mkdtemp(prefix="zone_forget_")
-    try:
-        store = ZoneStore(spark, root)
+    def build(store: ZoneStore) -> DataFrame:
         ev = read_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
         v0 = txn_init(store, "curated", "ev", ev)
         forget = ev.filter(F.col("user_id") % 97 == 0).select("user_id").distinct()
@@ -575,7 +580,7 @@ def storage_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("user_id").cast("long").alias("n_users_forgotten"),
             )
         )
-        out = (
+        return (
             after.join(deleted, "event_type", "left")
             .crossJoin(F.broadcast(cdc_deleted))
             .select(
@@ -586,9 +591,8 @@ def storage_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_cdc_deleted_total",
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _on_scratch_store(spark, "zone_forget_", build)
 
 
 register(
@@ -1131,8 +1135,6 @@ GROUP BY o.o_orderstatus
 # snapshot, so it also exercises the chain reset.
 # ---------------------------------------------------------------------------
 def storage_txn_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from cyrela_etl_spark.sources.txn import (
         latest_version,
         txn_append,
@@ -1142,9 +1144,7 @@ def storage_txn_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_upsert,
     )
 
-    root = tempfile.mkdtemp(prefix="txn_acid_q_")
-    store = ZoneStore(spark=spark, root=root)
-    try:
+    def build(store: ZoneStore) -> DataFrame:
         orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1162,7 +1162,7 @@ def storage_txn_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
         forget = forget_src.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
         txn_delete_rows(store, "curated", "ord", forget, "o_orderkey")
         n_versions = latest_version(store, "curated", "ord")
-        out = (
+        return (
             txn_read(store, "curated", "ord")
             .groupBy("o_orderstatus")
             .agg(
@@ -1173,10 +1173,8 @@ def storage_txn_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("n_versions", F.lit(n_versions).cast("long"))
         )
-        # detach from the temp-rooted snapshot before it is removed
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    return _on_scratch_store(spark, "txn_acid_q_", build)
 
 
 register(

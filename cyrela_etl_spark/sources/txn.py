@@ -41,13 +41,11 @@ in which two racing writers could in principle both pass the probe —
 adequate for this single-JVM test harness, NOT a durability claim. On
 S3A neither holds (rename = copy+delete, no put-if-absent) — there, as
 for Delta itself, the version-file publish needs an external coordinator
-(S3 conditional PUT / a DynamoDB-style lock table). The publish step is
-therefore isolated behind the ``Publisher`` interface below:
-``RenamePublisher`` (default) is the rename spelling; ``LockFilePublisher``
-is the claim-record shape an external-coordinator publisher takes (one
-create-if-absent claim deciding the race, à la Delta's S3 LogStore). The
-module-level ``_publish`` remains the single documented swap seam and
-simply invokes the store's configured publisher.
+(S3 conditional PUT / a DynamoDB-style lock table), and this module does
+not ship one. Every commit publishes through the one ``_publish`` below
+(the rename spelling of put-if-absent), reached only from the one
+write-and-publish step ``_write_and_publish``; an object-store port
+replaces that one function.
 
 Reference provenance: the zone lifecycle being protected is the
 reference's processing→curated promotion (dags/s3-etl-wallet-csv.py:
@@ -61,6 +59,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -167,98 +166,65 @@ def txn_read(store: ZoneStore, zone: str, key: str, version: int | None = None) 
     return store.spark.read.parquet(*_version_dirs(m))
 
 
-class RenamePublisher:
-    """Default publish primitive: full temp write, then a rename that
-    fails if the version file already exists (put-if-absent). Correct as
-    an atomic claim on HDFS; on the local filesystem the dest-exists
-    failure is check-then-rename (see module docstring) — adequate for
-    the single-JVM harness."""
-
-    def publish(self, store: ZoneStore, zone: str, key: str, version: int, manifest: dict) -> bool:
-        fs, _ = store._fs()
-        tdir = _txn_dir(store, zone, key)
-        fs.mkdirs(_jpath(store, tdir))
-        tmp = f"{tdir}/_tmp-{uuid.uuid4().hex}.json"
-        _write_bytes(store, tmp, json.dumps(manifest, sort_keys=True).encode("utf-8"))
-        won = bool(
-            fs.rename(_jpath(store, tmp), _jpath(store, _manifest_path(store, zone, key, version)))
-        )
-        if not won:
-            fs.delete(_jpath(store, tmp), False)
-        return won
-
-
-class LockFilePublisher:
-    """The external-coordinator shape: the race is decided by a single
-    create-if-absent CLAIM record (``<version>.lock``, holding the
-    writer's id), and only the claim winner writes the manifest — the
-    structure a conditional-PUT (S3 If-None-Match) or DynamoDB lock-table
-    publisher has, with the claim primitive being the one call the store
-    must make atomic. Liveness: a writer crashing between claim and
-    manifest write leaves the version claimed-but-unpublished, which
-    would wedge the log (``latest_version`` ignores manifest-less claims,
-    so every successor retries the same version) — answered the way
-    Delta's DynamoDB LogStore answers it: a claim with no manifest older
-    than ``stale_claim_ttl_sec`` is broken and re-taken. The TTL must
-    exceed any real writer's claim→manifest publish latency (it covers
-    two metadata writes, not the snapshot write, so seconds — the default
-    is generous). Lock files are swept by ``vacuum`` with their
-    manifests."""
-
-    def __init__(self, stale_claim_ttl_sec: float = 900.0):
-        self.stale_claim_ttl_sec = stale_claim_ttl_sec
-
-    def _claim(self, fs, lock) -> bool:
-        try:
-            out = fs.create(lock, False)  # the atomic claim primitive
-        except Exception:
-            return False  # FileAlreadyExistsException: claim lost
-        try:
-            out.write(json.dumps({"writer": uuid.uuid4().hex}).encode("utf-8"))
-        finally:
-            out.close()
-        return True
-
-    def publish(self, store: ZoneStore, zone: str, key: str, version: int, manifest: dict) -> bool:
-        fs, _ = store._fs()
-        tdir = _txn_dir(store, zone, key)
-        fs.mkdirs(_jpath(store, tdir))
-        lock = _jpath(store, f"{tdir}/{version:020d}.lock")
-        mpath = _jpath(store, _manifest_path(store, zone, key, version))
-        if not self._claim(fs, lock):
-            if fs.exists(mpath):
-                return False  # fairly lost: the version is published
-            # claimed but unpublished: break the claim iff it is stale
-            age_sec = (time.time() * 1000 - fs.getFileStatus(lock).getModificationTime()) / 1000
-            if age_sec <= self.stale_claim_ttl_sec:
-                return False  # live contender mid-publish
-            fs.delete(lock, False)
-            if not self._claim(fs, lock):
-                return False  # someone else re-took the broken claim first
-        # claim held: nobody else will write this manifest; temp+rename so
-        # readers still never observe partial JSON
-        tmp = f"{tdir}/_tmp-{uuid.uuid4().hex}.json"
-        _write_bytes(store, tmp, json.dumps(manifest, sort_keys=True).encode("utf-8"))
-        if not fs.rename(_jpath(store, tmp), mpath):
-            raise IOError(f"manifest rename failed under a held claim: {tdir} v{version}")
-        return True
-
-
-_DEFAULT_PUBLISHER = RenamePublisher()
-
-
-def _publisher(store: ZoneStore):
-    """The store's configured publisher (a ``publisher`` attribute set on
-    the ZoneStore, e.g. ``store.publisher = LockFilePublisher()``), else
-    the module default. THIS indirection is the S3A swap seam: one
-    attribute swaps every commit path to a conditional-PUT publisher."""
-    return getattr(store, "publisher", None) or _DEFAULT_PUBLISHER
-
-
 def _publish(store: ZoneStore, zone: str, key: str, version: int, manifest: dict) -> bool:
-    """Publish manifest ``version`` via the store's publisher. Returns
-    False when a concurrent writer won the version."""
-    return _publisher(store).publish(store, zone, key, version, manifest)
+    """Put-if-absent of manifest ``version``: full temp write, then a
+    rename that fails if the version file already exists. Returns False
+    when a concurrent writer won the version. Correct as an atomic claim
+    on HDFS; on the local filesystem the dest-exists failure is
+    check-then-rename (see module docstring) — adequate for the
+    single-JVM harness."""
+    fs, _ = store._fs()
+    tdir = _txn_dir(store, zone, key)
+    fs.mkdirs(_jpath(store, tdir))
+    tmp = f"{tdir}/_tmp-{uuid.uuid4().hex}.json"
+    _write_bytes(store, tmp, json.dumps(manifest, sort_keys=True).encode("utf-8"))
+    won = bool(
+        fs.rename(_jpath(store, tmp), _jpath(store, _manifest_path(store, zone, key, version)))
+    )
+    if not won:
+        fs.delete(_jpath(store, tmp), False)
+    return won
+
+
+def _write_and_publish(
+    store: ZoneStore,
+    zone: str,
+    key: str,
+    df: DataFrame,
+    read_version: int,
+    op: str,
+    schema_json: str,
+    parent_dirs: list[str] | None = None,
+) -> int:
+    """The one commit step: write ``df`` as version ``read_version + 1``'s
+    data directory (distributed; a crash leaves only an orphaned
+    directory, never a half-committed table), then publish its manifest.
+    ``parent_dirs`` makes it an append commit whose ``snapshots`` list is
+    the parent's dirs plus the new one; without it the directory is a
+    full snapshot. On a lost publish the directory is deleted and
+    ``TxnConflictError`` raised. Returns the committed version."""
+    target = read_version + 1
+    data_dir = store.path(zone, f"{key}/_snapshots/v{target:020d}-{uuid.uuid4().hex[:8]}")
+    df.write.mode("overwrite").parquet(data_dir)
+    manifest = {
+        "version": target,
+        "parent": read_version,
+        "snapshot": data_dir,
+        "op": op,
+        "committed_at": time.time(),
+        # Delta's metaData.schemaString: the table schema rides in the
+        # manifest so append-time schema-on-write is a pure metadata
+        # compare (no parquet footer read per append).
+        "schema_json": schema_json,
+    }
+    if parent_dirs is not None:
+        manifest["snapshots"] = parent_dirs + [data_dir]
+    if not _publish(store, zone, key, target, manifest):
+        # lost the race: drop the orphan directory, surface the conflict
+        fs, _ = store._fs()
+        fs.delete(_jpath(store, data_dir), True)
+        raise TxnConflictError(store.path(zone, key), target)
+    return target
 
 
 def _fresh_view_check(store: ZoneStore, zone: str, key: str, read_version: int) -> None:
@@ -272,7 +238,7 @@ def _fresh_view_check(store: ZoneStore, zone: str, key: str, read_version: int) 
     `tools/scale_curve.py txn_vacuum`: mean append 212 ms at N=100 vs
     379 ms at N=1000; on an object store this is a LIST per commit vs
     two HEADs). Correctness: manifests are contiguous from the vacuum
-    floor to latest (vacuum removes a version prefix, and the publisher's
+    floor to latest (vacuum removes a version prefix, and ``_publish``'s
     put-if-absent allocates versions densely), so for ``read_version >= 1``
     the view is the head iff manifest(read_version+1) is absent AND —
     catching both a vacuumed-away view and a caller inventing a future
@@ -311,32 +277,13 @@ def txn_commit(
 ) -> int:
     """Commit ``df`` as the next version after ``read_version`` (the
     version this transaction READ its inputs at — optimistic concurrency's
-    conflict witness). The snapshot is written first (distributed, crash
-    leaves only an orphaned directory, never a half-committed table), then
-    the manifest publish decides the race. Raises ``TxnConflictError`` if
-    any other writer committed after ``read_version``."""
-    target = read_version + 1
+    conflict witness). The snapshot is written first, then the manifest
+    publish decides the race (``_write_and_publish``). Raises
+    ``TxnConflictError`` if any other writer committed after
+    ``read_version``."""
     # cheap pre-check: racing for an already-taken version always loses
     _fresh_view_check(store, zone, key, read_version)
-    snapshot = store.path(zone, f"{key}/_snapshots/v{target:020d}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(snapshot)
-    manifest = {
-        "version": target,
-        "parent": read_version,
-        "snapshot": snapshot,
-        "op": op,
-        "committed_at": time.time(),
-        # Delta's metaData.schemaString: the table schema rides in the
-        # manifest so append-time schema-on-write is a pure metadata
-        # compare (no parquet footer read per append).
-        "schema_json": df.schema.json(),
-    }
-    if not _publish(store, zone, key, target, manifest):
-        # lost the race: drop the orphan snapshot, surface the conflict
-        fs, _ = store._fs()
-        fs.delete(_jpath(store, snapshot), True)
-        raise TxnConflictError(store.path(zone, key), target)
-    return target
+    return _write_and_publish(store, zone, key, df, read_version, op, df.schema.json())
 
 
 def _strip_nullability(dt):
@@ -421,7 +368,6 @@ def txn_append(
         raise ValueError("txn_append requires an initialized table (read_version >= 1)")
     if auto_compact_every is not None and auto_compact_every < 1:
         raise ValueError("auto_compact_every must be >= 1")
-    target = read_version + 1
     _fresh_view_check(store, zone, key, read_version)
     parent = read_manifest(store, zone, key, read_version)
     if parent.get("schema_json"):
@@ -445,24 +391,14 @@ def txn_append(
             f"missing columns {missing}, extra columns {extra}, retyped {retyped}; "
             "appends are schema-on-write (align the batch or use a full-snapshot commit)"
         )
-    delta = store.path(zone, f"{key}/_snapshots/v{target:020d}-{uuid.uuid4().hex[:8]}")
-    df.select(*[f.name for f in table_schema.fields]).write.mode("overwrite").parquet(delta)
-    manifest = {
-        "version": target,
-        "parent": read_version,
-        "snapshot": delta,
-        "snapshots": _version_dirs(parent) + [delta],
-        "op": "append",
-        "committed_at": time.time(),
-        # appends never change the table schema; carry it forward so the
-        # next append's check stays metadata-only
-        "schema_json": table_schema.json(),
-    }
-    if not _publish(store, zone, key, target, manifest):
-        fs, _ = store._fs()
-        fs.delete(_jpath(store, delta), True)
-        raise TxnConflictError(store.path(zone, key), target)
-    chain_len = len(manifest["snapshots"])
+    parent_dirs = _version_dirs(parent)
+    delta = df.select(*[f.name for f in table_schema.fields])
+    # appends never change the table schema; carry it forward so the
+    # next append's check stays metadata-only
+    target = _write_and_publish(
+        store, zone, key, delta, read_version, "append", table_schema.json(), parent_dirs
+    )
+    chain_len = len(parent_dirs) + 1
     if auto_compact_every is not None:
         if chain_len > auto_compact_every:
             try:
@@ -510,20 +446,35 @@ def txn_append(
 _CHAIN_WARN_THRESHOLD = 256
 
 
+def _commit_with_retry(
+    store: ZoneStore,
+    zone: str,
+    key: str,
+    derive: Callable[[DataFrame], DataFrame],
+    op: str,
+    max_retries: int,
+) -> int:
+    """The one optimistic retry loop: read the latest version, commit
+    ``derive(current)`` against it, and on a conflict RE-READ the
+    winner's version and derive again — so no concurrent change is lost.
+    Raises ``TxnConflictError`` after ``max_retries`` lost races."""
+    for _ in range(max_retries):
+        v = latest_version(store, zone, key)
+        new = derive(txn_read(store, zone, key, v))
+        try:
+            return txn_commit(store, zone, key, new, read_version=v, op=op)
+        except TxnConflictError:
+            continue
+    raise TxnConflictError(store.path(zone, key), latest_version(store, zone, key) + 1)
+
+
 def txn_compact(store: ZoneStore, zone: str, key: str, max_retries: int = 10) -> int:
     """Rewrite the latest version's append chain as one full snapshot —
     the checkpoint that bounds chain length (and read path-list size)
     after a run of appends. A no-op-shaped commit: the data is unchanged,
     only the layout; concurrent writers serialize through the version log
     as usual."""
-    for _ in range(max_retries):
-        v = latest_version(store, zone, key)
-        current = txn_read(store, zone, key, v)
-        try:
-            return txn_commit(store, zone, key, current, read_version=v, op="compact")
-        except TxnConflictError:
-            continue
-    raise TxnConflictError(store.path(zone, key), latest_version(store, zone, key) + 1)
+    return _commit_with_retry(store, zone, key, lambda current: current, "compact", max_retries)
 
 
 def txn_upsert(
@@ -563,16 +514,12 @@ def txn_upsert(
             f"(e.g. {merge_key}={dup[0][0]!r} appears {dup[0]['n']} times); "
             "deduplicate before txn_upsert"
         )
-    for _ in range(max_retries):
-        v = latest_version(store, zone, key)
-        current = txn_read(store, zone, key, v)
+
+    def merge(current: DataFrame) -> DataFrame:
         keep = current.join(updates.select(merge_key), merge_key, "left_anti")
-        merged = updates.select(*current.columns).unionByName(keep)
-        try:
-            return txn_commit(store, zone, key, merged, read_version=v, op="upsert")
-        except TxnConflictError:
-            continue
-    raise TxnConflictError(store.path(zone, key), latest_version(store, zone, key) + 1)
+        return updates.select(*current.columns).unionByName(keep)
+
+    return _commit_with_retry(store, zone, key, merge, "upsert", max_retries)
 
 
 def txn_delete_rows(
@@ -590,15 +537,11 @@ def txn_delete_rows(
     version log instead of clobbering each other. The forgotten rows
     survive in older versions until ``vacuum`` drops them: a COMPLETE
     forget is this commit plus ``vacuum(keep_last=1, min_age_sec=0)``."""
-    for _ in range(max_retries):
-        v = latest_version(store, zone, key)
-        current = txn_read(store, zone, key, v)
-        kept = current.join(forget_keys.select(merge_key).distinct(), merge_key, "left_anti")
-        try:
-            return txn_commit(store, zone, key, kept, read_version=v, op="delete")
-        except TxnConflictError:
-            continue
-    raise TxnConflictError(store.path(zone, key), latest_version(store, zone, key) + 1)
+
+    def forget(current: DataFrame) -> DataFrame:
+        return current.join(forget_keys.select(merge_key).distinct(), merge_key, "left_anti")
+
+    return _commit_with_retry(store, zone, key, forget, "delete", max_retries)
 
 
 # Production default for vacuum's in-flight-writer guard: Delta Lake's
@@ -653,8 +596,8 @@ def vacuum(
     reference data directories first written by a now-vacuumable version
     (an old full base, or earlier deltas in the chain). Those directories
     are kept as long as ANY retained manifest lists them; only the
-    manifest (and lock record) of the vacuumed version is removed, so
-    time travel to it dies while every retained version stays readable.
+    manifest of the vacuumed version is removed, so time travel to it
+    dies while every retained version stays readable.
 
     **No vacuumable manifest is ever read** (VERDICT r13 item 4): every
     manifest is self-contained (its ``snapshots`` list is the full dir
@@ -669,8 +612,8 @@ def vacuum(
     two listings plus one delete per removed object. Matching Delta's
     vacuum, this is list-then-delete:
 
-    - manifest log listing: every ``<v>.json`` / ``<v>.lock`` at
-      ``v <= latest - keep_last`` is removed (manifests FIRST, so a
+    - manifest log listing: every ``<v>.json`` at ``v <= latest -
+      keep_last`` is removed (manifests FIRST, so a
       racing time-travel read of a vacuumed version dies cleanly with
       ``FileNotFoundError`` rather than a mid-scan missing-file error;
       a crash mid-vacuum leaves orphan data dirs the next vacuum sweeps).
@@ -742,11 +685,10 @@ def vacuum(
     if fs.exists(tdir):
         for st in fs.listStatus(tdir):
             name = st.getPath().getName()
-            stem, dot, ext = name.partition(".")
-            if dot and ext in ("json", "lock") and stem.isdigit() and int(stem) <= floor:
+            stem = name.removesuffix(".json")
+            if name.endswith(".json") and stem.isdigit() and int(stem) <= floor:
                 fs.delete(st.getPath(), False)
-                if ext == "json":
-                    removed.append(int(stem))
+                removed.append(int(stem))
     swept: list[str] = []
     spared: list[str] = []
     sdir = _jpath(store, store.path(zone, f"{key}/_snapshots"))

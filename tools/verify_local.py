@@ -21,7 +21,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from cyrela_etl_spark.schemas import TESTDATA_TABLES  # noqa: E402
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -98,7 +98,7 @@ def main() -> int:
         spark = get_spark(app_name="verify-local")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     n_ok = n_fail = 0
